@@ -1,19 +1,24 @@
-"""Arrow-batched extraction kernel — the `mapInPandas` UDTF shape
-(SURVEY.md §2.9 #1).
+"""Arrow-batched extraction kernel — the UDTF shape (SURVEY.md §2.9 #1).
 
 One row in → one row out with nested results; vectorized transport
 (Arrow), scalar byte-exact semantics (Python str ops, KERNEL_SPEC.md).
 The html column travels as BinaryType end-to-end so byte-identity is
 never at the mercy of UTF-8 normalization (SURVEY.md §7 hard part #1).
 
-Per-batch counters are accumulated locally and attached to each output
-batch (partition lineage goes through the audit path, plans/audit.py).
+`kernel_batch` is the one per-document loop: both the mapInArrow plan
+(plans/extract.py) and the SQL UDF run it. It yields packed records —
+one tuple per document in RESULT_SCHEMA order, spans as kind codes
+plus int32 columns instead of one dict per span — and `record_arrays`
+turns a batch of them into Arrow arrays column by column.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
+import time
+from array import array
+from collections.abc import Iterable
+from functools import cache
+from itertools import accumulate
 
 from pyspark.sql.types import (
     ArrayType,
@@ -28,9 +33,6 @@ from pyspark.sql.types import (
 
 from .model import parse_document
 from .tablepipe import page_tables
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 TABLE_TYPE = StructType([
     StructField("page", IntegerType()),
@@ -66,54 +68,77 @@ RESULT_SCHEMA = StructType([
     StructField("error", StringType()),
 ])
 
+_RESULT_COLS = tuple(f.name for f in RESULT_SCHEMA.fields)
+_SPANS = _RESULT_COLS.index("spans")
 
-def extract_one(url: str, html: bytes) -> dict:
-    """Full per-document extraction (engine implementation)."""
+# Span kinds, indexed by the one-byte codes of a packed record's spans.
+SPAN_KINDS = ("content", "boilerplate", "table_cell")
+_KIND_CODE = {k: i for i, k in enumerate(SPAN_KINDS)}
+_CONTENT = _KIND_CODE["content"]
+# (kind codes, pages, starts, ends) of a document without spans; shared
+# like every packed record, so never mutated
+_NO_SPANS = (b"", array("i"), array("i"), array("i"))
+
+
+def extract_record(url: str, html: bytes) -> tuple:
+    """Full per-document extraction (engine implementation) as a packed
+    record: one tuple in RESULT_SCHEMA order whose `spans` field is
+    (kind codes as bytes indexing SPAN_KINDS, then array('i') columns
+    for page, start and end)."""
     m = parse_document(html if html is not None else b"")
     tables: list[dict] = []
     for page in sorted(m.tables):
         slot = m.tables[page]
         tables.extend(page_tables(page, slot["lattice"], slot["stream"]))
-    spans = [
-        {"kind": k, "page": p, "start": s, "end": e}
-        for (k, p, s, e) in m.spans
+    if m.spans:
+        kinds, pages, starts, ends = zip(*m.spans)
+        spans = (bytes(map(_KIND_CODE.__getitem__, kinds)),
+                 array("i", pages), array("i", starts), array("i", ends))
+    else:
+        spans = _NO_SPANS
+    return (url, m.max_page, "\n\n".join(m.content).encode("utf-8"),
+            tables, spans, len(tables), spans[0].count(_CONTENT), None)
+
+
+def record_dict(rec: tuple) -> dict:
+    """A packed record as the nested dict refkernel returns (one dict
+    per span)."""
+    out = dict(zip(_RESULT_COLS, rec))
+    kinds, pages, starts, ends = rec[_SPANS]
+    out["spans"] = [
+        {"kind": SPAN_KINDS[k], "page": p, "start": s, "end": e}
+        for k, p, s, e in zip(kinds, pages, starts, ends)
     ]
-    n_content = sum(1 for s in m.spans if s[0] == "content")
-    return {
-        "url": url,
-        "n_pages": m.max_page,
-        "extracted_text": "\n\n".join(m.content).encode("utf-8"),
-        "tables": tables,
-        "spans": spans,
-        "n_tables": len(tables),
-        "n_content_spans": n_content,
-        "error": None,
-    }
+    return out
 
 
-# html-bytes → result memo (everything except `url`, which is a pure
-# pass-through key). Crawl corpora carry exact-duplicate bodies under
-# different urls (6.9% on the synthetic bench corpus; 20-40% on real
-# crawls), and the kernel is a pure function of the bytes, so repeats
-# skip the parse entirely. Per worker process (reused across Arrow
-# batches); mega-docs excluded to bound entry size. Bounded BOTH by
-# entry count and by an input-bytes budget (result size tracks input
-# size) — the count cap alone admitted a ~256 MiB/worker worst case
-# (1024 x 256 KiB bodies), too much times 1000 executors. Cached
-# values are shared read-only references — nothing downstream mutates
-# a result row after extract_one.
-_RESULT_MEMO: dict[bytes, dict] = {}
+def extract_one(url: str, html: bytes) -> dict:
+    """extract_record's dict view — what the refkernel parity suites
+    compare. Production runs kernel_batch, which never builds it."""
+    return record_dict(extract_record(url, html))
+
+
+# html-bytes → packed-record memo (the record's url is rewritten on a
+# hit: url is a pure pass-through key). Crawl corpora carry
+# exact-duplicate bodies under different urls (6.9% on the synthetic
+# bench corpus; 20-40% on real crawls), and the kernel is a pure
+# function of the bytes, so repeats skip the parse entirely. Per
+# worker process (reused across Arrow batches); mega-docs excluded to
+# bound entry size. Bounded BOTH by entry count and by an input-bytes
+# budget — a packed record is the extracted text, the tables and 13
+# bytes per span (no per-span objects), all of which grow with the
+# body, so the key budget bounds the values too. The count cap alone
+# admitted a ~256 MiB/worker worst case (1024 x 256 KiB bodies), too
+# much times 1000 executors. Records are shared read-only — nothing
+# downstream mutates one after kernel_batch.
+_RESULT_MEMO: dict[bytes, tuple] = {}
 _RESULT_MEMO_CAP = 1024
 _RESULT_MEMO_MAX_DOC = 1 << 18       # don't cache >256 KiB bodies
 _RESULT_MEMO_MAX_BYTES = 32 << 20    # FIFO-evict past 32 MiB of keys
 _memo_bytes = 0
 
 
-def memo_get(key: bytes) -> dict | None:
-    return _RESULT_MEMO.get(key)
-
-
-def memo_put(key: bytes, row: dict) -> None:
+def memo_put(key: bytes, rec: tuple) -> None:
     """FIFO-bounded insert under both caps; oversized bodies skipped."""
     global _memo_bytes
     if len(key) > _RESULT_MEMO_MAX_DOC:
@@ -124,35 +149,81 @@ def memo_put(key: bytes, row: dict) -> None:
         oldest = next(iter(_RESULT_MEMO))
         del _RESULT_MEMO[oldest]
         _memo_bytes -= len(oldest)
-    _RESULT_MEMO[key] = row
+    _RESULT_MEMO[key] = rec
     _memo_bytes += len(key)
 
 
-def extract_batches(
-    batches: Iterator["pd.DataFrame"],
-) -> Iterator["pd.DataFrame"]:
-    """mapInPandas entry: (url, html[, ...]) batches → RESULT_SCHEMA."""
-    import pandas as pd
+def kernel_batch(
+    urls: Iterable[str], htmls: Iterable[bytes | None],
+) -> tuple[list[tuple], list[int], list[int]]:
+    """The per-document loop: (urls, htmls) → (packed records, input
+    bytes per doc, µs per doc). Duplicate bodies come from the memo
+    under their own url; a doc that raises yields its error record
+    instead of failing the batch."""
+    records: list[tuple] = []
+    bytes_in: list[int] = []
+    kernel_us: list[int] = []
+    clock = time.perf_counter_ns
+    for url, html in zip(urls, htmls):
+        t0 = clock()
+        key = html if html is not None else b""
+        rec = _RESULT_MEMO.get(key)
+        if rec is None:
+            try:
+                rec = extract_record(url, html)
+            except Exception as exc:  # a bad doc never kills a task
+                rec = (url, 0, b"", [], _NO_SPANS, 0, 0,
+                       f"{type(exc).__name__}: {exc}")
+            memo_put(key, rec)
+        elif rec[0] != url:  # memo hit under a different url
+            rec = (url,) + rec[1:]
+        records.append(rec)
+        bytes_in.append(len(key))
+        kernel_us.append((clock() - t0) // 1000)
+    return records, bytes_in, kernel_us
 
-    cols = [f.name for f in RESULT_SCHEMA.fields]
-    body_cols = [c for c in cols if c != "url"]
-    for pdf in batches:
-        out: dict[str, list] = {c: [] for c in cols}
-        for url, html in zip(pdf["url"].values, pdf["html"].values):
-            key = bytes(html) if html is not None else b""
-            row = memo_get(key)
-            if row is None:
-                try:
-                    row = extract_one(url, html)
-                except Exception as exc:  # never fail the task on one doc
-                    row = {
-                        "url": url, "n_pages": 0, "extracted_text": b"",
-                        "tables": [], "spans": [], "n_tables": 0,
-                        "n_content_spans": 0,
-                        "error": f"{type(exc).__name__}: {exc}",
-                    }
-                memo_put(key, row)
-            out["url"].append(url)
-            for c in body_cols:
-                out[c].append(row[c])
-        yield pd.DataFrame(out, columns=cols)
+
+@cache
+def _arrow_result_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(RESULT_SCHEMA)
+
+
+def _spans_array(spans: tuple, list_type):
+    """ListArray<SPAN_TYPE> from packed spans: the four columns of every
+    doc are concatenated into one buffer each; kind is a take of the
+    codes on SPAN_KINDS."""
+    import pyarrow as pa
+
+    i32 = pa.int32()
+    offsets = array("i", accumulate((len(s[0]) for s in spans), initial=0))
+    n = offsets[-1]
+
+    def column(j: int, typ):
+        buf = pa.py_buffer(b"".join(s[j] for s in spans))
+        return pa.Array.from_buffers(typ, n, [None, buf])
+
+    kind = pa.array(SPAN_KINDS, pa.string()).take(column(0, pa.uint8()))
+    values = pa.StructArray.from_arrays(
+        [kind, column(1, i32), column(2, i32), column(3, i32)],
+        fields=list(list_type.value_type))
+    return pa.ListArray.from_arrays(
+        pa.Array.from_buffers(i32, len(spans) + 1,
+                              [None, pa.py_buffer(offsets)]),
+        values, type=list_type)
+
+
+def record_arrays(records: list[tuple]) -> list:
+    """Packed records → one Arrow array per RESULT_SCHEMA column, in
+    order; the same arrays pa.RecordBatch.from_pylist builds from the
+    records' dict views."""
+    import pyarrow as pa
+
+    schema = _arrow_result_schema()
+    columns = zip(*records) if records else [()] * len(schema)
+    return [
+        _spans_array(col, field.type) if i == _SPANS
+        else pa.array(col, field.type)
+        for i, (field, col) in enumerate(zip(schema, columns))
+    ]

@@ -257,10 +257,15 @@ def capped_bucket_pairs(df: DataFrame, key: str, id_col: str,
     bytes-based coalescing would squeeze these CPU-bound, small-byte
     stages onto a couple of tasks)."""
     spark = df.sparkSession
-    n_parts = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "0") or 0),
-    )
+    cores = spark.sparkContext.defaultParallelism
+    try:
+        # the effective value: get() without a fallback returns the
+        # default (200) when the key is unset, where a "0" fallback is
+        # rejected by Spark's own validation
+        shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:  # non-integer, e.g. "auto" on some platforms
+        shuffle = cores
+    n_parts = max(cores, shuffle)
     keyed = df.select(F.col(key).alias("key"),
                       F.col(id_col).alias("_id")).repartition(
         n_parts, F.col("key"))
@@ -369,10 +374,11 @@ def dd_minhash_lsh(spark, sf):
     candidates. Buckets larger than LSH_BUCKET_CAP are dropped (a viral
     boilerplate signature would otherwise emit |bucket|² pairs); see
     capped_bucket_pairs for the plan shape. r8: band signatures come
-    from the codegen'd md5 + min_by hash-aggregate form ([_band_keys]
-    — no SortAggregate), the bucket pipeline is evaluated once, and
-    the documents scan is spread across cores: 9.5s -> ~2.5s at
-    sf1.0."""
+    from a codegen'd md5 projection and a plain min per band
+    ([_band_keys] — still a SortAggregate, string minima have no
+    mutable buffer, but sorting only within doc_id-spread partitions),
+    the bucket pipeline is evaluated once, and the documents scan is
+    spread across cores: 9.5s -> ~2.5s at sf1.0."""
     sigs = _band_keys(_shingles(spark, sf))
     return (capped_bucket_pairs(sigs, "key", "doc_id", LSH_BUCKET_CAP)
             .select("doc_a", "doc_b").distinct())

@@ -26,12 +26,11 @@ Scale notes (SURVEY.md §4, 100 TB design):
 
 from __future__ import annotations
 
-import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from ..kernel.batch import RESULT_SCHEMA, extract_one
+from ..kernel.batch import RESULT_SCHEMA
 
 KERNEL_SCHEMA = StructType(
     RESULT_SCHEMA.fields
@@ -52,59 +51,32 @@ def _make_kernel(carry: tuple[str, ...]):
     Arrow arrays, zero per-row Python) — lets downstream rollups
     group on input attributes (e.g. lang) with NO post-kernel join.
 
-    Round 6: switched from mapInPandas to mapInArrow and adopted the
-    kernel/batch dup-body memo on this surface too. The output rows
-    are deeply nested (tables/cells/metadata maps); building the
-    output RecordBatch with pa.RecordBatch.from_pylist skips the
-    pandas block-manager hop entirely (measured ~2x on the conversion
-    itself, 1.1-1.2x on the whole extraction job with the memo at the
-    bench corpus's 6.9% duplicate-body rate; results verified
-    row-identical vs the pandas path)."""
+    Each input batch goes through kernel_batch, the loop the SQL UDF
+    runs too (dup-body memo, per-doc error records). Its packed
+    records become the output batch column by column (record_arrays):
+    pa.array per scalar/tables column, and one ListArray for spans
+    built from concatenated kind-code and int32 buffers — no per-span
+    dict and no row-wise from_pylist, which is what held each Python
+    worker's peak memory up."""
 
     def _kernel(batches):
         import pyarrow as pa
         from pyspark import TaskContext
-        from pyspark.sql.pandas.types import to_arrow_schema
 
-        from ..kernel.batch import memo_get, memo_put
+        from ..kernel.batch import kernel_batch, record_arrays
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
-        pa_result = to_arrow_schema(RESULT_SCHEMA)
         names = (_RESULT_COLS
                  + ["partition_id", "bytes_in", "kernel_us"]
                  + list(carry))
         for rb in batches:
             idx = rb.schema.get_field_index
-            urls = rb.column(idx("url")).to_pylist()
-            htmls = rb.column(idx("html")).to_pylist()
-            results: list[dict] = []
-            bytes_in: list[int] = []
-            kernel_us: list[int] = []
-            for url, html in zip(urls, htmls):
-                t0 = time.perf_counter_ns()
-                key = html if html is not None else b""
-                res = memo_get(key)
-                if res is None:
-                    try:
-                        res = extract_one(url, html)
-                    except Exception as exc:  # a bad doc never kills a task
-                        res = {
-                            "url": url, "n_pages": 0,
-                            "extracted_text": b"", "tables": [],
-                            "spans": [], "n_tables": 0,
-                            "n_content_spans": 0,
-                            "error": f"{type(exc).__name__}: {exc}",
-                        }
-                    memo_put(key, res)
-                if res["url"] != url:  # memo hit under a different url
-                    res = {**res, "url": url}
-                results.append(res)
-                bytes_in.append(len(html) if html is not None else 0)
-                kernel_us.append((time.perf_counter_ns() - t0) // 1000)
-            out = pa.RecordBatch.from_pylist(results, schema=pa_result)
-            arrays = list(out.columns) + [
-                pa.array([pid] * len(results), pa.int64()),
+            records, bytes_in, kernel_us = kernel_batch(
+                rb.column(idx("url")).to_pylist(),
+                rb.column(idx("html")).to_pylist())
+            arrays = record_arrays(records) + [
+                pa.array([pid] * len(records), pa.int64()),
                 pa.array(bytes_in, pa.int64()),
                 pa.array(kernel_us, pa.int64()),
             ] + [rb.column(idx(c)) for c in carry]
@@ -167,36 +139,27 @@ def register_extract_udf(spark: SparkSession, name: str = "extract_doc"):
     """Register the extraction kernel as a SQL-callable pandas UDF so
     pure-SQL users can run it:  SELECT url, extract_doc(html).* FROM
     pages.  Returns the scalar summary struct (pages, extracted bytes,
-    table/span counts, error) — Arrow-batched like the mapInPandas
-    path, same kernel, same memo; full nested results (tables/spans)
-    stay on run_extraction, which is the plan-level surface.
+    table/span counts, error) — Arrow-batched like the mapInArrow
+    path, same kernel_batch loop, same memo; full nested results
+    (tables/spans) stay on run_extraction, the plan-level surface.
 
     The UDF is html-only (url is a pass-through key the caller already
     has), so it composes with any FROM clause — joins, filters and
     column pruning all stay Catalyst-visible around it."""
+    from itertools import repeat
+
     import pandas as pd
 
-    from ..kernel.batch import extract_one
+    from ..kernel.batch import kernel_batch
+
+    udf_cols = ["n_pages", "extracted_text", "n_tables",
+                "n_content_spans", "error"]
+    picks = [_RESULT_COLS.index(c) for c in udf_cols]
 
     def _extract(html):
-        rows = []
-        for h in html.values:
-            try:
-                r = extract_one("", h)
-                rows.append({
-                    "n_pages": r["n_pages"],
-                    "extracted_text": r["extracted_text"],
-                    "n_tables": r["n_tables"],
-                    "n_content_spans": r["n_content_spans"],
-                    "error": None,
-                })
-            except Exception as exc:
-                rows.append({
-                    "n_pages": 0, "extracted_text": b"", "n_tables": 0,
-                    "n_content_spans": 0,
-                    "error": f"{type(exc).__name__}: {exc}",
-                })
-        return pd.DataFrame(rows)
+        records, _, _ = kernel_batch(repeat(""), html.values)
+        return pd.DataFrame([[r[i] for i in picks] for r in records],
+                            columns=udf_cols)
 
     # `from __future__ import annotations` stringifies inline hints
     # module-wide and pandas_udf can't resolve 'pd.Series' from module

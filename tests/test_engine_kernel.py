@@ -69,15 +69,34 @@ def test_engine_counters():
 
 
 def test_engine_error_isolation():
-    import pandas as pd
+    from pdf_extraction_api_spark.kernel.batch import kernel_batch
 
-    from pdf_extraction_api_spark.kernel.batch import extract_batches
+    recs, bytes_in, kernel_us = kernel_batch(
+        ["a", "b"], [None, b"<p>fine text long enough.</p>"])
+    assert [r[0] for r in recs] == ["a", "b"]
+    assert [r[-1] for r in recs] == [None, None]
+    assert bytes_in == [0, 29]
+    assert len(kernel_us) == 2 and min(kernel_us) >= 0
 
-    pdf = pd.DataFrame({"url": ["a", "b"],
-                        "html": [None, b"<p>fine text long enough.</p>"]})
-    out = pd.concat(list(extract_batches(iter([pdf]))))
-    assert list(out["url"]) == ["a", "b"]
-    assert out["error"].isna().all() or (out["error"] == None).all()  # noqa: E711
+
+def test_kernel_batch_error_record(monkeypatch):
+    """A doc whose extraction raises becomes an error record; the rest
+    of the batch is unaffected."""
+    from pdf_extraction_api_spark.kernel import batch as B
+
+    def boom(html):
+        raise ValueError("boom")
+
+    B._RESULT_MEMO.clear()
+    monkeypatch.setattr(B, "parse_document", boom)
+    try:
+        (rec,), _, _ = B.kernel_batch(["bad"], [b"<p>raises</p>"])
+    finally:
+        B._RESULT_MEMO.clear()
+    assert B.record_dict(rec) == {
+        "url": "bad", "n_pages": 0, "extracted_text": b"", "tables": [],
+        "spans": [], "n_tables": 0, "n_content_spans": 0,
+        "error": "ValueError: boom"}
 
 
 def test_never_on_lower_patterns_are_dead():
@@ -124,38 +143,28 @@ def test_split_whitespace_equals_regex_ws():
 def test_duplicate_bodies_memoized_with_correct_urls():
     """Exact-duplicate html under different urls: the per-worker memo
     must reuse the parsed body (same object identity for the nested
-    results) while every output row keeps ITS OWN url."""
-    import pandas as pd
-
+    results) while every output record keeps ITS OWN url."""
     from pdf_extraction_api_spark.kernel import batch as B
 
     B._RESULT_MEMO.clear()
     html = (b"<body><p>Shared body long enough to be content.</p>"
             b'<table border="1"><tr><th>a</th><th>b</th></tr>'
             b"<tr><td>1</td><td>2</td></tr></table></body>")
-    pdf = pd.DataFrame({"url": ["u1", "u2", "u3"],
-                        "html": [html, html, html]})
-    out = pd.concat(list(B.extract_batches(iter([pdf]))))
-    assert list(out["url"]) == ["u1", "u2", "u3"]
+    recs, _, _ = B.kernel_batch(["u1", "u2", "u3"], [html] * 3)
+    assert [r[0] for r in recs] == ["u1", "u2", "u3"]
     assert len(B._RESULT_MEMO) == 1  # one body parsed once
-    t0, t1, t2 = out["tables"]
-    assert t0 is t1 is t2  # memo hit: shared read-only reference
-    ref = extract_one("u2", html)
-    got = out.iloc[1]
-    assert bytes(got["extracted_text"]) == ref["extracted_text"]
-    assert got["n_tables"] == ref["n_tables"]
-    assert got["spans"] == ref["spans"]
+    r0, r1, r2 = recs
+    assert r0[3] is r1[3] is r2[3]  # memo hit: shared read-only tables
+    assert r0[4] is r1[4] is r2[4]  # ... and packed spans
+    assert B.record_dict(r1) == extract_one("u2", html)
 
 
 def test_memo_skips_mega_docs():
-    import pandas as pd
-
     from pdf_extraction_api_spark.kernel import batch as B
 
     B._RESULT_MEMO.clear()
     mega = b"<p>" + b"word " * (B._RESULT_MEMO_MAX_DOC // 5 + 10) + b"</p>"
-    pdf = pd.DataFrame({"url": ["m"], "html": [mega]})
-    pd.concat(list(B.extract_batches(iter([pdf]))))
+    B.kernel_batch(["m"], [mega])
     assert len(B._RESULT_MEMO) == 0
 
 
@@ -171,14 +180,75 @@ def test_memo_byte_budget_evicts_fifo():
     try:
         body = 200 << 10  # within the per-doc cap
         for i in range(300):  # 300 x 200 KiB >> 32 MiB budget
-            B.memo_put(i.to_bytes(4, "big") * (body // 4), {"url": i})
+            B.memo_put(i.to_bytes(4, "big") * (body // 4), (i,))
         assert B._memo_bytes <= B._RESULT_MEMO_MAX_BYTES
         assert len(B._RESULT_MEMO) < 300
         # exact accounting: recompute from scratch
         assert B._memo_bytes == sum(len(k) for k in B._RESULT_MEMO)
         # newest entries survive (FIFO evicts oldest)
-        assert any(v["url"] == 299 for v in B._RESULT_MEMO.values())
-        assert not any(v["url"] == 0 for v in B._RESULT_MEMO.values())
+        assert any(v[0] == 299 for v in B._RESULT_MEMO.values())
+        assert not any(v[0] == 0 for v in B._RESULT_MEMO.values())
     finally:
         B._RESULT_MEMO.clear()
         B._memo_bytes = 0
+
+
+def test_columnar_assembly_matches_from_pylist(monkeypatch):
+    """The mapInArrow kernel's column-wise output batch equals
+    pa.RecordBatch.from_pylist over extract_one's dict view, on the
+    golden corpus plus edge docs: an empty body, a None html, a doc
+    that raises, a memo hit under a different url, and a carry
+    column passed through unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdf_extraction_api_spark.kernel import batch as B
+    from pdf_extraction_api_spark.plans.extract import (
+        _RESULT_COLS,
+        _make_kernel,
+    )
+
+    real_parse = B.parse_document
+
+    def parse(html):
+        if html == b"<p>raise me</p>":
+            raise RuntimeError("injected")
+        return real_parse(html)
+
+    monkeypatch.setattr(B, "parse_document", parse)
+    rows = pq.read_table("tests/golden/pages_tiny.parquet").to_pylist()
+    docs = [(r["url"], r["html"]) for r in rows] + [
+        ("edge://empty", b""),
+        ("edge://none", None),
+        ("edge://raises", b"<p>raise me</p>"),
+        ("edge://dup", rows[3]["html"]),  # memo hit, different url
+    ]
+    urls = [u for u, _ in docs]
+    htmls = [h for _, h in docs]
+    lang = pa.array([f"l{i % 3}" for i in range(len(docs))])
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(urls), pa.array(htmls, pa.binary()), lang],
+        names=["url", "html", "lang"])
+
+    B._RESULT_MEMO.clear()
+    try:
+        (out,) = list(_make_kernel(("lang",))(iter([rb])))
+    finally:
+        B._RESULT_MEMO.clear()
+
+    expected = [extract_one(u, h) for u, h in docs[:-2]] + [
+        {"url": "edge://raises", "n_pages": 0, "extracted_text": b"",
+         "tables": [], "spans": [], "n_tables": 0, "n_content_spans": 0,
+         "error": "RuntimeError: injected"},
+        extract_one("edge://dup", rows[3]["html"]),
+    ]
+    schema = B._arrow_result_schema()
+    want = pa.RecordBatch.from_pylist(expected, schema=schema)
+    got = out.select(_RESULT_COLS)
+    got.validate(full=True)
+    assert got.schema.equals(schema)
+    assert got.equals(want)
+    assert out.column("lang").equals(lang)
+    assert out.column("bytes_in").to_pylist() == [
+        len(h) if h is not None else 0 for h in htmls]
+    assert set(out.column("partition_id").to_pylist()) == {-1}

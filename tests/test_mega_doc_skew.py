@@ -84,27 +84,22 @@ def test_memo_excludes_mega_docs():
     """Bodies over _RESULT_MEMO_MAX_DOC must never enter the result
     memo (a duplicate-rich corpus would otherwise pin CAP x mega
     bytes per worker process); small bodies still memoize."""
-    import pandas as pd
-
     from pdf_extraction_api_spark.kernel import batch as kb
 
     small = b"<p>tiny body for the memo</p>"
     big = _mega_html(kb._RESULT_MEMO_MAX_DOC + 1024, seed=3)
     assert len(big) > kb._RESULT_MEMO_MAX_DOC
     kb._RESULT_MEMO.clear()
-    pdf = pd.DataFrame({
-        "url": ["u1", "u2", "u3"],
-        "html": [small, big, big],  # big repeated: recompute, not cache
-    })
-    out = pd.concat(list(kb.extract_batches(iter([pdf]))))
-    assert len(out) == 3
-    assert out["error"].isna().all()
+    # big repeated: recompute, not cache
+    recs, _, _ = kb.kernel_batch(["u1", "u2", "u3"], [small, big, big])
+    assert len(recs) == 3
+    assert all(r[-1] is None for r in recs)
     assert small in kb._RESULT_MEMO
     assert big not in kb._RESULT_MEMO
     assert len(kb._RESULT_MEMO) == 1
     # the two big rows still agree (pure function, just not cached)
-    b1, b2 = out[out["url"] != "u1"]["extracted_text"].values
-    assert bytes(b1) == bytes(b2)
+    assert recs[1][2] == recs[2][2]
+    assert recs[1][2] is not recs[2][2]
 
 
 def test_salting_spreads_clustered_mega_docs(spark, tmp_path):

@@ -516,3 +516,39 @@ def test_r8_optimized_ops_parallelism_determinism(spark, registry):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert results["2"] == results["32"]
+
+
+def test_minhash_lsh_with_shuffle_partitions_unset(spark, registry):
+    """capped_bucket_pairs reads the effective shuffle-partition
+    count: with the key unset (Spark's default applies) dd_minhash_lsh
+    still builds, collects, and returns the same pairs."""
+    queries, _ = registry
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    want = sorted(map(tuple, queries["dd_minhash_lsh"](spark, SF).collect()))
+    try:
+        spark.conf.unset("spark.sql.shuffle.partitions")
+        got = sorted(map(tuple,
+                         queries["dd_minhash_lsh"](spark, SF).collect()))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert got == want
+
+
+def test_spread_fails_open_on_unreadable_footers(spark, tmp_path):
+    """spread() counts row groups from the parquet footers; when they
+    cannot be read it returns the input unchanged instead of asking
+    the scan for its partition count at plan time."""
+    from pdf_extraction_api_spark.operators.relational import spread
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("spread() never fires on one core")
+    ok_path, bad_path = str(tmp_path / "ok"), str(tmp_path / "bad")
+    for p in (ok_path, bad_path):
+        spark.range(100).coalesce(1).write.parquet(p)
+    ok = spark.read.parquet(ok_path)
+    assert spread(ok, "id") is not ok  # one row group < cores: fires
+    bad = spark.read.parquet(bad_path)
+    for f in bad.inputFiles():
+        with open(f.removeprefix("file:"), "wb") as fh:
+            fh.write(b"not a parquet file")
+    assert spread(bad, "id") is bad

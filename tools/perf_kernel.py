@@ -16,7 +16,7 @@ import time
 def main(reps: int = 8) -> None:
     import pyarrow.parquet as pq
 
-    from pdf_extraction_api_spark.kernel.batch import extract_one
+    from pdf_extraction_api_spark.kernel.batch import extract_record
     from pdf_extraction_api_spark.kernel.htmlscan import scan
     from pdf_extraction_api_spark.kernel.model import DocModel
 
@@ -40,7 +40,7 @@ def main(reps: int = 8) -> None:
 
     nm = Noop()
     for r in rows:  # warm
-        extract_one(r["url"], r["html"])
+        extract_record(r["url"], r["html"])
 
     # process_time is steal-immune (this host's vCPU steal makes
     # wall-clock vary ±40% run to run); wall-clock is reported too.
@@ -72,7 +72,7 @@ def main(reps: int = 8) -> None:
             # corpus of unique documents (intra-doc repeats still hit)
             tablepipe._CLS_CACHE.clear()
             for r in rows:
-                extract_one(r["url"], r["html"])
+                extract_record(r["url"], r["html"])
         best = min(best, time.process_time() - t0)
 
     n = len(rows) * reps
