@@ -1,13 +1,15 @@
-"""Benchmark runner (driver contract + scaling mode).
+"""Benchmark runner (driver contract, ad-hoc query timer, scaling mode).
 
-Default: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric", "value" (total sec), "unit", "queries" (per-query
-sec), "sf", ...extras}.
+Default: times the extraction job (extract_corpus) and the headline
+queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric", "value"
+(total sec), "unit", "queries" (per-query sec), "sf", ...extras}.
 
     python bench.py
-    python bench.py --scaling   # local[8] vs local[32] throughput +
-                                # efficiency → BENCH/BASELINE.md
+    python bench.py --only ann_ivf_kmeans dd_semdedup   # any registry names
+    python bench.py --only w3_topk --explain plans/x    # + plans/x/w3_topk.txt
+    python bench.py --scaling   # N vs 4N throughput + efficiency
+                                # → BENCH/BASELINE.md
 
 The extraction corpus (FIXTURES.md pages table) is generated
 distributed — gen_row is a pure function of (seed, doc_id), so a Spark
@@ -17,11 +19,30 @@ cached under /tmp keyed by size.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import sys
 import time
 from pathlib import Path
+
+# The 15 headline queries (the list lives in perfbench/run.py), one per
+# operator family:
+#   a11_grand_totals      TPC-H Q1-shaped hash agg
+#   j1_packaging_join     broadcast equi join + agg
+#   j2_range_join         non-equi banded join
+#   w1_row_number         window
+#   w3_topk               TakeOrderedAndProject
+#   d1_dedup_hash         hash dedup
+#   dd_minhash_lsh        shingle → minhash → band join
+#   dd_simhash            bit-majority signatures
+#   dd_embed_lsh          hyperplane-bucketed embedding near-dup
+#   ann_topk_brute        brute-force cosine top-k
+#   tx_quality            HOF text metrics
+#   mm_image_metrics      PNG decode + numpy metrics (Python path)
+#   q5_local_supplier     6-way star join
+#   aj_asof_join          as-of join (range + argmax window)
+#   ex4_flagship_rollup   extraction kernel + rollup
+from perfbench.run import HEADLINE
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -157,90 +178,55 @@ def _timed(fn) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def headline_queries(
-        spark, sf_dir: str,
-) -> tuple[dict[str, float], dict[str, list[float]]]:
-    """Representative per-operator-family headliners at sf_dir."""
+def time_queries(
+        spark, names, sf_dir: str, explain_dir: Path | None = None,
+) -> dict[str, list[float]]:
+    """Per name: one cold run (codegen + footer reads + broadcast build,
+    or JVM + python-worker warm-up for extract_corpus), then BENCH_REPS
+    timed reps into the noop sink. Returns the rep times per name; the
+    headline number per query is their min. With explain_dir, each
+    registry query's formatted plan goes to explain_dir/<name>.txt."""
     import __spark_entry__ as entrymod
 
-    q = entrymod.queries()
-    names = [
-        "a11_grand_totals",      # TPC-H Q1-shaped hash agg
-        "j1_packaging_join",     # broadcast equi join + agg
-        "j2_range_join",         # non-equi banded join
-        "w1_row_number",         # window
-        "w3_topk",               # TakeOrderedAndProject
-        "d1_dedup_hash",         # hash dedup
-        "dd_minhash_lsh",        # shingle → minhash → band join
-        "dd_simhash",            # bit-majority signatures
-        "dd_embed_lsh",          # hyperplane-bucketed embedding near-dup
-        "ann_topk_brute",        # brute-force cosine top-k
-        "tx_quality",            # HOF text metrics
-        "mm_image_metrics",      # PNG decode + numpy metrics (Python path)
-        "q5_local_supplier",     # 6-way star join
-        "aj_asof_join",          # as-of join (range + argmax window)
-        "ex4_flagship_rollup",   # extraction kernel + rollup
-    ]
-    times, reps_detail = {}, {}
+    registry = entrymod.queries()
+    reps = {}
     for name in names:
-        df = q[name](spark, sf_dir)
+        if name == "extract_corpus":
+            corpus = ensure_corpus(spark, BENCH_DOCS)
 
-        def run(d=df):
-            d.write.format("noop").mode("overwrite").save()
+            def run(c=corpus):
+                run_extraction_job(spark, c)
+        else:
+            df = registry[name](spark, sf_dir)
+            if explain_dir is not None:
+                explain_dir.mkdir(parents=True, exist_ok=True)
+                (explain_dir / f"{name}.txt").write_text(
+                    df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted"))
 
-        run()  # cold run: codegen + footer reads + broadcast build
+            def run(d=df):
+                d.write.format("noop").mode("overwrite").save()
+
+        run()
         # min-of-BENCH_REPS steady-state reps: this VM's vCPU steal
         # swings single-shot numbers up to 8x (round-1 driver bench
         # read 4x below the recorded baseline) and same-plan rep pairs
         # have disagreed 3.3x; the min is the least-interfered run
-        reps = [_timed(run) for _ in range(BENCH_REPS)]
-        times[name] = min(reps)
-        reps_detail[name] = reps
-    return times, reps_detail
+        reps[name] = [_timed(run) for _ in range(BENCH_REPS)]
+    return reps
 
 
-# Ceiling gate (round-6 verdict #6: the official r5/r6 runs landed in
-# decaying host windows while manually-gated captures were 30-40%
-# faster on identical code). The gate probes the no-Spark CPU ceiling
-# and only launches the measured loop in a clean window, retrying with
-# a pause otherwise; the probe evidence is embedded in the JSON so the
-# artifact is self-interpreting. The probe is NOT predictive minutes
-# ahead (BENCH/NOTES.md: 0.94→0.77 mid-run observed), so a collapsed
-# mid-run ceiling triggers ONE full re-run and the least-interfered
-# (min raw total) capture is reported.
-GATE_FLOOR = float(os.environ.get("SPARK_GRAFT_GATE_FLOOR", "0.9"))
-GATE_TRIES = int(os.environ.get("SPARK_GRAFT_GATE_TRIES", "4"))
-GATE_WAIT_SEC = int(os.environ.get("SPARK_GRAFT_GATE_WAIT", "45"))
+def probe_levels(cores: int | None = None) -> tuple[int, int]:
+    """Process counts for the no-Spark ceiling probe: the --scaling
+    window capped at this host's cores, so a narrow host measures
+    steal rather than oversubscription (32 cores → (4, 16), 4 → (1, 4))."""
+    if cores is None:
+        cores = len(os.sched_getaffinity(0))
+    high = min(SCALE_LEVELS[1], cores)
+    return max(1, high // 4), high
 
 
-def default_bench() -> dict:
-    probes = []
-    for attempt in range(GATE_TRIES):
-        probe = machine_cpu_ceiling(*SCALE_LEVELS)
-        probes.append(probe)
-        if probe >= GATE_FLOOR:
-            break
-        if attempt < GATE_TRIES - 1:
-            time.sleep(GATE_WAIT_SEC)
-    gated = probes[-1] >= GATE_FLOOR
-    result = _bench_once()
-    # mid-run collapse: the window decayed after a clean probe — one
-    # re-run, keep the least-interfered capture (min raw total)
-    if result["machine_cpu_ceiling_end"] < 0.8 and gated:
-        retry = _bench_once()
-        if retry["value"] < result["value"]:
-            retry["discarded_run_total"] = result["value"]
-            result = retry
-        else:
-            result["discarded_run_total"] = retry["value"]
-    result["probe_ceiling"] = probes[-1]
-    result["probe_history"] = probes
-    if not gated:
-        result["no_clean_window"] = True
-    return result
-
-
-def _bench_once() -> dict:
+def bench(names, explain_dir: Path | None) -> dict:
     spark = make_session(CPUS)
     try:
         # ceiling measured BEFORE and AFTER the query loop: host steal
@@ -250,23 +236,12 @@ def _bench_once() -> dict:
         # self-normalizing: a query whose two reps disagree 2x, or
         # whose round-over-round delta tracks the ceiling delta, is
         # host noise, not a plan regression (BENCH/NOTES.md).
-        ceiling_start = machine_cpu_ceiling(*SCALE_LEVELS)
-        warm = ensure_corpus(spark, 8000)
-        corpus = ensure_corpus(spark, BENCH_DOCS)
-        run_extraction_job(spark, warm)  # warm JVM + python workers
-        # min-of-BENCH_REPS (same rationale as headline_queries)
-        extract_reps = [
-            _timed(lambda: run_extraction_job(spark, corpus))
-            for _ in range(BENCH_REPS)
-        ]
-        t_extract = min(extract_reps)
-        docs_per_sec = round(BENCH_DOCS / t_extract, 1)
-        queries = {"extract_corpus": t_extract}
-        head_times, reps_detail = headline_queries(spark, SF_DIR)
-        queries.update(head_times)
-        reps_detail = {"extract_corpus": extract_reps, **reps_detail}
+        levels = probe_levels()
+        ceiling_start = machine_cpu_ceiling(*levels)
+        reps_detail = time_queries(spark, names, SF_DIR, explain_dir)
+        ceiling_end = machine_cpu_ceiling(*levels)
+        queries = {name: min(reps) for name, reps in reps_detail.items()}
         total = round(sum(queries.values()), 3)
-        ceiling_end = machine_cpu_ceiling(*SCALE_LEVELS)
         # self-interpreting headline: the wall-clock total scaled by
         # the window's measured CPU ceiling (midpoint of the two
         # no-Spark spin-scaling probes, capped at 1.0). In a clean
@@ -275,29 +250,31 @@ def _bench_once() -> dict:
         # ceiling=1.0 so round-over-round artifacts compare without
         # out-of-band context. Raw `value` stays the official number.
         ceiling_mid = min(1.0, (ceiling_start + ceiling_end) / 2)
-        return {
+        result = {
             "metric": "headline_queries_total",
             "value": total,
             "unit": "sec",
             "headline_normalized": round(total * ceiling_mid, 3),
             "queries": queries,
             "sf": SF_DIR.rstrip("/").split("sf")[-1],
-            "extract_docs": BENCH_DOCS,
-            "extract_docs_per_sec": docs_per_sec,
             "cpus": CPUS,
             "reps": BENCH_REPS,
-            # both rep times per query: disagreement between the two
-            # reps of the SAME plan bounds the host-noise error bar
-            # for that query in this window.
+            # every rep time per query: disagreement between reps of the
+            # SAME plan bounds the host-noise error bar for that query in
+            # this window.
             "queries_reps": reps_detail,
             # host-noise context: pure-CPU (no Spark) scaling between
-            # the two --scaling widths, measured at loop start and
-            # end. Compare a surprising bench number against
-            # BENCH/BASELINE.md history before reading it as a
-            # regression.
+            # probe_levels(), measured at loop start and end. Compare a
+            # surprising bench number against BENCH/BASELINE.md history
+            # before reading it as a regression.
             "machine_cpu_ceiling": ceiling_start,
             "machine_cpu_ceiling_end": ceiling_end,
         }
+        if "extract_corpus" in queries:
+            result["extract_docs"] = BENCH_DOCS
+            result["extract_docs_per_sec"] = round(
+                BENCH_DOCS / queries["extract_corpus"], 1)
+        return result
     finally:
         spark.stop()
 
@@ -409,6 +386,34 @@ def _extra_notes() -> str:
     return ("\n" + p.read_text()) if p.exists() else ""
 
 
-if __name__ == "__main__":
-    result = scaling_bench() if "--scaling" in sys.argv else default_bench()
+def main(argv=None) -> None:
+    parser = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    mode = parser.add_mutually_exclusive_group()
+    mode.add_argument("--scaling", action="store_true",
+                      help="N vs 4N extraction efficiency → BENCH/BASELINE.md")
+    mode.add_argument("--only", nargs="+", metavar="NAME",
+                      help="time these registry queries (or extract_corpus)"
+                           " instead of the headline line")
+    parser.add_argument("--explain", type=Path, metavar="DIR",
+                        help="write each timed query's formatted plan to "
+                             "DIR/<name>.txt")
+    args = parser.parse_args(argv)
+    if args.scaling and args.explain:
+        parser.error("--explain applies to timed queries, not --scaling")
+    if args.only:
+        import __spark_entry__ as entrymod
+
+        unknown = set(args.only) - set(entrymod.queries()) - {
+            "extract_corpus"}
+        if unknown:
+            parser.error(f"unknown query name(s): {', '.join(sorted(unknown))}")
+    if args.scaling:
+        result = scaling_bench()
+    else:
+        result = bench(args.only or ["extract_corpus", *HEADLINE],
+                       args.explain)
     print(json.dumps(result))
+
+
+if __name__ == "__main__":
+    main()

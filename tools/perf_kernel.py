@@ -4,7 +4,8 @@
 
 Prints docs/s/thread for the full kernel plus a stage split
 (scan-only, scan+model). The Spark-level number is this × threads ×
-(1 - steal); the per-round BENCH numbers come from bench.py.
+(1 - steal); end-to-end numbers come from perfbench/run.py (the
+benchmark of record, BENCHMARK.json).
 """
 
 from __future__ import annotations
