@@ -1,13 +1,15 @@
-"""Fast HTML scanner — exact event source for DocModel.
+"""Slow-path tokenizer helpers for ``model.run_fused``.
 
-stdlib ``html.parser`` costs a large share of kernel time (feed/close
-re-buffering, ``updatepos`` line counting, ``interesting`` dispatch,
-attribute parsing + unescaping for every tag). This scanner is a
-single-pass, whole-document reimplementation of
-``HTMLParser.goahead(end=1)`` with ``convert_charrefs=True`` that emits
-the *identical* event stream (start/end/data; comments/decls/PIs are
-no-ops for DocModel) while skipping the bookkeeping DocModel never
-observes:
+``run_fused`` is the kernel's only HTML tokenizer: one whole-document
+pass that reproduces the event stream of ``HTMLParser.goahead(end=1)``
+with ``convert_charrefs=True`` (start/end/data; comments/decls/PIs are
+no-ops for DocModel). It replaces stdlib ``html.parser``, which costs
+a large share of kernel time (feed/close re-buffering, ``updatepos``
+line counting, ``interesting`` dispatch, attribute parsing +
+unescaping for every tag). Its batched dispatch token (``_FUSED_TOKEN``)
+covers text runs, attribute-less start tags and simple end tags; every
+other construct goes through the helpers here. Together they skip
+the html.parser bookkeeping DocModel never observes:
 
 - no ``updatepos``/``getpos`` line tracking;
 - attribute tuples are only *built* when the raw attr chunk could
@@ -31,14 +33,15 @@ that an unterminated <script>/<style> tail is never flushed.
 One html.parser behavior needs a convention: ``parse_marked_section``
 *raises AssertionError* on ``<![`` with a missing/unknown status
 keyword (e.g. ``<![x]>``). refkernel catches that and stops parsing at
-the offending construct (refkernel/htmlmodel.py:parse_html); this
-scanner returns at the same position, so both kernels emit identical
-events for such documents.
+the offending construct (refkernel/htmlmodel.py:parse_html);
+``_marked_section`` reports ``_CRASH`` and ``run_fused`` returns at the
+same position, so both kernels emit identical events for such
+documents.
 
 Equivalence is enforced by tests/test_htmlscan.py (corpora + NASTY
 adversarial cases) and tests/test_fuzz_parity.py (hypothesis soup +
-raw-bytes fuzz, byte-compared through the full kernel against
-refkernel, which stays on html.parser).
+raw-bytes fuzz), both byte-compared through the full kernel against
+refkernel, which stays on html.parser.
 """
 
 from __future__ import annotations
@@ -85,14 +88,15 @@ _CRASH = -2       # html.parser would raise AssertionError here
 # STRINGS (not retyped), preserving this module's no-drift guarantee:
 #   group 1 — text run up to the next '<' (== s.find('<') semantics)
 #   group 2 — simple start tag name: tagfind_tolerant + immediate '>'
-#             (exactly the old fast-path gate `tagfind.match; s[k]=='>'`;
-#             backtracking cannot widen it — the trailing class chars
-#             are never '>', so giving one back still fails)
+#             (the gate `tagfind.match; s[k]=='>'`, where
+#             parse_starttag yields start(tag, []) with no attrfind
+#             walk; backtracking cannot widen it — the trailing class
+#             chars are never '>', so giving one back still fails)
 #   group 3 — end tag name: endtagfind verbatim (sans the leading '<')
 # Anything else (attrs, comments, PIs, marked sections, EOF '<') makes
 # both tag groups None and falls to the verbatim slow dispatch.
-# 200k-string randomized equivalence vs the old dispatch plus the
-# fuzz/golden suites gate this (tests/test_fuzz_parity.py).
+# The refkernel parity suites gate this (tests/test_htmlscan.py,
+# tests/test_fuzz_parity.py).
 _FUSED_TOKEN = re.compile(
     "([^<]*)<(?:" + _TAGFIND.pattern + ">|"
     + _ENDTAGFIND.pattern[1:] + ")?")
@@ -163,12 +167,6 @@ def _starttag(s: str, lt: int, data, start, end):
     mt = _TAGFIND.match(s, lt + 1)
     tag = mt.group(1).lower()
     k = mt.end()
-    if k == j and nxt == ">":
-        # fast path '<name>' / '<name  >': attrfind cannot match at k
-        # (its lookbehind needs quote/space/slash; tagfind consumed
-        # exactly the chars before '>')
-        start(tag, [])
-        return endpos, (tag if tag in _RAWTEXT else None)
     # attrfind walk — always runs (it fixes the tag/data decision),
     # but tuples are only built when DocModel could observe them.
     # NOTE: the or-chain below is a hardcoded copy of
@@ -230,98 +228,7 @@ def _endtag(s: str, lt: int, end) -> int:
     return s.find(">", nm.end()) + 1
 
 
-def scan(s: str, model) -> None:
-    """Feed `s` to model.handle_starttag/handle_endtag/handle_data,
-    emitting exactly html.parser's (feed + close) event stream."""
-    data = model.handle_data
-    start = model.handle_starttag
-    end = model.handle_endtag
-    n = len(s)
-    i = 0
-    while i < n:
-        lt = s.find("<", i)
-        if lt < 0:
-            chunk = s[i:]
-            data(unescape(chunk) if "&" in chunk else chunk)
-            return
-        if lt > i:
-            chunk = s[i:lt]
-            data(unescape(chunk) if "&" in chunk else chunk)
-        c = s[lt + 1: lt + 2]
-        # ASCII letters only — html.parser's starttagopen is [a-zA-Z]
-        if "a" <= c <= "z" or "A" <= c <= "Z":
-            # fast path '<name>' (only ws/slash-not-before-'>' between
-            # name and '>'): tagfind consumes exactly what _LOCATE
-            # would (its attr group can't start after a name char), so
-            # endpos = k+1, attrs = [], end_chunk = '>' — one regex,
-            # no helper call. Anything else takes the verbatim path.
-            mt = _TAGFIND.match(s, lt + 1)
-            k = mt.end()
-            if k < n and s[k] == ">":
-                tag = mt.group(1).lower()
-                start(tag, [])
-                i = k + 1
-                cdata = tag if tag in _RAWTEXT else None
-            else:
-                i, cdata = _starttag(s, lt, data, start, end)
-                if i < 0:
-                    i = _recover(s, lt, data)
-                    continue
-            if cdata is not None:
-                # CDATA mode: content raw (never unescaped), ends only
-                # at a full </tag\s*> ; an unterminated tail is NEVER
-                # flushed (goahead: cdata break + final-emit guard)
-                m2 = _CDATA_CLOSE[cdata].search(s, i)
-                if m2 is None:
-                    return
-                if m2.start() > i:
-                    data(s[i:m2.start()])
-                end(cdata)
-                i = m2.end()
-        elif c == "/":
-            # fast path '</name>' / '</ name >': when endtagfind
-            # matches, the first '>' is the match's own '>' (the name
-            # class excludes '>'), so parse_endtag returns m.end()
-            m = _ENDTAGFIND.match(s, lt)
-            if m is not None:
-                end(m.group(1).lower())
-                i = m.end()
-            else:
-                i = _endtag(s, lt, end)
-                if i < 0:
-                    i = _recover(s, lt, data)
-        elif c == "!":
-            if s.startswith("<!--", lt):
-                m2 = _COMMENTCLOSE.search(s, lt + 4)  # --\s*>
-                i = _recover(s, lt, data) if m2 is None else m2.end()
-            elif s.startswith("<![", lt):
-                k = _marked_section(s, lt, n)
-                if k == _CRASH:
-                    # html.parser raises AssertionError; refkernel
-                    # catches it and stops parsing — match that.
-                    return
-                i = _recover(s, lt, data) if k < 0 else k
-            elif s[lt:lt + 9].lower() == "<!doctype":
-                gt = s.find(">", lt + 9)
-                i = _recover(s, lt, data) if gt < 0 else gt + 1
-            else:
-                # parse_bogus_comment (handle_comment is a no-op)
-                gt = s.find(">", lt + 2)
-                i = _recover(s, lt, data) if gt < 0 else gt + 1
-        elif c == "?":
-            # parse_pi (handle_pi is a DocModel no-op)
-            gt = s.find(">", lt + 2)
-            i = _recover(s, lt, data) if gt < 0 else gt + 1
-        elif c == "":
-            # lone '<' at EOF: goahead breaks, final flush emits it
-            data("<")
-            return
-        else:
-            data("<")  # raw single char, then resume as text
-            i = lt + 1
-
-
-# _starttag's fast-path gate hardcodes these names; if DocModel ever
+# _starttag's attr-interest gate hardcodes these names; if DocModel ever
 # reacts to a new attribute, this assert forces the gate to be updated
 # too (otherwise the new attr would silently never be parsed).
 assert _INTERESTING_ATTRS == ("class", "border", "data-page"), (

@@ -9,7 +9,6 @@ Output per document: (content_parts, spans, tables_by_page, n_pages).
 from __future__ import annotations
 
 import re
-from html.parser import HTMLParser
 
 from .lexicon import BOILER_CLASS_TOKENS, BOILER_TAGS
 
@@ -65,11 +64,12 @@ def pre_rows(raw: str) -> list[list[str]] | None:
     return rows if wide >= 2 and wide / len(lines) >= 0.5 else None
 
 
-class DocModel(HTMLParser):
-    """Single-pass extractor state machine."""
+class DocModel:
+    """Single-pass extractor state machine. run_fused inlines the hot
+    handle_* bodies; its slow-path helpers (htmlscan) call the methods
+    as start/end/data."""
 
     def __init__(self):
-        super().__init__(convert_charrefs=True)
         self.spans: list[tuple[str, int, int, int]] = []
         self.content: list[str] = []
         # page → {"lattice": [...grids], "stream": [...grids]}
@@ -331,20 +331,19 @@ class DocModel(HTMLParser):
 
 
 def run_fused(m: DocModel, s: str) -> None:
-    """Combined scanner→model dispatch: htmlscan.scan's tokenizer loop
-    with DocModel's hot handler bodies (no-attr start tags, end tags,
-    table-cell/pre data) inlined at the dispatch sites — the handler
-    call per event (~300-500 events/doc) plus its re-branching was the
-    remaining constant cost after round 2's scanner rewrite.
+    """The kernel's only HTML tokenizer, fused with DocModel's hot
+    handler bodies (no-attr start tags, end tags, table-cell/pre data)
+    inlined at the dispatch sites, which saves a handler call per
+    event (~300-500 events/doc) plus its re-branching.
 
-    Event semantics are htmlscan.scan's, verbatim (same stdlib regexes,
-    same slow-path helpers for attr-bearing tags, comments, marked
-    sections, recovery); model semantics are the handle_* bodies,
-    verbatim (slow paths call the real methods). Equivalence guards:
-    tests/test_htmlscan.py (fused ⇔ refkernel on corpus + NASTY),
-    tests/test_fuzz_parity.py (hypothesis soup + raw bytes through
-    extract_one, which uses this path), and
-    test_fused_matches_event_path (fused ⇔ scan()+handlers directly).
+    Event semantics are html.parser's (feed + close), reproduced with
+    the stdlib's own regexes; attr-bearing tags, comments, marked
+    sections and EOF recovery go through htmlscan's slow-path helpers.
+    Model semantics are the handle_* bodies, verbatim (slow paths call
+    the real methods). Equivalence guards, both byte-compared against
+    refkernel (which stays on html.parser): tests/test_htmlscan.py
+    (corpus + NASTY) and tests/test_fuzz_parity.py (hypothesis soup +
+    raw bytes through extract_one, which uses this path).
     """
     from . import htmlscan as H
 
@@ -496,15 +495,19 @@ def run_fused(m: DocModel, s: str) -> None:
             continue
         # neither simple form matched at this '<': verbatim slow
         # dispatch (attr-bearing/malformed tags, comments, decls,
-        # marked sections, PIs, EOF '<'), exactly htmlscan.scan's
+        # marked sections, PIs, EOF '<'), mirroring html.parser goahead
         lt = mtok.end(1)
         c = s[lt + 1: lt + 2]
+        # ASCII letters only — html.parser's starttagopen is [a-zA-Z]
         if "a" <= c <= "z" or "A" <= c <= "Z":
             i, cdata = H._starttag(s, lt, data, start, end)
             if i < 0:
                 i = H._recover(s, lt, data)
                 continue
             if cdata is not None:
+                # CDATA mode: content raw (never unescaped), ends only
+                # at a full </tag\s*> ; an unterminated tail is NEVER
+                # flushed (goahead: cdata break + final-emit guard)
                 m2 = H._CDATA_CLOSE[cdata].search(s, i)
                 if m2 is None:
                     return
@@ -523,27 +526,28 @@ def run_fused(m: DocModel, s: str) -> None:
             elif s.startswith("<![", lt):
                 k = H._marked_section(s, lt, n)
                 if k == H._CRASH:
+                    # html.parser raises AssertionError; refkernel
+                    # catches it and stops parsing — match that.
                     return
                 i = H._recover(s, lt, data) if k < 0 else k
             elif s[lt:lt + 9].lower() == "<!doctype":
                 gt = s.find(">", lt + 9)
                 i = H._recover(s, lt, data) if gt < 0 else gt + 1
             else:
+                # parse_bogus_comment (handle_comment is a no-op)
                 gt = s.find(">", lt + 2)
                 i = H._recover(s, lt, data) if gt < 0 else gt + 1
         elif c == "?":
+            # parse_pi (handle_pi is a DocModel no-op)
             gt = s.find(">", lt + 2)
             i = H._recover(s, lt, data) if gt < 0 else gt + 1
         elif c == "":
+            # lone '<' at EOF: goahead breaks, final flush emits it
             data("<")
             return
         else:
-            data("<")
+            data("<")  # raw single char, then resume as text
             i = lt + 1
-
-
-_USE_STDLIB = bool(int(
-    __import__("os").environ.get("SPARK_EXTRACT_STDLIB_PARSER", "0")))
 
 
 def parse_document(html: bytes) -> DocModel:
@@ -552,16 +556,6 @@ def parse_document(html: bytes) -> DocModel:
     except UnicodeDecodeError:
         text = html.decode("latin-1")
     m = DocModel()
-    if _USE_STDLIB:
-        try:
-            m.feed(text)
-            m.close()
-        except AssertionError:
-            # html.parser raises on malformed marked sections
-            # ('<![x]>'); parsing stops there — same convention as
-            # htmlscan._marked_section and refkernel parse_html.
-            pass
-    else:
-        run_fused(m, text)
+    run_fused(m, text)
     m.finish()
     return m

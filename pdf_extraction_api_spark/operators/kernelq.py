@@ -1,7 +1,7 @@
 """Extraction-kernel queries with DuckDB oracles.
 
 The kernel itself is not SQL (Python byte-exact semantics inside
-mapInPandas) — but on *constructively known* HTML its output is fully
+mapInArrow) — but on *constructively known* HTML its output is fully
 predictable, so we wrap `documents` rows into a fixed HTML shell
 (boilerplate nav + content paragraph + a 2-column ruled table) and let
 the oracle reconstruct every kernel output — extracted text, span

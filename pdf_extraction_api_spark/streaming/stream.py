@@ -2,7 +2,7 @@
 
 The reference is strictly batch (SURVEY.md §2.10); this is the
 incremental-ingest path for a continuously-landing Common-Crawl table:
-`readStream` over the pages directory → the SAME mapInPandas kernel →
+`readStream` over the pages directory → the SAME mapInArrow kernel →
 `foreachBatch` committing through the snapshot catalog, with
 `trigger(availableNow=True)` for catch-up runs. Exactly-once comes from
 the Spark streaming checkpoint (source offsets) + the catalog's atomic

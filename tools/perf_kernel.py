@@ -2,8 +2,8 @@
 
     python -m tools.perf_kernel [reps]
 
-Prints docs/s/thread for the full kernel plus a stage split
-(scan-only, scan+model). The Spark-level number is this × threads ×
+Prints docs/s/thread for the full kernel plus the parse stage alone
+(model.parse_document: decode, run_fused, finish). The Spark-level number is this × threads ×
 (1 - steal); end-to-end numbers come from perfbench/run.py (the
 benchmark of record, BENCHMARK.json).
 """
@@ -18,28 +18,9 @@ def main(reps: int = 8) -> None:
     import pyarrow.parquet as pq
 
     from pdf_extraction_api_spark.kernel.batch import extract_record
-    from pdf_extraction_api_spark.kernel.htmlscan import scan
-    from pdf_extraction_api_spark.kernel.model import DocModel
+    from pdf_extraction_api_spark.kernel.model import parse_document
 
     rows = pq.read_table("tests/golden/pages_tiny.parquet").to_pylist()
-    texts = []
-    for r in rows:
-        try:
-            texts.append(r["html"].decode("utf-8"))
-        except UnicodeDecodeError:
-            texts.append(r["html"].decode("latin-1"))
-
-    class Noop:
-        def handle_data(self, d):
-            pass
-
-        def handle_starttag(self, t, a):
-            pass
-
-        def handle_endtag(self, t):
-            pass
-
-    nm = Noop()
     for r in rows:  # warm
         extract_record(r["url"], r["html"])
 
@@ -47,17 +28,9 @@ def main(reps: int = 8) -> None:
     # wall-clock vary ±40% run to run); wall-clock is reported too.
     t0 = time.process_time()
     for _ in range(reps):
-        for t in texts:
-            scan(t, nm)
-    t_scan = time.process_time() - t0
-
-    t0 = time.process_time()
-    for _ in range(reps):
-        for t in texts:
-            m = DocModel()
-            scan(t, m)
-            m.finish()
-    t_model = time.process_time() - t0
+        for r in rows:
+            parse_document(r["html"])
+    t_parse = time.process_time() - t0
 
     # best-of over several windows: the host's vCPU steal/IPC varies
     # ±40% minute to minute; the fastest window is the comparable
@@ -78,8 +51,7 @@ def main(reps: int = 8) -> None:
 
     n = len(rows) * reps
     print(f"docs: {n} x5 windows")
-    print(f"scan-only : {t_scan:.3f}s cpu")
-    print(f"scan+model: {t_model:.3f}s cpu")
+    print(f"parse     : {t_parse:.3f}s cpu")
     print(f"full best : {best:.3f}s cpu = {n / best:.0f} docs/s/thread")
 
 
