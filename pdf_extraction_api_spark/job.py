@@ -61,6 +61,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from pdf_extraction_api_spark.plans.extract import (
+        LINEAGE_COLS,
         audit_metrics,
         load_pages,
         resume_filter,
@@ -110,8 +111,8 @@ def main(argv: list[str] | None = None) -> int:
         pages, salt_partitions=args.salt_partitions, with_lineage=True)
     results = results.cache()  # one kernel pass feeds both sinks
     try:
-        cat.append(results.drop("partition_id", "bytes_in", "kernel_us"),
-                   "results", run_id=args.run_id)
+        cat.append(results.drop(*LINEAGE_COLS), "results",
+                   run_id=args.run_id)
         cat.append(audit_metrics(results, args.run_id), "audit",
                    run_id=args.run_id)
         if args.stats:

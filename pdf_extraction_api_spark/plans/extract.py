@@ -32,13 +32,13 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from ..kernel.batch import RESULT_SCHEMA
 
+# per-document lineage the kernel appends to RESULT_SCHEMA; the audit
+# is built from these and committed results never carry them
+LINEAGE_COLS = ("partition_id", "bytes_in", "kernel_us")
+
 KERNEL_SCHEMA = StructType(
     RESULT_SCHEMA.fields
-    + [
-        StructField("partition_id", LongType()),
-        StructField("bytes_in", LongType()),
-        StructField("kernel_us", LongType()),
-    ]
+    + [StructField(c, LongType()) for c in LINEAGE_COLS]
 )
 
 _RESULT_COLS = [f.name for f in RESULT_SCHEMA.fields]
@@ -67,9 +67,7 @@ def _make_kernel(carry: tuple[str, ...]):
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
-        names = (_RESULT_COLS
-                 + ["partition_id", "bytes_in", "kernel_us"]
-                 + list(carry))
+        names = _RESULT_COLS + list(LINEAGE_COLS) + list(carry)
         for rb in batches:
             idx = rb.schema.get_field_index
             records, bytes_in, kernel_us = kernel_batch(
@@ -127,7 +125,7 @@ def run_extraction(
         KERNEL_SCHEMA.fields + [pages.schema[c] for c in carry])
     out = src.mapInArrow(_make_kernel(carry), schema=schema)
     if not with_lineage:
-        out = out.drop("partition_id", "bytes_in", "kernel_us")
+        out = out.drop(*LINEAGE_COLS)
     return out
 
 

@@ -1,4 +1,5 @@
-"""spark-submit job entrypoint + streaming surface tests."""
+"""spark-submit job entrypoint + extraction stream tests: both commit
+the same results schema (RESULT_SCHEMA's columns) and an audit."""
 
 from __future__ import annotations
 
@@ -15,13 +16,16 @@ pytestmark = pytest.mark.skipif(
 
 def test_job_main_with_resume(spark, tmp_path):
     from pdf_extraction_api_spark.job import main
+    from pdf_extraction_api_spark.kernel.batch import RESULT_SCHEMA
     from pdf_extraction_api_spark.sources.catalog import SnapshotCatalog
 
     wh = str(tmp_path / "wh")
     assert main(["--pages", PAGES, "--warehouse", wh,
                  "--run-id", "r1"]) == 0
     cat = SnapshotCatalog(wh)
-    n1 = cat.read(spark, "results").count()
+    results = cat.read(spark, "results")
+    assert results.columns == RESULT_SCHEMA.fieldNames()
+    n1 = results.count()
     assert n1 == 200
     audit = cat.read(spark, "audit")
     assert audit.groupBy("run_id").count().count() == 1
@@ -69,6 +73,7 @@ def _stage_dir(tmp_path) -> str:
 
 
 def test_streaming_extraction(spark, tmp_path):
+    from pdf_extraction_api_spark.kernel.batch import RESULT_SCHEMA
     from pdf_extraction_api_spark.sources.catalog import SnapshotCatalog
     from pdf_extraction_api_spark.streaming.stream import (
         start_extraction_stream,
@@ -81,6 +86,8 @@ def test_streaming_extraction(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(300)
     out = cat.read(spark, "stream_results")
+    # the stream commits exactly what job.main commits
+    assert out.columns == RESULT_SCHEMA.fieldNames()
     assert out.count() == 200
     assert out.select("url").distinct().count() == 200
     # restart with same checkpoint: no duplicate processing
@@ -95,135 +102,3 @@ def test_streaming_extraction(spark, tmp_path):
     rows = audit.groupBy().sum("input_rows", "errors").collect()[0]
     assert rows[0] == 200 and rows[1] == 0
     assert audit.select("run_id").distinct().count() >= 1
-
-
-def test_streaming_windowed_counts(spark, tmp_path):
-    from pdf_extraction_api_spark.streaming.stream import (
-        read_pages_stream,
-        windowed_doc_counts,
-    )
-
-    stream = read_pages_stream(spark, _stage_dir(tmp_path))
-    agg = windowed_doc_counts(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    total = spark.sql(
-        "SELECT sum(n_docs) AS n FROM win_counts").collect()[0]["n"]
-    assert total == 200
-
-
-def test_streaming_hopping_matches_batch(spark, tmp_path):
-    """Hopping windows under Structured Streaming must produce
-    EXACTLY the rows the batch aggregation produces on the same
-    files — same epoch-aligned boundaries, same 2x multiplicity
-    (size/hop overlapping windows per event)."""
-    from pyspark.sql import functions as F
-
-    from pdf_extraction_api_spark.streaming.stream import (
-        hopping_doc_counts,
-        read_pages_stream,
-    )
-
-    pages_dir = _stage_dir(tmp_path)
-    q = (
-        hopping_doc_counts(read_pages_stream(spark, pages_dir))
-        .writeStream.format("memory")
-        .queryName("hop_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt_hop"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    stream_rows = sorted(
-        (r["window"]["start"], r["lang"], r["n_docs"])
-        for r in spark.sql("SELECT * FROM hop_counts").collect())
-    batch_rows = sorted(
-        (r["window"]["start"], r["lang"], r["n_docs"])
-        for r in (
-            spark.read.parquet(pages_dir)
-            .groupBy(F.window("warc_ts", "1 hour", "30 minutes"),
-                     "lang")
-            .agg(F.count("*").alias("n_docs"))
-        ).collect())
-    assert stream_rows == batch_rows
-    # every doc counted exactly twice across the hopping windows
-    assert sum(n for _, _, n in stream_rows) == 2 * 200
-
-
-def test_streaming_late_data_dropped(spark, tmp_path):
-    """Watermark semantics end-to-end in APPEND mode across a query
-    restart: batch 1 advances the watermark past the first window's
-    end (finalizing it); batch 2 carries a row LATE beyond the
-    watermark targeting that closed window — it must be dropped, and
-    only the second window (finalized by batch 2's fresh row) is
-    emitted, without the late row leaking into its count."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from pdf_extraction_api_spark.streaming.stream import (
-        read_pages_stream,
-        windowed_doc_counts,
-    )
-
-    stage = tmp_path / "pages"
-    ckpt = str(tmp_path / "ckpt")
-
-    def write(name, stamps):
-        # land each batch as ONE flat file in the staging dir (a
-        # nested dir per batch would defeat the file-stream source's
-        # directory listing)
-        tmp = tmp_path / f"_stage_{name}"
-        spark.createDataFrame(
-            [(f"u{i}", t, b"<p>x</p>", "x", "en")
-             for i, t in enumerate(stamps)],
-            "url STRING, warc_ts TIMESTAMP, html BINARY, "
-            "text STRING, lang STRING",
-        ).coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        stage.mkdir(exist_ok=True)
-        part = next(tmp.glob("part-*.parquet"))
-        part.rename(stage / f"{name}.parquet")
-
-    out_dir = str(tmp_path / "win_out")
-
-    def run():
-        # file sink: the one test-friendly sink that supports
-        # restarting from the checkpoint (memory sink does not)
-        stream = read_pages_stream(
-            spark, str(stage),
-            schema=spark.read.parquet(str(stage)).schema)
-        q = (windowed_doc_counts(stream)
-             .select(F.col("window.start").alias("ws"), "n_docs")
-             .writeStream.format("parquet")
-             .option("path", out_dir)
-             .outputMode("append")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        return spark.read.parquet(out_dir).collect()
-
-    T = dt.datetime
-    # batch 1: three rows in [12:00,13:00), one at 13:55 → watermark
-    # 13:45 finalizes the 12:00 window
-    write("b1", [T(2024, 5, 1, 12, 5), T(2024, 5, 1, 12, 10),
-                 T(2024, 5, 1, 12, 20), T(2024, 5, 1, 13, 55)])
-    out1 = {(r.ws, r.n_docs) for r in run()}
-    assert out1 == {(T(2024, 5, 1, 12, 0), 3)}
-
-    # batch 2 (same checkpoint): a LATE 12:30 row aimed at the closed
-    # window + a fresh 16:00 row that finalizes the 13:00 window
-    write("b2", [T(2024, 5, 1, 12, 30), T(2024, 5, 1, 16, 0)])
-    out2 = {(r.ws, r.n_docs) for r in run()}
-    # cumulative file-sink contents: the closed 12:00 window is never
-    # re-emitted or corrected (the late row is DROPPED), and the 13:00
-    # window finalizes with only its on-time row
-    assert out2 == {(T(2024, 5, 1, 12, 0), 3),
-                    (T(2024, 5, 1, 13, 0), 1)}
