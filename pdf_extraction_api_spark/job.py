@@ -18,6 +18,22 @@ import json
 import sys
 
 
+def _int_at_least(lo: int):
+    """argparse type: an int >= `lo`, so a bad value exits 2 with usage
+    before Spark starts instead of changing what the run does."""
+    def parse(text: str) -> int:
+        try:
+            value = int(text)
+        except ValueError:
+            raise argparse.ArgumentTypeError(
+                f"invalid int value: {text!r}") from None
+        if value < lo:
+            raise argparse.ArgumentTypeError(
+                f"must be >= {lo}, got {value}")
+        return value
+    return parse
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages",
@@ -27,9 +43,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--resume", action="store_true",
                     help="skip urls already committed (J4 anti-join)")
-    ap.add_argument("--salt-partitions", type=int, default=None,
+    ap.add_argument("--salt-partitions", type=_int_at_least(1),
+                    default=None,
                     help="explicit url-hash salting for skewed layouts")
-    ap.add_argument("--arrow-batch", type=int, default=256,
+    ap.add_argument("--arrow-batch", type=_int_at_least(1), default=256,
                     help="max docs per Arrow batch — lower it for "
                          "corpora with multi-MB documents so a batch "
                          "of html payloads stays within executor memory")
@@ -42,12 +59,12 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--vacuum", action="store_true",
                     help="maintenance mode: delete data files no "
                          "longer reachable from the current read set")
-    ap.add_argument("--target-files", type=int, default=8,
+    ap.add_argument("--target-files", type=_int_at_least(1), default=8,
                     help="file count --compact aims for")
     ap.add_argument("--table", default="results",
                     help="table the maintenance modes operate on "
                          "(e.g. 'results' or 'audit')")
-    ap.add_argument("--vacuum-grace", type=int, default=900,
+    ap.add_argument("--vacuum-grace", type=_int_at_least(0), default=900,
                     help="seconds a data file must be old before "
                          "--vacuum may reclaim it (in-flight append "
                          "protection)")

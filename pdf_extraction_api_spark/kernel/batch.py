@@ -10,15 +10,21 @@ never at the mercy of UTF-8 normalization (SURVEY.md §7 hard part #1).
 one tuple per document in RESULT_SCHEMA order, spans as kind codes
 plus int32 columns instead of one dict per span — and `record_arrays`
 turns a batch of them into Arrow arrays column by column.
+
+Every output array is built from buffers (`arrow_array`), never by
+`pa.array` over a Python sequence: that call imports pandas through
+pyarrow's lazy pandas shim (~40 MB RSS), which a mapInArrow worker
+otherwise never loads, and the kernel runs in one worker per
+executor core.
 """
 
 from __future__ import annotations
 
 import time
 from array import array
-from collections.abc import Iterable
+from collections.abc import Iterable, Sequence
 from functools import cache
-from itertools import accumulate
+from itertools import accumulate, chain
 
 from pyspark.sql.types import (
     ArrayType,
@@ -190,6 +196,74 @@ def _arrow_result_schema():
     return to_arrow_schema(RESULT_SCHEMA)
 
 
+# array-module typecodes of the fixed-width leaves arrow_array builds
+_FIXED_CODES = {"int32": "i", "int64": "q", "double": "d"}
+
+
+def _offsets(lengths: Iterable[int]):
+    """int32 offsets buffer: 0 then the running sum of `lengths`."""
+    import pyarrow as pa
+
+    return pa.py_buffer(array("i", accumulate(lengths, initial=0)))
+
+
+def arrow_array(values: Sequence, typ):
+    """Arrow array of `typ` from a Python sequence, assembled from
+    buffers: fixed-width leaves are one array-module buffer; string and
+    binary leaves are offsets plus joined bytes, with a validity bitmap
+    only when a value is None; lists, maps and structs recurse on their
+    flattened children. Covers the types RESULT_SCHEMA and the lineage
+    columns use; pa.array builds the same arrays but imports pandas."""
+    import pyarrow as pa
+
+    n = len(values)
+    if isinstance(typ, (pa.ListType, pa.MapType)):
+        offsets = pa.Array.from_buffers(
+            pa.int32(), n + 1, [None, _offsets(map(len, values))])
+        if isinstance(typ, pa.MapType):
+            return pa.MapArray.from_arrays(
+                offsets,
+                arrow_array([k for d in values for k in d], typ.key_type),
+                arrow_array([v for d in values for v in d.values()],
+                            typ.item_type),
+                type=typ)
+        return pa.ListArray.from_arrays(
+            offsets,
+            arrow_array(list(chain.from_iterable(values)), typ.value_type),
+            type=typ)
+    if isinstance(typ, pa.StructType):
+        return pa.StructArray.from_arrays(
+            [arrow_array([v[f.name] for v in values], f.type) for f in typ],
+            fields=list(typ))
+    code = _FIXED_CODES.get(str(typ))
+    if code is not None:
+        return pa.Array.from_buffers(
+            typ, n, [None, pa.py_buffer(array(code, values))])
+    text = typ == pa.string()
+    if not text and typ != pa.binary():
+        raise TypeError(f"arrow_array: unsupported type {typ}")
+    nulls = values.count(None)
+    validity = None
+    if nulls:
+        bits = "".join("0" if v is None else "1" for v in values)
+        validity = pa.py_buffer(
+            int(bits[::-1], 2).to_bytes((n + 7) // 8, "little"))
+        empty = "" if text else b""
+        values = [empty if v is None else v for v in values]
+    if text:
+        joined = "".join(values)
+        data = joined.encode("utf-8")
+        # ASCII: byte offsets are the str lengths
+        lengths = (map(len, values) if len(data) == len(joined)
+                   else (len(v.encode("utf-8")) for v in values))
+    else:
+        data = b"".join(values)
+        lengths = map(len, values)
+    return pa.Array.from_buffers(
+        typ, n, [validity, _offsets(lengths), pa.py_buffer(data)],
+        null_count=nulls)
+
+
 def _spans_array(spans: tuple, list_type):
     """ListArray<SPAN_TYPE> from packed spans: the four columns of every
     doc are concatenated into one buffer each; kind is a take of the
@@ -204,7 +278,7 @@ def _spans_array(spans: tuple, list_type):
         buf = pa.py_buffer(b"".join(s[j] for s in spans))
         return pa.Array.from_buffers(typ, n, [None, buf])
 
-    kind = pa.array(SPAN_KINDS, pa.string()).take(column(0, pa.uint8()))
+    kind = arrow_array(SPAN_KINDS, pa.string()).take(column(0, pa.uint8()))
     values = pa.StructArray.from_arrays(
         [kind, column(1, i32), column(2, i32), column(3, i32)],
         fields=list(list_type.value_type))
@@ -217,13 +291,14 @@ def _spans_array(spans: tuple, list_type):
 def record_arrays(records: list[tuple]) -> list:
     """Packed records → one Arrow array per RESULT_SCHEMA column, in
     order; the same arrays pa.RecordBatch.from_pylist builds from the
-    records' dict views."""
-    import pyarrow as pa
-
+    records' dict views. Built from buffers (arrow_array, _spans_array)
+    so the worker never imports pandas: pa.array on a Python list
+    would load it on the first batch and keep it for the worker's
+    life."""
     schema = _arrow_result_schema()
     columns = zip(*records) if records else [()] * len(schema)
     return [
         _spans_array(col, field.type) if i == _SPANS
-        else pa.array(col, field.type)
+        else arrow_array(col, field.type)
         for i, (field, col) in enumerate(zip(schema, columns))
     ]

@@ -10,6 +10,8 @@ TPC-H-ish tables. Conventions (driver compare contract):
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -20,6 +22,7 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 SPREAD_MULT = 1  # partitions per core; A/B'd per consumer below
+_log = logging.getLogger(__name__)
 
 
 def spread(df: DataFrame, *key: str) -> DataFrame:
@@ -58,22 +61,25 @@ def spread(df: DataFrame, *key: str) -> DataFrame:
     # parquet reader cannot split below a row group (a 130 MB file
     # with 6 row groups yields 126 splits but only 6 carry rows), so
     # count row groups from the footers — bounded work, only ever for
-    # fewer-files-than-cores inputs.
-    eff = None
-    if files:
-        try:
-            import pyarrow.parquet as pq
+    # fewer-files-than-cores inputs. Footers open through pyarrow.fs,
+    # so any URI scheme pyarrow can read (file:, s3:, gs:, hdfs:) counts.
+    if not files:
+        return df  # no file list (e.g. an in-memory relation)
+    import pyarrow.parquet as pq
+    from pyarrow.fs import FileSystem
 
-            eff = sum(
-                pq.ParquetFile(f.removeprefix("file:")).num_row_groups
-                for f in files)
-        except Exception:
-            eff = None
-    if eff is None:
-        # footers unreadable (or no file list): fail open rather than
-        # ask df.rdd for its partition count, which plans the scan at
-        # query-construction time
-        return df
+    eff = 0
+    for f in files:
+        try:
+            fs, path = FileSystem.from_uri(f)
+            with fs.open_input_file(path) as fh:
+                eff += pq.ParquetFile(fh).num_row_groups
+        except Exception as exc:
+            # fail open rather than ask df.rdd for its partition count,
+            # which plans the scan at query-construction time
+            _log.warning("spread(): cannot read the parquet footer of "
+                         "%s (%s); input left unpartitioned", f, exc)
+            return df
     if eff >= cores:
         return df
     return df.repartition(cores * SPREAD_MULT, *[F.col(k) for k in key])

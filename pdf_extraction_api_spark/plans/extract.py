@@ -53,30 +53,32 @@ def _make_kernel(carry: tuple[str, ...]):
 
     Each input batch goes through kernel_batch, the loop the SQL UDF
     runs too (dup-body memo, per-doc error records). Its packed
-    records become the output batch column by column (record_arrays):
-    pa.array per scalar/tables column, and one ListArray for spans
-    built from concatenated kind-code and int32 buffers — no per-span
-    dict and no row-wise from_pylist, which is what held each Python
-    worker's peak memory up."""
+    records become the output batch column by column (record_arrays),
+    every array built from buffers (arrow_array; spans as one ListArray
+    over concatenated kind-code and int32 buffers) — no per-span dict,
+    no row-wise from_pylist and no pa.array over a Python list, so the
+    worker never imports pandas; each of those held its peak memory
+    up."""
 
     def _kernel(batches):
         import pyarrow as pa
         from pyspark import TaskContext
 
-        from ..kernel.batch import kernel_batch, record_arrays
+        from ..kernel.batch import arrow_array, kernel_batch, record_arrays
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         names = _RESULT_COLS + list(LINEAGE_COLS) + list(carry)
+        i64 = pa.int64()
         for rb in batches:
             idx = rb.schema.get_field_index
             records, bytes_in, kernel_us = kernel_batch(
                 rb.column(idx("url")).to_pylist(),
                 rb.column(idx("html")).to_pylist())
             arrays = record_arrays(records) + [
-                pa.array([pid] * len(records), pa.int64()),
-                pa.array(bytes_in, pa.int64()),
-                pa.array(kernel_us, pa.int64()),
+                arrow_array([pid] * len(records), i64),
+                arrow_array(bytes_in, i64),
+                arrow_array(kernel_us, i64),
             ] + [rb.column(idx(c)) for c in carry]
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 

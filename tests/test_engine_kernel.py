@@ -196,9 +196,11 @@ def test_memo_byte_budget_evicts_fifo():
 def test_columnar_assembly_matches_from_pylist(monkeypatch):
     """The mapInArrow kernel's column-wise output batch equals
     pa.RecordBatch.from_pylist over extract_one's dict view, on the
-    golden corpus plus edge docs: an empty body, a None html, a doc
-    that raises, a memo hit under a different url, and a carry
-    column passed through unchanged."""
+    golden corpus plus edge docs: an empty body, a None html, a None
+    url (validity bitmap), a non-ASCII url and body (byte offsets off
+    the ASCII fast path), a doc that raises, a memo hit under a
+    different url, and a carry column passed through unchanged; and a
+    zero-row batch yields zero-length arrays of the schema's types."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -220,6 +222,15 @@ def test_columnar_assembly_matches_from_pylist(monkeypatch):
     docs = [(r["url"], r["html"]) for r in rows] + [
         ("edge://empty", b""),
         ("edge://none", None),
+        (None, b"<p>a page without a url</p>"),
+        ("edge://caf\u00e9/\u6587\u5b57", (
+            "<html><body><h1>Caf\u00e9 \u00fcber alles</h1>"
+            "<p>Gr\u00f6\u00dfe \u2014 \u4ef7\u683c \U0001f600 "
+            "na\u00efve r\u00e9sum\u00e9 text</p><table>"
+            "<tr><th>Gr\u00f6\u00dfe</th><th>\u4ef7\u683c</th></tr>"
+            "<tr><td>1,5 \u20ac</td><td>\u00a520</td></tr>"
+            "<tr><td>2,5 \u20ac</td><td>\u00a530</td></tr>"
+            "</table></body></html>").encode("utf-8")),
         ("edge://raises", b"<p>raise me</p>"),
         ("edge://dup", rows[3]["html"]),  # memo hit, different url
     ]
@@ -232,7 +243,8 @@ def test_columnar_assembly_matches_from_pylist(monkeypatch):
 
     B._RESULT_MEMO.clear()
     try:
-        (out,) = list(_make_kernel(("lang",))(iter([rb])))
+        (out, empty) = list(_make_kernel(("lang",))(
+            iter([rb, rb.slice(0, 0)])))
     finally:
         B._RESULT_MEMO.clear()
 
@@ -252,3 +264,48 @@ def test_columnar_assembly_matches_from_pylist(monkeypatch):
     assert out.column("bytes_in").to_pylist() == [
         len(h) if h is not None else 0 for h in htmls]
     assert set(out.column("partition_id").to_pylist()) == {-1}
+
+    assert empty.schema.equals(out.schema)
+    assert empty.num_rows == 0
+    for col in empty.columns:
+        col.validate(full=True)
+        assert len(col) == 0
+    assert empty.select(_RESULT_COLS).equals(
+        pa.RecordBatch.from_pylist([], schema=schema))
+
+
+def test_kernel_worker_never_imports_pandas(tmp_path):
+    """A mapInArrow worker never needs pandas, and the kernel must not
+    load it (~40 MB RSS per worker): run the kernel over the golden
+    pages in a fresh interpreter and check sys.modules. The pages go
+    through an Arrow IPC file because pyarrow.parquet imports pandas
+    itself."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ipc = tmp_path / "pages.arrow"
+    table = pq.read_table("tests/golden/pages_tiny.parquet",
+                          columns=["url", "html"])
+    with pa.ipc.new_file(ipc, table.schema) as w:
+        w.write_table(table, max_chunksize=64)
+    script = (
+        "import sys\n"
+        "import pyarrow as pa\n"
+        "from pdf_extraction_api_spark.plans.extract import _make_kernel\n"
+        "with pa.ipc.open_file(sys.argv[1]) as f:\n"
+        "    batches = [f.get_batch(i)"
+        " for i in range(f.num_record_batches)]\n"
+        "rows = sum(b.num_rows for b in _make_kernel(())(iter(batches)))\n"
+        "print(rows, 'pandas' in sys.modules)\n"
+    )
+    # `python -c` puts the working directory first on sys.path
+    res = subprocess.run(
+        [sys.executable, "-c", script, str(ipc)],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True, text=True, timeout=300)
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.split() == ["200", "False"]

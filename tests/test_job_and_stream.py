@@ -36,6 +36,31 @@ def test_job_main_with_resume(spark, tmp_path):
     assert cat.read(spark, "results").count() == 200
 
 
+def test_job_rejects_out_of_range_ints_with_usage(tmp_path, capsys):
+    """Count and size flags exit 2 with usage at parse time, before any
+    Spark import: --arrow-batch <= 0 would lift the per-batch memory
+    bound (Spark reads maxRecordsPerBatch <= 0 as no limit), a negative
+    --vacuum-grace would let vacuum reclaim an in-flight append's
+    files, --salt-partitions 0 would silently skip salting, and
+    --target-files 0 would fail deep inside Spark."""
+    from pdf_extraction_api_spark.job import main
+
+    base = ["--pages", PAGES, "--warehouse", str(tmp_path / "wh"),
+            "--run-id", "bad"]
+    for flag, value in [("--arrow-batch", "0"), ("--arrow-batch", "-5"),
+                        ("--salt-partitions", "0"),
+                        ("--target-files", "0"),
+                        ("--vacuum-grace", "-1"),
+                        ("--arrow-batch", "many")]:
+        with pytest.raises(SystemExit) as exc:
+            main(base + [flag, value])
+        assert exc.value.code == 2, (flag, value)
+        err = capsys.readouterr().err
+        assert err.startswith("usage:"), err
+        assert f"argument {flag}:" in err, err
+    assert not os.path.exists(tmp_path / "wh")
+
+
 def test_spark_submit_pyfiles(tmp_path):
     """The actual north_rule launch mode: spark-submit --py-files."""
     from pdf_extraction_api_spark.job import main  # noqa: F401

@@ -534,10 +534,14 @@ def test_minhash_lsh_with_shuffle_partitions_unset(spark, registry):
     assert got == want
 
 
-def test_spread_fails_open_on_unreadable_footers(spark, tmp_path):
+def test_spread_fails_open_on_unreadable_footers(spark, tmp_path,
+                                                 caplog):
     """spread() counts row groups from the parquet footers; when they
     cannot be read it returns the input unchanged instead of asking
-    the scan for its partition count at plan time."""
+    the scan for its partition count at plan time, and logs one
+    warning naming the unreadable file."""
+    import logging
+
     from pdf_extraction_api_spark.operators.relational import spread
 
     if spark.sparkContext.defaultParallelism < 2:
@@ -545,10 +549,17 @@ def test_spread_fails_open_on_unreadable_footers(spark, tmp_path):
     ok_path, bad_path = str(tmp_path / "ok"), str(tmp_path / "bad")
     for p in (ok_path, bad_path):
         spark.range(100).coalesce(1).write.parquet(p)
+    logger = "pdf_extraction_api_spark.operators.relational"
     ok = spark.read.parquet(ok_path)
-    assert spread(ok, "id") is not ok  # one row group < cores: fires
+    with caplog.at_level(logging.WARNING, logger=logger):
+        assert spread(ok, "id") is not ok  # one row group < cores: fires
+    assert not [r for r in caplog.records if r.name == logger]
     bad = spark.read.parquet(bad_path)
-    for f in bad.inputFiles():
-        with open(f.removeprefix("file:"), "wb") as fh:
-            fh.write(b"not a parquet file")
-    assert spread(bad, "id") is bad
+    (bad_file,) = bad.inputFiles()
+    with open(bad_file.removeprefix("file:"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    with caplog.at_level(logging.WARNING, logger=logger):
+        assert spread(bad, "id") is bad
+    (rec,) = [r for r in caplog.records if r.name == logger]
+    assert rec.levelno == logging.WARNING
+    assert bad_file in rec.getMessage()
