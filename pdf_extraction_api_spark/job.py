@@ -47,9 +47,9 @@ def main(argv: list[str] | None = None) -> int:
                     default=None,
                     help="explicit url-hash salting for skewed layouts")
     ap.add_argument("--arrow-batch", type=_int_at_least(1), default=256,
-                    help="max docs per Arrow batch — lower it for "
-                         "corpora with multi-MB documents so a batch "
-                         "of html payloads stays within executor memory")
+                    help="max docs per Arrow batch; a batch also closes "
+                         "at 256 KiB of input, whichever comes first, so "
+                         "multi-MB documents need no lower value")
     ap.add_argument("--stats", action="store_true",
                     help="print run statistics JSON to stdout")
     ap.add_argument("--compact", action="store_true",
@@ -92,6 +92,9 @@ def main(argv: list[str] | None = None) -> int:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(args.arrow_batch))
+        # the kernel's transient heap grows with a batch's html bytes
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                str(256 << 10))
         .getOrCreate()
     )
     cat = SnapshotCatalog(args.warehouse)

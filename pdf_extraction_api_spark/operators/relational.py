@@ -1028,12 +1028,10 @@ GROUP BY user_id, session_no
 
 
 def ev_tumbling(spark, sf):
-    """Tumbling-window rollup with the SAME window() expression the
-    streaming path uses (streaming/stream.py's watermarked agg) — the
-    batch-expressible analog that the oracle can hash-check: per
-    (hour, event_type) counts + value totals. At scale this is one
-    hash agg; the window expression is epoch-aligned so batch and
-    streaming agree on boundaries."""
+    """Tumbling-window rollup: per (hour, event_type) counts + value
+    totals over window(ts, '1 hour'). At scale this is one hash agg;
+    Spark's windows are epoch-aligned, so the oracle's time_bucket
+    starts agree with them on boundaries."""
     e = T(spark, sf, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -1061,9 +1059,7 @@ def ev_hopping(spark, sf):
     windows every 30 minutes, so each event contributes to exactly 2
     overlapping windows. Spark plans the multi-window membership as
     one Expand (factor = size/hop) feeding a single hash agg — no
-    join, no explode of a generated array; the streaming path accepts
-    the identical window(ts, '1 hour', '30 minutes') expression. The
-    oracle reproduces the membership set with a 2-offset lateral off
+    join, no explode of a generated array. The oracle reproduces the membership set with a 2-offset lateral off
     epoch-aligned time_bucket starts (Spark windows are
     epoch-aligned, which is what makes the two agree)."""
     e = T(spark, sf, "events")

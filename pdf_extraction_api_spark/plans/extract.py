@@ -19,9 +19,11 @@ Scale notes (SURVEY.md §4, 100 TB design):
   (url, html); metrics-only consumers must never deserialize html —
   verified in tests via the scan's ReadSchema.
 - The kernel is a UDTF-shaped mapInArrow (1 row in → 1 row out with
-  nested arrays); Arrow batch size is bounded by
-  `spark.sql.execution.arrow.maxRecordsPerBatch` so a batch of
-  multi-KB html payloads fits executor memory.
+  nested arrays); an Arrow batch closes at whichever bound it hits
+  first, `spark.sql.execution.arrow.maxRecordsPerBatch` (rows) or
+  `spark.sql.execution.arrow.maxBytesPerBatch` (bytes; job.py sets
+  256 KiB), so a batch of html payloads fits executor memory however
+  large the documents are and the kernel's transient heap stays small.
 """
 
 from __future__ import annotations

@@ -142,29 +142,32 @@ def test_split_whitespace_equals_regex_ws():
 
 def test_duplicate_bodies_memoized_with_correct_urls():
     """Exact-duplicate html under different urls: the per-worker memo
-    must reuse the parsed body (same object identity for the nested
-    results) while every output record keeps ITS OWN url."""
+    admits the body on its second sighting and then reuses the parsed
+    body (same object identity for the nested results) while every
+    output record keeps ITS OWN url."""
     from pdf_extraction_api_spark.kernel import batch as B
 
     B._RESULT_MEMO.clear()
+    B._FIRST_SEEN.clear()
     html = (b"<body><p>Shared body long enough to be content.</p>"
             b'<table border="1"><tr><th>a</th><th>b</th></tr>'
             b"<tr><td>1</td><td>2</td></tr></table></body>")
-    recs, _, _ = B.kernel_batch(["u1", "u2", "u3"], [html] * 3)
-    assert [r[0] for r in recs] == ["u1", "u2", "u3"]
-    assert len(B._RESULT_MEMO) == 1  # one body parsed once
-    r0, r1, r2 = recs
-    assert r0[3] is r1[3] is r2[3]  # memo hit: shared read-only tables
-    assert r0[4] is r1[4] is r2[4]  # ... and packed spans
-    assert B.record_dict(r1) == extract_one("u2", html)
+    recs, _, _ = B.kernel_batch(["u1", "u2", "u3", "u4"], [html] * 4)
+    assert [r[0] for r in recs] == ["u1", "u2", "u3", "u4"]
+    assert len(B._RESULT_MEMO) == 1  # one body memoized once
+    _, r1, r2, r3 = recs  # r1 is the admitted record, r2/r3 memo hits
+    assert r1[3] is r2[3] is r3[3]  # memo hit: shared read-only tables
+    assert r1[4] is r2[4] is r3[4]  # ... and packed spans
+    assert B.record_dict(r2) == extract_one("u3", html)
 
 
 def test_memo_skips_mega_docs():
     from pdf_extraction_api_spark.kernel import batch as B
 
     B._RESULT_MEMO.clear()
+    B._FIRST_SEEN.clear()
     mega = b"<p>" + b"word " * (B._RESULT_MEMO_MAX_DOC // 5 + 10) + b"</p>"
-    B.kernel_batch(["m"], [mega])
+    B.kernel_batch(["m", "m2"], [mega, mega])  # 2nd sighting admits
     assert len(B._RESULT_MEMO) == 0
 
 
@@ -176,11 +179,14 @@ def test_memo_byte_budget_evicts_fifo():
     from pdf_extraction_api_spark.kernel import batch as B
 
     B._RESULT_MEMO.clear()
+    B._FIRST_SEEN.clear()
     B._memo_bytes = 0
     try:
         body = 200 << 10  # within the per-doc cap
         for i in range(300):  # 300 x 200 KiB >> 32 MiB budget
-            B.memo_put(i.to_bytes(4, "big") * (body // 4), (i,))
+            key = i.to_bytes(4, "big") * (body // 4)
+            B.memo_put(key, (i,))  # first sighting: not admitted
+            B.memo_put(key, (i,))
         assert B._memo_bytes <= B._RESULT_MEMO_MAX_BYTES
         assert len(B._RESULT_MEMO) < 300
         # exact accounting: recompute from scratch
@@ -190,7 +196,26 @@ def test_memo_byte_budget_evicts_fifo():
         assert not any(v[0] == 0 for v in B._RESULT_MEMO.values())
     finally:
         B._RESULT_MEMO.clear()
+        B._FIRST_SEEN.clear()
         B._memo_bytes = 0
+
+
+def test_memo_skips_one_hit_bodies():
+    """More distinct bodies than the first-sighting FIFO holds, each
+    seen once: none enters the memo and the FIFO stays within its cap."""
+    from pdf_extraction_api_spark.kernel import batch as B
+
+    B._RESULT_MEMO.clear()
+    B._FIRST_SEEN.clear()
+    B._memo_bytes = 0
+    try:
+        for i in range(B._FIRST_SEEN_CAP + 500):
+            B.memo_put(b"<p>%d</p>" % i, (i,))
+        assert len(B._RESULT_MEMO) == 0
+        assert B._memo_bytes == 0
+        assert len(B._FIRST_SEEN) <= B._FIRST_SEEN_CAP
+    finally:
+        B._FIRST_SEEN.clear()
 
 
 def test_columnar_assembly_matches_from_pylist(monkeypatch):
@@ -232,7 +257,8 @@ def test_columnar_assembly_matches_from_pylist(monkeypatch):
             "<tr><td>2,5 \u20ac</td><td>\u00a530</td></tr>"
             "</table></body></html>").encode("utf-8")),
         ("edge://raises", b"<p>raise me</p>"),
-        ("edge://dup", rows[3]["html"]),  # memo hit, different url
+        ("edge://dup", rows[3]["html"]),  # admitted on 2nd sighting
+        ("edge://dup2", rows[3]["html"]),  # memo hit, different url
     ]
     urls = [u for u, _ in docs]
     htmls = [h for _, h in docs]
@@ -242,17 +268,20 @@ def test_columnar_assembly_matches_from_pylist(monkeypatch):
         names=["url", "html", "lang"])
 
     B._RESULT_MEMO.clear()
+    B._FIRST_SEEN.clear()
     try:
         (out, empty) = list(_make_kernel(("lang",))(
             iter([rb, rb.slice(0, 0)])))
     finally:
         B._RESULT_MEMO.clear()
+        B._FIRST_SEEN.clear()
 
-    expected = [extract_one(u, h) for u, h in docs[:-2]] + [
+    expected = [extract_one(u, h) for u, h in docs[:-3]] + [
         {"url": "edge://raises", "n_pages": 0, "extracted_text": b"",
          "tables": [], "spans": [], "n_tables": 0, "n_content_spans": 0,
          "error": "RuntimeError: injected"},
         extract_one("edge://dup", rows[3]["html"]),
+        extract_one("edge://dup2", rows[3]["html"]),
     ]
     schema = B._arrow_result_schema()
     want = pa.RecordBatch.from_pylist(expected, schema=schema)
@@ -300,7 +329,8 @@ def test_kernel_worker_never_imports_pandas(tmp_path):
         "    batches = [f.get_batch(i)"
         " for i in range(f.num_record_batches)]\n"
         "rows = sum(b.num_rows for b in _make_kernel(())(iter(batches)))\n"
-        "print(rows, 'pandas' in sys.modules)\n"
+        "from pdf_extraction_api_spark.kernel.batch import _RESULT_MEMO\n"
+        "print(rows, 'pandas' in sys.modules, len(_RESULT_MEMO))\n"
     )
     # `python -c` puts the working directory first on sys.path
     res = subprocess.run(
@@ -308,4 +338,6 @@ def test_kernel_worker_never_imports_pandas(tmp_path):
         cwd=Path(__file__).resolve().parents[1],
         capture_output=True, text=True, timeout=300)
     assert res.returncode == 0, res.stderr
-    assert res.stdout.split() == ["200", "False"]
+    # 190 distinct bodies, 5 of them recurring x3: only those 5 are
+    # memoized (one-hit bodies are never admitted)
+    assert res.stdout.split() == ["200", "False", "5"]

@@ -22,6 +22,9 @@ def test_job_main_with_resume(spark, tmp_path):
     wh = str(tmp_path / "wh")
     assert main(["--pages", PAGES, "--warehouse", wh,
                  "--run-id", "r1"]) == 0
+    # kernel input batches are bounded by bytes as well as rows
+    assert spark.conf.get(
+        "spark.sql.execution.arrow.maxBytesPerBatch") == "262144"
     cat = SnapshotCatalog(wh)
     results = cat.read(spark, "results")
     assert results.columns == RESULT_SCHEMA.fieldNames()

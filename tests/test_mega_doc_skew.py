@@ -90,9 +90,11 @@ def test_memo_excludes_mega_docs():
     big = _mega_html(kb._RESULT_MEMO_MAX_DOC + 1024, seed=3)
     assert len(big) > kb._RESULT_MEMO_MAX_DOC
     kb._RESULT_MEMO.clear()
-    # big repeated: recompute, not cache
-    recs, _, _ = kb.kernel_batch(["u1", "u2", "u3"], [small, big, big])
-    assert len(recs) == 3
+    kb._FIRST_SEEN.clear()
+    # big repeated: recompute, not cache; small seen twice: admitted
+    recs, _, _ = kb.kernel_batch(["u1", "u2", "u3", "u4"],
+                                 [small, big, big, small])
+    assert len(recs) == 4
     assert all(r[-1] is None for r in recs)
     assert small in kb._RESULT_MEMO
     assert big not in kb._RESULT_MEMO
