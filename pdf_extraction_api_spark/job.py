@@ -7,7 +7,11 @@
         [--resume] [--salt-partitions N] [--stats]
 
 One DataFrame plan per run: scan → [resume anti-join] → kernel →
-results snapshot + audit snapshot (both atomic manifest commits).
+results snapshot, whose atomic manifest commit is the run's one commit
+point (per-document lineage rides in the same data files) → audit
+snapshot derived from the committed files. Every run first derives the
+audit of any committed run that lacks one (a run killed between the two
+commits), in maintenance modes and when there is nothing to do too.
 Deterministic: run twice with --resume and the second run is a no-op.
 """
 
@@ -63,7 +67,8 @@ def main(argv: list[str] | None = None) -> int:
                     help="file count --compact aims for")
     ap.add_argument("--table", default="results",
                     help="table the maintenance modes operate on "
-                         "(e.g. 'results' or 'audit')")
+                         "(e.g. 'results' or 'audit'; results' hidden "
+                         "lineage columns carry through --compact)")
     ap.add_argument("--vacuum-grace", type=_int_at_least(0), default=900,
                     help="seconds a data file must be old before "
                          "--vacuum may reclaim it (in-flight append "
@@ -78,9 +83,9 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from pdf_extraction_api_spark.plans.extract import (
-        LINEAGE_COLS,
-        audit_metrics,
+        commit_run,
         load_pages,
+        repair_audits,
         resume_filter,
         run_extraction,
         run_stats,
@@ -98,6 +103,7 @@ def main(argv: list[str] | None = None) -> int:
         .getOrCreate()
     )
     cat = SnapshotCatalog(args.warehouse)
+    repair_audits(spark, cat)
 
     if args.compact or args.vacuum:
         if args.compact:
@@ -127,19 +133,14 @@ def main(argv: list[str] | None = None) -> int:
         print("nothing to do (all urls committed)")
         return 0
 
-    results = run_extraction(
-        pages, salt_partitions=args.salt_partitions, with_lineage=True)
-    results = results.cache()  # one kernel pass feeds both sinks
-    try:
-        cat.append(results.drop(*LINEAGE_COLS), "results",
-                   run_id=args.run_id)
-        cat.append(audit_metrics(results, args.run_id), "audit",
-                   run_id=args.run_id)
-        if args.stats:
-            row = run_stats(results).collect()[0]
-            print(json.dumps(row.asDict(recursive=True), default=str))
-    finally:
-        results.unpersist()
+    commit_run(cat, run_extraction(
+        pages, salt_partitions=args.salt_partitions, with_lineage=True),
+        args.run_id)
+    if args.stats:
+        # over the committed files: the kernel runs once per job
+        committed = cat.read_run(spark, "results", args.run_id)
+        row = run_stats(committed).collect()[0]
+        print(json.dumps(row.asDict(recursive=True), default=str))
     return 0
 
 

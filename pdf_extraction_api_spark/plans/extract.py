@@ -4,7 +4,8 @@ Replaces the reference's HTTP→subprocess→threadpool→filesystem pipeline
 (SURVEY.md §3.1) with ONE DataFrame plan:
 
     read pages → [resume anti-join J4] → mapInArrow(extract_kernel)
-    → results (+ per-partition lineage via groupBy over kernel counters)
+    → commit_run: results (lineage in the same files, one commit)
+    → per-partition audit derived from the committed files
 
 Scale notes (SURVEY.md §4, 100 TB design):
 
@@ -33,9 +34,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..kernel.batch import RESULT_SCHEMA
+from ..sources.catalog import SnapshotCatalog, hide
 
-# per-document lineage the kernel appends to RESULT_SCHEMA; the audit
-# is built from these and committed results never carry them
+# per-document lineage the kernel appends to RESULT_SCHEMA; committed
+# results keep it as hidden columns, and the audit is built from it
 LINEAGE_COLS = ("partition_id", "bytes_in", "kernel_us")
 
 KERNEL_SCHEMA = StructType(
@@ -198,6 +200,40 @@ def audit_metrics(results: DataFrame, run_id: str) -> DataFrame:
         )
         .withColumn("run_id", F.lit(run_id))
     )
+
+
+def commit_run(cat: SnapshotCatalog, results: DataFrame, run_id: str,
+               table: str = "results",
+               audit_table: str = "audit") -> None:
+    """The one path from kernel output (`run_extraction` with lineage)
+    to the catalog. The kernel runs exactly once, inside the results
+    append, which stores LINEAGE_COLS as hidden columns next to the
+    rows: its manifest rename is the run's only commit point. The audit
+    is then derived from the committed files (repair_audits), so a
+    crash after the commit loses nothing a later run cannot rebuild."""
+    cat.append(hide(results, LINEAGE_COLS), table, run_id=run_id)
+    repair_audits(results.sparkSession, cat, table, audit_table,
+                  current=run_id)
+
+
+def repair_audits(spark: SparkSession, cat: SnapshotCatalog,
+                  table: str = "results", audit_table: str = "audit",
+                  current: str | None = None) -> None:
+    """Append the audit of every run committed to `table` whose audit
+    snapshot is missing, computed by audit_metrics over that run's
+    committed files; prints one line per run other than `current`.
+    A manifest comparison when nothing is missing: no Spark job runs."""
+    audited = set(cat.committed_run_ids(audit_table))
+    for m in cat.snapshots(table):
+        rid = m["run_id"]
+        if m.get("full_snapshot") or rid in audited \
+                or not set(LINEAGE_COLS) <= set(m.get("hidden", ())):
+            continue  # a compaction, audited, or committed without lineage
+        committed = cat.read_run(spark, table, rid)
+        cat.append(audit_metrics(committed, rid), audit_table, run_id=rid)
+        if rid != current:
+            print(f"repaired missing {audit_table!r} snapshot of run "
+                  f"{rid!r} from its committed {table!r} files")
 
 
 def run_stats(results: DataFrame) -> DataFrame:

@@ -12,11 +12,18 @@ Layout per table directory:
     <root>/<table>/manifest-<seq>-<run_id>.json   (atomic rename last)
 
 A snapshot is visible iff its manifest exists; manifests are written to
-a temp name and `os.replace`d (atomic on POSIX). Readers take the
-manifest with the highest sequence number and read exactly the files it
-lists. A killed run leaves data files but no manifest → invisible →
-idempotent re-run (exactly-once per url together with the J4 resume
-anti-join).
+a temp name and `os.replace`d (atomic on POSIX) — that rename is the
+commit point, and the only one. Readers take the manifest with the
+highest sequence number and read exactly the files it lists. A killed
+run leaves data files but no manifest → invisible → idempotent re-run
+(exactly-once per url together with the J4 resume anti-join).
+
+Hidden columns: a column flagged with `hide()` is written into the data
+files and listed under the manifest's "hidden" key. `read()` projects
+it away, `read_run()` (one run's files, e.g. to derive a run's audit
+from its committed rows) keeps it, and `compact()` carries it into the
+rewrite. Results keep their per-document lineage this way, in the same
+files and under the same commit as the rows it describes.
 """
 
 from __future__ import annotations
@@ -24,11 +31,24 @@ from __future__ import annotations
 import json
 import os
 import re
+import socket
 import time
 import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+# field-metadata flag append() turns into the manifest's "hidden" list;
+# a flag on the DataFrame rather than an append() parameter, so that
+# append(df, table, run_id) keeps the signature its wrappers rely on
+HIDDEN = "snapshot_catalog.hidden"
+
+
+def hide(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    """Flag `cols` so that append() stores them but read() omits them."""
+    for c in cols:
+        df = df.withMetadata(c, {HIDDEN: True})
+    return df
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -55,6 +75,10 @@ class SnapshotCatalog:
             return []
         return sorted(tdir.glob("manifest-*.json"))
 
+    def snapshots(self, table: str) -> list[dict]:
+        """Every committed manifest of the table, oldest first."""
+        return [json.loads(m.read_text()) for m in self._manifests(table)]
+
     def last_snapshot(self, table: str) -> dict | None:
         ms = self._manifests(table)
         if not ms:
@@ -62,10 +86,7 @@ class SnapshotCatalog:
         return json.loads(ms[-1].read_text())
 
     def committed_run_ids(self, table: str) -> list[str]:
-        return [
-            json.loads(m.read_text())["run_id"]
-            for m in self._manifests(table)
-        ]
+        return [m["run_id"] for m in self.snapshots(table)]
 
     def append(self, df: DataFrame, table: str, run_id: str) -> dict:
         """Write data files, then commit atomically via manifest rename.
@@ -78,6 +99,9 @@ class SnapshotCatalog:
         rows would silently never land otherwise). Without the no-op,
         the mode("overwrite") below would delete the part files the
         earlier manifest references and dangle every subsequent read().
+
+        Columns flagged by hide() are written unflagged and listed in
+        the manifest's "hidden" key.
         """
         tdir = self._tdir(table)
         prior = self._manifest_for(tdir, run_id)
@@ -88,6 +112,10 @@ class SnapshotCatalog:
                     f"commit on {table!r}; appending under it would be "
                     "silently dropped — pick a distinct run_id")
             return prior
+        hidden = [f.name for f in df.schema.fields
+                  if f.metadata.get(HIDDEN)]
+        for c in hidden:  # the flag is the manifest's, not the files'
+            df = df.withMetadata(c, {})
         data_dir = tdir / "data" / run_id
         df.write.mode("overwrite").parquet(str(data_dir))
         files = sorted(
@@ -104,6 +132,8 @@ class SnapshotCatalog:
                 "parent": prev["run_id"] if prev else None,
                 "committed_at_unix": int(time.time()),
             }
+            if hidden:
+                manifest["hidden"] = hidden
             return self._commit(tdir, manifest)
 
     @staticmethod
@@ -128,12 +158,27 @@ class SnapshotCatalog:
         os.replace(tmp, final)  # atomic commit point
         return manifest
 
+    def _lock_is_stale(self, lock: Path) -> bool:
+        """A lock holds "<host> <pid> <time>". It is stale when its
+        holder ran on this host and has exited, or — for a holder on
+        another host, or a lock that cannot be parsed — when it is
+        older than LOCK_STALE."""
+        try:
+            host, pid, _ = lock.read_text().split()
+            if host == socket.gethostname():
+                os.kill(int(pid), 0)  # signal 0: existence check only
+        except ProcessLookupError:
+            return True
+        except (OSError, ValueError):
+            pass  # alive under another user, gone, or unparseable
+        return time.time() - lock.stat().st_mtime > self.LOCK_STALE
+
     def _commit_lock(self, tdir: Path):
         """Exclusive inter-process lock for the [decide sequence →
         rename manifest] window. O_EXCL create is atomic on POSIX;
-        a lock older than LOCK_STALE (a crashed committer) is broken.
-        Sequence numbers are therefore unique even with concurrent
-        append/compact writers."""
+        a stale lock (a crashed committer, see _lock_is_stale) is
+        broken. Sequence numbers are therefore unique even with
+        concurrent append/compact writers."""
         import contextlib
 
         lock = tdir / ".commit.lock"
@@ -145,13 +190,13 @@ class SnapshotCatalog:
             while True:
                 try:
                     fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    os.write(fd, f"{os.getpid()} {time.time()}".encode())
+                    os.write(fd, f"{socket.gethostname()} {os.getpid()} "
+                                 f"{time.time()}".encode())
                     os.close(fd)
                     break
                 except FileExistsError:
                     try:
-                        if time.time() - lock.stat().st_mtime > \
-                                self.LOCK_STALE:
+                        if self._lock_is_stale(lock):
                             # claim the break atomically: rename wins
                             # exactly once — a plain unlink could race
                             # another breaker and delete the FRESH
@@ -207,12 +252,12 @@ class SnapshotCatalog:
         pinned = self.last_snapshot(table)
         if pinned is None:
             return None
-        current = self.read(spark, table, as_of=pinned["sequence"])
-        if current is None:
+        paths, hidden = self._read_set(table, as_of=pinned["sequence"])
+        if not paths:
             return None
         data_dir = tdir / "data" / run_id
-        current.coalesce(target_files).write.mode("overwrite").parquet(
-            str(data_dir))
+        spark.read.parquet(*paths).coalesce(target_files).write.mode(
+            "overwrite").parquet(str(data_dir))
         files = sorted(
             str(p.relative_to(tdir)) for p in data_dir.glob("*.parquet"))
         with self._commit_lock(tdir):
@@ -231,6 +276,8 @@ class SnapshotCatalog:
                 "committed_at_unix": int(time.time()),
                 "full_snapshot": True,  # supersedes earlier manifests
             }
+            if hidden:
+                manifest["hidden"] = hidden
             return self._commit(tdir, manifest)
 
     def vacuum(self, table: str, *,
@@ -308,29 +355,47 @@ class SnapshotCatalog:
                 pass  # a writer recreated it concurrently — leave it
         return deleted
 
-    def read(self, spark: SparkSession, table: str,
-             as_of: int | None = None) -> DataFrame | None:
-        """Read the current table: the union of manifests since (and
-        including) the latest full snapshot — append manifests add
-        files, a full_snapshot manifest (compaction) replaces
-        everything before it. Uncommitted data files are never read.
-        `as_of` pins the read to manifests with sequence <= as_of
-        (time travel; compact() uses it so its rewrite matches the
-        snapshot it validates against at commit time)."""
+    def _read_set(self, table: str, as_of: int | None = None
+                  ) -> tuple[list[str], list[str]]:
+        """(data file paths, hidden columns) of the current table: the
+        union of manifests since (and including) the latest full
+        snapshot — append manifests add files, a full_snapshot manifest
+        (compaction) replaces everything before it. `as_of` pins it to
+        manifests with sequence <= as_of."""
         tdir = self._tdir(table)
         paths: list[str] = []
         seen: set[str] = set()
-        for m in self._manifests(table):
-            info = json.loads(m.read_text())
+        hidden: list[str] = []
+        for info in self.snapshots(table):
             if as_of is not None and info["sequence"] > as_of:
                 continue
             if info.get("full_snapshot"):
                 paths.clear()
                 seen.clear()
+                hidden.clear()
             for f in info["files"]:
                 if f not in seen:
                     seen.add(f)
                     paths.append(str(tdir / f))
+            hidden += [c for c in info.get("hidden", ()) if c not in hidden]
+        return paths, hidden
+
+    def read(self, spark: SparkSession, table: str,
+             as_of: int | None = None) -> DataFrame | None:
+        """Read the current table (see _read_set) without its hidden
+        columns. Uncommitted data files are never read. `as_of` pins
+        the read to manifests with sequence <= as_of (time travel)."""
+        paths, hidden = self._read_set(table, as_of)
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return spark.read.parquet(*paths).drop(*hidden)
+
+    def read_run(self, spark: SparkSession, table: str,
+                 run_id: str) -> DataFrame | None:
+        """The files one run committed, hidden columns included; None
+        when the run has no manifest."""
+        tdir = self._tdir(table)
+        info = self._manifest_for(tdir, run_id)
+        if info is None:
+            return None
+        return spark.read.parquet(*(str(tdir / f) for f in info["files"]))

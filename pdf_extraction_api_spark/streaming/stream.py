@@ -9,16 +9,19 @@ the Spark streaming checkpoint (source offsets) + the catalog's atomic
 manifest commit; a re-run after a crash replays only uncommitted
 microbatches.
 
-Each microbatch commits the shapes `job.py` commits: results with
-exactly RESULT_SCHEMA's columns (lineage columns dropped, nested
-tables/spans kept) and the per-partition audit.
+Each microbatch commits through `commit_run`, the function `job.py`
+commits through: one results snapshot (RESULT_SCHEMA's columns to
+readers, lineage hidden in the same files, nested tables/spans kept)
+is the batch's commit point, and the per-partition audit in
+`{table}_audit` is derived from it — for this batch and for any earlier
+batch whose audit a crash lost.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.extract import LINEAGE_COLS, audit_metrics, run_extraction
+from ..plans.extract import commit_run, run_extraction
 from ..sources.catalog import SnapshotCatalog
 
 
@@ -38,18 +41,10 @@ def start_extraction_stream(
     )
 
     def commit_batch(batch_df: DataFrame, batch_id: int):
-        run_id = f"batch-{batch_id:06d}"
-        results = run_extraction(batch_df, with_lineage=True).cache()
-        try:
-            catalog.append(results.drop(*LINEAGE_COLS), table,
-                           run_id=run_id)
-            # per-partition lineage for the streaming path too
-            # (north_rule); append is idempotent per run_id, so a
-            # crash-replayed batch commits neither table twice
-            catalog.append(audit_metrics(results, run_id),
-                           f"{table}_audit", run_id=run_id)
-        finally:
-            results.unpersist()
+        # append is idempotent per run_id, so a crash-replayed batch
+        # commits neither table twice
+        commit_run(catalog, run_extraction(batch_df, with_lineage=True),
+                   f"batch-{batch_id:06d}", table, f"{table}_audit")
 
     return (
         stream.writeStream.foreachBatch(commit_batch)

@@ -279,6 +279,33 @@ def test_commit_lock_stale_break_and_contention(spark, tmp_path):
     assert sorted(results) == list(range(2, 10))  # unique, gapless
 
 
+def test_commit_lock_breaks_dead_local_holder_at_once(spark, tmp_path):
+    """A fresh lock whose holder ran on this host and has exited is
+    broken at once; a fresh lock from another host still waits for the
+    age rule (its holder's pid means nothing here)."""
+    import socket
+    import subprocess
+    import time
+
+    cat = _cat(tmp_path, "wh")
+    tdir = tmp_path / "wh" / "t"
+    tdir.mkdir(parents=True)
+    lock = tdir / ".commit.lock"
+    dead = subprocess.Popen(["true"])
+    dead.wait()  # reaped: its pid names no live process
+    lock.write_text(f"{socket.gethostname()} {dead.pid} {time.time()}")
+    t0 = time.monotonic()
+    cat.append(_df(spark, [("a", 1)]), "t", run_id="r1")
+    assert time.monotonic() - t0 < cat.LOCK_TIMEOUT
+    assert not lock.exists()
+
+    lock.write_text(f"not-{socket.gethostname()} {dead.pid} {time.time()}")
+    cat.LOCK_TIMEOUT = 0.5
+    with pytest.raises(TimeoutError):
+        cat.append(_df(spark, [("b", 2)]), "t", run_id="r2")
+    assert lock.exists()
+
+
 def test_incremental_dedup_probes_persisted_catalog(spark, tmp_path):
     """The dd_incremental production seam, end-to-end: historical md5
     hashes and LSH band signatures are APPENDED to a SnapshotCatalog

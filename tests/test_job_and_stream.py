@@ -39,6 +39,26 @@ def test_job_main_with_resume(spark, tmp_path):
     assert cat.read(spark, "results").count() == 200
 
 
+def test_job_main_runs_kernel_once(spark, tmp_path, capsys):
+    """One job.main, one kernel pass: the results write runs the
+    kernel, and the audit and --stats read the committed files (no
+    cache, so a second consumer of the kernel plan would re-run it)."""
+    import json
+
+    from perfbench.trace import SqlMetrics, metric_sum
+    from pdf_extraction_api_spark.job import main
+
+    sql = SqlMetrics(spark)
+    assert main(["--pages", PAGES, "--warehouse", str(tmp_path / "wh"),
+                 "--run-id", "once", "--stats"]) == 0
+    kernel_rows = metric_sum(
+        sql.new_executions(), "number of output rows",
+        node_filter=lambda n: n["name"].startswith("MapInArrow"))
+    assert kernel_rows == 200
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["documents"] == 200
+
+
 def test_job_rejects_out_of_range_ints_with_usage(tmp_path, capsys):
     """Count and size flags exit 2 with usage at parse time, before any
     Spark import: --arrow-batch <= 0 would lift the per-batch memory
