@@ -209,20 +209,24 @@ def commit_run(cat: SnapshotCatalog, results: DataFrame, run_id: str,
     to the catalog. The kernel runs exactly once, inside the results
     append, which stores LINEAGE_COLS as hidden columns next to the
     rows: its manifest rename is the run's only commit point. The audit
-    is then derived from the committed files (repair_audits), so a
-    crash after the commit loses nothing a later run cannot rebuild."""
+    is then derived from the committed files, so a crash after the
+    commit loses nothing a later run cannot rebuild (repair_audits)."""
     cat.append(hide(results, LINEAGE_COLS), table, run_id=run_id)
-    repair_audits(results.sparkSession, cat, table, audit_table,
-                  current=run_id)
+    committed = cat.read_run(results.sparkSession, table, run_id)
+    if committed is not None:  # None: a replay of a vacuumed run
+        cat.append(audit_metrics(committed, run_id), audit_table,
+                   run_id=run_id)
 
 
 def repair_audits(spark: SparkSession, cat: SnapshotCatalog,
-                  table: str = "results", audit_table: str = "audit",
-                  current: str | None = None) -> None:
+                  table: str = "results",
+                  audit_table: str = "audit") -> None:
     """Append the audit of every run committed to `table` whose audit
     snapshot is missing, computed by audit_metrics over that run's
-    committed files; prints one line per run other than `current`.
-    A manifest comparison when nothing is missing: no Spark job runs."""
+    committed files; prints one line per run. A manifest comparison
+    when nothing is missing: no Spark job runs. A run whose files a
+    compaction superseded and vacuum() reclaimed cannot be audited any
+    more; it is skipped with a warning."""
     audited = set(cat.committed_run_ids(audit_table))
     for m in cat.snapshots(table):
         rid = m["run_id"]
@@ -230,10 +234,14 @@ def repair_audits(spark: SparkSession, cat: SnapshotCatalog,
                 or not set(LINEAGE_COLS) <= set(m.get("hidden", ())):
             continue  # a compaction, audited, or committed without lineage
         committed = cat.read_run(spark, table, rid)
+        if committed is None:
+            print(f"warning: cannot repair the missing {audit_table!r} "
+                  f"snapshot of run {rid!r}: its {table!r} files were "
+                  "vacuumed after a compaction")
+            continue
         cat.append(audit_metrics(committed, rid), audit_table, run_id=rid)
-        if rid != current:
-            print(f"repaired missing {audit_table!r} snapshot of run "
-                  f"{rid!r} from its committed {table!r} files")
+        print(f"repaired missing {audit_table!r} snapshot of run "
+              f"{rid!r} from its committed {table!r} files")
 
 
 def run_stats(results: DataFrame) -> DataFrame:

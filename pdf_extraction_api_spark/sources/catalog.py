@@ -8,15 +8,19 @@ snapshot reads when the jar exists — the call sites don't change.
 
 Layout per table directory:
 
-    <root>/<table>/data/<run_id>/part-*.parquet   (written first)
-    <root>/<table>/manifest-<seq>-<run_id>.json   (atomic rename last)
+    <root>/<table>/data/<run_id>/<attempt>/part-*.parquet   (written first)
+    <root>/<table>/manifest-<seq>-<run_id>.json             (atomic rename last)
 
 A snapshot is visible iff its manifest exists; manifests are written to
 a temp name and `os.replace`d (atomic on POSIX) — that rename is the
 commit point, and the only one. Readers take the manifest with the
 highest sequence number and read exactly the files it lists. A killed
 run leaves data files but no manifest → invisible → idempotent re-run
-(exactly-once per url together with the J4 resume anti-join).
+(exactly-once per url together with the J4 resume anti-join). Every
+write goes to a fresh attempt directory, and the run id is re-checked
+under the commit lock, so two writers of one run id never touch each
+other's files: the first manifest wins, the loser's files are orphans
+for vacuum().
 
 Hidden columns: a column flagged with `hide()` is written into the data
 files and listed under the manifest's "hidden" key. `read()` projects
@@ -102,27 +106,26 @@ class SnapshotCatalog:
 
         Columns flagged by hide() are written unflagged and listed in
         the manifest's "hidden" key.
+
+        Each call writes its own attempt directory and re-checks the
+        run_id under the commit lock, so concurrent appends of one
+        run_id commit exactly one manifest and delete nothing.
         """
         tdir = self._tdir(table)
-        prior = self._manifest_for(tdir, run_id)
+        prior = self._prior(tdir, table, run_id, full_snapshot=False)
         if prior is not None:
-            if prior.get("full_snapshot"):
-                raise ValueError(
-                    f"run_id {run_id!r} was already used by a compaction "
-                    f"commit on {table!r}; appending under it would be "
-                    "silently dropped — pick a distinct run_id")
             return prior
         hidden = [f.name for f in df.schema.fields
                   if f.metadata.get(HIDDEN)]
         for c in hidden:  # the flag is the manifest's, not the files'
             df = df.withMetadata(c, {})
-        data_dir = tdir / "data" / run_id
-        df.write.mode("overwrite").parquet(str(data_dir))
-        files = sorted(
-            str(p.relative_to(tdir))
-            for p in data_dir.glob("*.parquet")
-        )
+        files = self._write_attempt(df, tdir, run_id)
         with self._commit_lock(tdir):
+            # a concurrent writer of this run_id committed first: its
+            # manifest stands, this attempt's files are orphans
+            prior = self._prior(tdir, table, run_id, full_snapshot=False)
+            if prior is not None:
+                return prior
             prev = self.last_snapshot(table)
             seq = (prev["sequence"] + 1) if prev else 1
             manifest = {
@@ -135,6 +138,32 @@ class SnapshotCatalog:
             if hidden:
                 manifest["hidden"] = hidden
             return self._commit(tdir, manifest)
+
+    @staticmethod
+    def _write_attempt(df: DataFrame, tdir: Path, run_id: str) -> list[str]:
+        """Write `df` into a new attempt directory of `run_id`; the
+        written parquet files, relative to `tdir`."""
+        data_dir = tdir / "data" / run_id / uuid.uuid4().hex
+        df.write.parquet(str(data_dir))
+        return sorted(
+            str(p.relative_to(tdir)) for p in data_dir.glob("*.parquet"))
+
+    def _prior(self, tdir: Path, table: str, run_id: str,
+               full_snapshot: bool) -> dict | None:
+        """The committed manifest of `run_id`, if any; a ValueError
+        when it is of the other kind (append vs compaction)."""
+        prior = self._manifest_for(tdir, run_id)
+        if prior is None or bool(prior.get("full_snapshot")) == full_snapshot:
+            return prior
+        if full_snapshot:
+            raise ValueError(
+                f"run_id {run_id!r} was already used by an append "
+                f"commit on {table!r}; pick a distinct maintenance "
+                "run_id")
+        raise ValueError(
+            f"run_id {run_id!r} was already used by a compaction "
+            f"commit on {table!r}; appending under it would be "
+            "silently dropped — pick a distinct run_id")
 
     @staticmethod
     def _manifest_for(tdir: Path, run_id: str) -> dict | None:
@@ -158,14 +187,29 @@ class SnapshotCatalog:
         os.replace(tmp, final)  # atomic commit point
         return manifest
 
+    @staticmethod
+    def _pid_space() -> str | None:
+        """Who can see this process's pid: host, boot and pid
+        namespace. Two processes in the same pid space see each other's
+        pids; None when /proc cannot tell (then no lock is judged by
+        its pid)."""
+        try:
+            boot = Path("/proc/sys/kernel/random/boot_id").read_text()
+            pidns = os.readlink("/proc/self/ns/pid")
+        except OSError:
+            return None
+        return f"{socket.gethostname()}/{boot.strip()}/{pidns}"
+
     def _lock_is_stale(self, lock: Path) -> bool:
-        """A lock holds "<host> <pid> <time>". It is stale when its
-        holder ran on this host and has exited, or — for a holder on
-        another host, or a lock that cannot be parsed — when it is
+        """A lock holds "<pid space> <pid> <time>". It is stale when its
+        holder ran in this pid space and has exited, or — for a holder
+        elsewhere (another host, boot or pid namespace, whose pid means
+        nothing here) or a lock that cannot be parsed — when it is
         older than LOCK_STALE."""
         try:
-            host, pid, _ = lock.read_text().split()
-            if host == socket.gethostname():
+            space, pid, _ = lock.read_text().split()
+            here = self._pid_space()
+            if here is not None and space == here:
                 os.kill(int(pid), 0)  # signal 0: existence check only
         except ProcessLookupError:
             return True
@@ -190,8 +234,8 @@ class SnapshotCatalog:
             while True:
                 try:
                     fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    os.write(fd, f"{socket.gethostname()} {os.getpid()} "
-                                 f"{time.time()}".encode())
+                    os.write(fd, f"{self._pid_space() or '-'} "
+                                 f"{os.getpid()} {time.time()}".encode())
                     os.close(fd)
                     break
                 except FileExistsError:
@@ -241,13 +285,8 @@ class SnapshotCatalog:
         ConcurrentCommitError instead (rerun it; the orphaned rewrite
         files are vacuum()'s job)."""
         tdir = self._tdir(table)
-        prior = self._manifest_for(tdir, run_id)
+        prior = self._prior(tdir, table, run_id, full_snapshot=True)
         if prior is not None:
-            if not prior.get("full_snapshot"):
-                raise ValueError(
-                    f"run_id {run_id!r} was already used by an append "
-                    f"commit on {table!r}; pick a distinct maintenance "
-                    "run_id")
             return prior
         pinned = self.last_snapshot(table)
         if pinned is None:
@@ -255,12 +294,12 @@ class SnapshotCatalog:
         paths, hidden = self._read_set(table, as_of=pinned["sequence"])
         if not paths:
             return None
-        data_dir = tdir / "data" / run_id
-        spark.read.parquet(*paths).coalesce(target_files).write.mode(
-            "overwrite").parquet(str(data_dir))
-        files = sorted(
-            str(p.relative_to(tdir)) for p in data_dir.glob("*.parquet"))
+        files = self._write_attempt(
+            spark.read.parquet(*paths).coalesce(target_files), tdir, run_id)
         with self._commit_lock(tdir):
+            prior = self._prior(tdir, table, run_id, full_snapshot=True)
+            if prior is not None:
+                return prior
             prev = self.last_snapshot(table)
             if prev is None or prev["sequence"] != pinned["sequence"]:
                 raise ConcurrentCommitError(
@@ -303,9 +342,10 @@ class SnapshotCatalog:
           full-snapshot commit that superseded it (committed_at_unix),
           not just its own mtime.
 
-        Sidecars (_SUCCESS, .crc) and emptied run directories of
-        superseded or crashed runs are removed once every data file in
-        the directory is gone. Returns the deleted paths."""
+        Sidecars (_SUCCESS, .crc) and emptied run and attempt
+        directories of superseded or crashed writes are removed once
+        every data file in the directory is gone. Returns the deleted
+        paths."""
         tdir = self._tdir(table)
         live: set[str] = set()
         ever_listed: set[str] = set()
@@ -334,23 +374,23 @@ class SnapshotCatalog:
                 continue  # superseded too recently — reader grace
             p.unlink()
             deleted.append(rel)
-        # second pass: clear sidecars and rmdir run dirs that no
-        # longer hold any parquet data (all deleted above, or a
-        # crashed run whose files aged out) — same time gates apply.
-        for rundir in sorted(data_root.iterdir()):
-            if not rundir.is_dir():
-                continue
-            leftovers = [q for q in rundir.rglob("*") if q.is_file()]
+        # second pass: clear sidecars and rmdir the directories (run
+        # and attempt dirs, deepest first) that no longer hold any
+        # parquet data (all deleted above, or a crashed attempt whose
+        # files aged out) — same time gates apply.
+        dirs = sorted((d for d in data_root.rglob("*") if d.is_dir()),
+                      key=lambda d: len(d.parts), reverse=True)
+        for d in dirs:
+            leftovers = [q for q in d.rglob("*") if q.is_file()]
             if any(q.suffix == ".parquet" for q in leftovers):
                 continue
             if any(q.stat().st_mtime >= cutoff for q in leftovers):
                 continue
             for q in leftovers:
-                rel = str(q.relative_to(tdir))
                 q.unlink()
-                deleted.append(rel)
+                deleted.append(str(q.relative_to(tdir)))
             try:
-                rundir.rmdir()
+                d.rmdir()
             except OSError:
                 pass  # a writer recreated it concurrently — leave it
         return deleted
@@ -393,9 +433,13 @@ class SnapshotCatalog:
     def read_run(self, spark: SparkSession, table: str,
                  run_id: str) -> DataFrame | None:
         """The files one run committed, hidden columns included; None
-        when the run has no manifest."""
+        when the run has no manifest or vacuum() has reclaimed its
+        files (a later compaction superseded them)."""
         tdir = self._tdir(table)
         info = self._manifest_for(tdir, run_id)
         if info is None:
             return None
-        return spark.read.parquet(*(str(tdir / f) for f in info["files"]))
+        paths = [tdir / f for f in info["files"]]
+        if not all(p.exists() for p in paths):
+            return None
+        return spark.read.parquet(*map(str, paths))

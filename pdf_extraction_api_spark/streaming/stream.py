@@ -13,15 +13,15 @@ Each microbatch commits through `commit_run`, the function `job.py`
 commits through: one results snapshot (RESULT_SCHEMA's columns to
 readers, lineage hidden in the same files, nested tables/spans kept)
 is the batch's commit point, and the per-partition audit in
-`{table}_audit` is derived from it — for this batch and for any earlier
-batch whose audit a crash lost.
+`{table}_audit` is derived from it. A stream start first derives the
+audit of any earlier batch whose audit a crash lost.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.extract import commit_run, run_extraction
+from ..plans.extract import commit_run, repair_audits, run_extraction
 from ..sources.catalog import SnapshotCatalog
 
 
@@ -33,7 +33,10 @@ def start_extraction_stream(
     checkpoint_dir: str,
 ):
     """Incremental extraction: each microbatch runs the kernel and
-    commits one catalog snapshot (run_id = batch id)."""
+    commits one catalog snapshot (run_id = batch id). Audits a crash
+    lost before this start are repaired first; a replayed batch
+    re-derives its own."""
+    repair_audits(spark, catalog, table, f"{table}_audit")
     stream = (
         spark.readStream.schema(spark.read.parquet(pages_path).schema)
         .option("maxFilesPerTrigger", "8")

@@ -280,10 +280,11 @@ def test_commit_lock_stale_break_and_contention(spark, tmp_path):
 
 
 def test_commit_lock_breaks_dead_local_holder_at_once(spark, tmp_path):
-    """A fresh lock whose holder ran on this host and has exited is
-    broken at once; a fresh lock from another host still waits for the
+    """A fresh lock whose holder ran in this pid space (host, boot and
+    pid namespace) and has exited is broken at once; a fresh lock from
+    another pid space — another host, or a container on this host with
+    the same hostname but its own pid namespace — still waits for the
     age rule (its holder's pid means nothing here)."""
-    import socket
     import subprocess
     import time
 
@@ -291,19 +292,118 @@ def test_commit_lock_breaks_dead_local_holder_at_once(spark, tmp_path):
     tdir = tmp_path / "wh" / "t"
     tdir.mkdir(parents=True)
     lock = tdir / ".commit.lock"
+    here = cat._pid_space()
+    assert here is not None
     dead = subprocess.Popen(["true"])
     dead.wait()  # reaped: its pid names no live process
-    lock.write_text(f"{socket.gethostname()} {dead.pid} {time.time()}")
+    lock.write_text(f"{here} {dead.pid} {time.time()}")
     t0 = time.monotonic()
     cat.append(_df(spark, [("a", 1)]), "t", run_id="r1")
     assert time.monotonic() - t0 < cat.LOCK_TIMEOUT
     assert not lock.exists()
 
-    lock.write_text(f"not-{socket.gethostname()} {dead.pid} {time.time()}")
+    host, boot, _ = here.split("/")
     cat.LOCK_TIMEOUT = 0.5
-    with pytest.raises(TimeoutError):
-        cat.append(_df(spark, [("b", 2)]), "t", run_id="r2")
-    assert lock.exists()
+    for elsewhere in (f"not-{host}/{boot}/pid:[1]",
+                      f"{host}/{boot}/pid:[1]"):
+        lock.write_text(f"{elsewhere} {dead.pid} {time.time()}")
+        with pytest.raises(TimeoutError):
+            cat.append(_df(spark, [("b", 2)]), "t", run_id="r2")
+        assert lock.exists()
+
+
+def _results_run(spark, cat, run_id, urls):
+    """Commit `urls` to "results" the way commit_run does (lineage
+    hidden), without an audit: a run killed between its two commits."""
+    from pdf_extraction_api_spark.plans.extract import LINEAGE_COLS
+    from pdf_extraction_api_spark.sources.catalog import hide
+
+    df = spark.createDataFrame(
+        [(u, None, 1, i % 2, 10, 5) for i, u in enumerate(urls)],
+        "url STRING, error STRING, n_tables LONG, partition_id LONG, "
+        "bytes_in LONG, kernel_us LONG")
+    cat.append(hide(df, LINEAGE_COLS), "results", run_id=run_id)
+
+
+def test_concurrent_audit_repairs_commit_once(spark, tmp_path):
+    """Two job.main runs can repair the same missing audit at the same
+    moment (say, an extraction and a cron --compact). Both write the
+    audit's data before either commits; each writes its own attempt
+    directory and re-checks the run id under the lock, so exactly one
+    manifest commits, the table reads whole, and the loser's files are
+    orphans that vacuum reclaims."""
+    import os
+    import threading
+    import time
+
+    from pdf_extraction_api_spark.plans.extract import repair_audits
+    from pdf_extraction_api_spark.sources.catalog import SnapshotCatalog
+
+    _results_run(spark, _cat(tmp_path, "wh"), "c1",
+                 [f"u{i}" for i in range(20)])
+    both_written = threading.Barrier(2, timeout=120)
+
+    class Racing(SnapshotCatalog):
+        def _write_attempt(self, df, tdir, run_id):
+            files = super()._write_attempt(df, tdir, run_id)
+            if tdir.name == "audit":
+                both_written.wait()
+            return files
+
+    errors = []
+
+    def repair():
+        try:
+            repair_audits(spark, Racing(str(tmp_path / "wh")))
+        except Exception as exc:  # pragma: no cover
+            errors.append(exc)
+
+    threads = [threading.Thread(target=repair) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    cat = _cat(tmp_path, "wh")
+    assert cat.committed_run_ids("audit") == ["c1"]
+    audit = cat.read(spark, "audit")
+    assert audit.groupBy().sum("input_rows").collect()[0][0] == 20
+    attempts = list((tmp_path / "wh" / "audit" / "data" / "c1").iterdir())
+    assert len(attempts) == 2
+
+    old = time.time() - 3600
+    for p in (tmp_path / "wh" / "audit" / "data").rglob("*"):
+        os.utime(p, (old, old))
+    assert cat.vacuum("audit", grace_seconds=600)
+    assert len(list(
+        (tmp_path / "wh" / "audit" / "data" / "c1").iterdir())) == 1
+    assert cat.read(spark, "audit").groupBy().sum(
+        "input_rows").collect()[0][0] == 20
+
+
+def test_repair_skips_run_vacuumed_after_compaction(spark, tmp_path,
+                                                    capsys):
+    """A run whose audit is missing and whose files a compaction
+    superseded and vacuum reclaimed cannot be audited any more: the
+    repair warns and moves on to the runs it can repair, instead of
+    failing every later job.main or microbatch."""
+    import time
+
+    from pdf_extraction_api_spark.plans.extract import repair_audits
+
+    cat = _cat(tmp_path, "wh")
+    _results_run(spark, cat, "c1", ["a", "b"])
+    cat.compact(spark, "results", run_id="m1")
+    time.sleep(1.1)  # int-second commit stamp vs float cutoff
+    assert cat.vacuum("results", grace_seconds=0)
+    _results_run(spark, cat, "c2", ["c"])
+    repair_audits(spark, cat)
+    out = capsys.readouterr().out
+    assert "cannot repair the missing 'audit' snapshot of run 'c1'" in out
+    assert "repaired missing 'audit' snapshot of run 'c2'" in out
+    assert cat.committed_run_ids("audit") == ["c2"]
+    assert {r.url for r in cat.read(spark, "results").collect()} == {
+        "a", "b", "c"}
 
 
 def test_incremental_dedup_probes_persisted_catalog(spark, tmp_path):
