@@ -50,10 +50,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--salt-partitions", type=_int_at_least(1),
                     default=None,
                     help="explicit url-hash salting for skewed layouts")
-    ap.add_argument("--arrow-batch", type=_int_at_least(1), default=256,
-                    help="max docs per Arrow batch; a batch also closes "
-                         "at 256 KiB of input, whichever comes first, so "
-                         "multi-MB documents need no lower value")
     ap.add_argument("--stats", action="store_true",
                     help="print run statistics JSON to stdout")
     ap.add_argument("--compact", action="store_true",
@@ -83,6 +79,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from pdf_extraction_api_spark.plans.extract import (
+        ARROW_BATCH_CONF,
         commit_run,
         load_pages,
         repair_audits,
@@ -95,11 +92,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = (
         SparkSession.builder.appName(f"spark-extract-{args.run_id}")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
-                str(args.arrow_batch))
-        # the kernel's transient heap grows with a batch's html bytes
-        .config("spark.sql.execution.arrow.maxBytesPerBatch",
-                str(256 << 10))
+        .config(map=ARROW_BATCH_CONF)
         .getOrCreate()
     )
     cat = SnapshotCatalog(args.warehouse)

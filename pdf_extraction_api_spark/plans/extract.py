@@ -20,15 +20,16 @@ Scale notes (SURVEY.md §4, 100 TB design):
   (url, html); metrics-only consumers must never deserialize html —
   verified in tests via the scan's ReadSchema.
 - The kernel is a UDTF-shaped mapInArrow (1 row in → 1 row out with
-  nested arrays); an Arrow batch closes at whichever bound it hits
-  first, `spark.sql.execution.arrow.maxRecordsPerBatch` (rows) or
-  `spark.sql.execution.arrow.maxBytesPerBatch` (bytes; job.py sets
-  256 KiB), so a batch of html payloads fits executor memory however
-  large the documents are and the kernel's transient heap stays small.
+  nested arrays); an Arrow batch closes at whichever bound of
+  ARROW_BATCH_CONF it hits first, rows or bytes, so a batch of html
+  payloads fits executor memory however large the documents are and
+  the kernel's transient heap stays small. job.py's session and every
+  extraction stream run under these bounds.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -46,6 +47,14 @@ KERNEL_SCHEMA = StructType(
 )
 
 _RESULT_COLS = [f.name for f in RESULT_SCHEMA.fields]
+
+# the Arrow batch bounds the kernel runs under: the kernel's transient
+# heap grows with a batch's html bytes, and Spark's defaults (10,000
+# rows, 64 MiB) would let one batch hold thousands of documents
+ARROW_BATCH_CONF = {
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(256 << 10),
+}
 
 
 def _make_kernel(carry: tuple[str, ...]):
@@ -65,7 +74,6 @@ def _make_kernel(carry: tuple[str, ...]):
     up."""
 
     def _kernel(batches):
-        import pyarrow as pa
         from pyspark import TaskContext
 
         from ..kernel.batch import arrow_array, kernel_batch, record_arrays
@@ -140,36 +148,32 @@ EXTRACT_UDF_SCHEMA = ("n_pages INT, extracted_text BINARY, "
 
 
 def register_extract_udf(spark: SparkSession, name: str = "extract_doc"):
-    """Register the extraction kernel as a SQL-callable pandas UDF so
+    """Register the extraction kernel as a SQL-callable Arrow UDF so
     pure-SQL users can run it:  SELECT url, extract_doc(html).* FROM
     pages.  Returns the scalar summary struct (pages, extracted bytes,
     table/span counts, error) — Arrow-batched like the mapInArrow
-    path, same kernel_batch loop, same memo; full nested results
-    (tables/spans) stay on run_extraction, the plan-level surface.
+    path, same kernel_batch loop, same memo, same record_arrays
+    columns; full nested results (tables/spans) stay on
+    run_extraction, the plan-level surface.
 
     The UDF is html-only (url is a pass-through key the caller already
     has), so it composes with any FROM clause — joins, filters and
     column pruning all stay Catalyst-visible around it."""
     from itertools import repeat
 
-    import pandas as pd
-
-    from ..kernel.batch import kernel_batch
-
     udf_cols = ["n_pages", "extracted_text", "n_tables",
                 "n_content_spans", "error"]
     picks = [_RESULT_COLS.index(c) for c in udf_cols]
 
-    def _extract(html):
-        records, _, _ = kernel_batch(repeat(""), html.values)
-        return pd.DataFrame([[r[i] for i in picks] for r in records],
-                            columns=udf_cols)
+    def _extract(html: pa.Array) -> pa.Array:
+        from ..kernel.batch import kernel_batch, record_arrays
 
-    # `from __future__ import annotations` stringifies inline hints
-    # module-wide and pandas_udf can't resolve 'pd.Series' from module
-    # globals (pandas is function-local here) — attach real objects.
-    _extract.__annotations__ = {"html": pd.Series, "return": pd.DataFrame}
-    udf = F.pandas_udf(_extract, EXTRACT_UDF_SCHEMA)
+        records, _, _ = kernel_batch(repeat(""), html.to_pylist())
+        arrays = record_arrays(records)
+        return pa.StructArray.from_arrays(
+            [arrays[i] for i in picks], names=udf_cols)
+
+    udf = F.arrow_udf(_extract, EXTRACT_UDF_SCHEMA)
     spark.udf.register(name, udf)
     return udf
 
@@ -208,7 +212,7 @@ def commit_run(cat: SnapshotCatalog, results: DataFrame, run_id: str,
     """The one path from kernel output (`run_extraction` with lineage)
     to the catalog. The kernel runs exactly once, inside the results
     append, which stores LINEAGE_COLS as hidden columns next to the
-    rows: its manifest rename is the run's only commit point. The audit
+    rows: its manifest commit is the run's only commit point. The audit
     is then derived from the committed files, so a crash after the
     commit loses nothing a later run cannot rebuild (repair_audits)."""
     cat.append(hide(results, LINEAGE_COLS), table, run_id=run_id)

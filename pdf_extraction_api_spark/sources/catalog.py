@@ -9,18 +9,24 @@ snapshot reads when the jar exists — the call sites don't change.
 Layout per table directory:
 
     <root>/<table>/data/<run_id>/<attempt>/part-*.parquet   (written first)
-    <root>/<table>/manifest-<seq>-<run_id>.json             (atomic rename last)
+    <root>/<table>/manifest-<seq>.json                      (created last)
 
-A snapshot is visible iff its manifest exists; manifests are written to
-a temp name and `os.replace`d (atomic on POSIX) — that rename is the
-commit point, and the only one. Readers take the manifest with the
-highest sequence number and read exactly the files it lists. A killed
-run leaves data files but no manifest → invisible → idempotent re-run
-(exactly-once per url together with the J4 resume anti-join). Every
-write goes to a fresh attempt directory, and the run id is re-checked
-under the commit lock, so two writers of one run id never touch each
-other's files: the first manifest wins, the loser's files are orphans
-for vacuum().
+A snapshot is visible iff its manifest exists. A manifest is written to
+a temp file and hard-linked to manifest-<seq>.json, a put-if-absent
+create (Delta Lake's and Iceberg's Hadoop-table commit): the link is the
+commit point, and the only one. It fails when that sequence number is
+taken, so each number has one writer and no reader sees a partial
+manifest; the loser re-reads the history and takes the next number.
+Nothing is held across a commit, so a crash leaves nothing to release:
+at most a `.manifest-*.tmp` that no reader opens. Readers take the
+manifests in sequence order and read exactly the files they list. A
+killed run leaves data files but no manifest → invisible → idempotent
+re-run (exactly-once per url together with the J4 resume anti-join).
+Every write goes to a fresh attempt directory, and the run id is
+re-checked before every link, so two writers of one run id never touch
+each other's files: the first manifest wins, the loser's files are
+orphans for vacuum(). Manifests named manifest-<seq>-<run_id>.json by
+earlier versions still read, and their table's sequence continues.
 
 Hidden columns: a column flagged with `hide()` is written into the data
 files and listed under the manifest's "hidden" key. `read()` projects
@@ -34,8 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
-import socket
 import time
 import uuid
 from pathlib import Path
@@ -59,85 +63,74 @@ class ConcurrentCommitError(RuntimeError):
     """A maintenance commit lost a race with a concurrent append."""
 
 
-class SnapshotCatalog:
-    # commit lock: manifest sequence assignment + rename happen under
-    # an O_EXCL lock file so two writers can never mint the same
-    # sequence number (Iceberg gets this from the catalog's atomic
-    # swap; a plain filesystem needs the explicit mutex)
-    LOCK_TIMEOUT = 60.0
-    LOCK_STALE = 300.0
+def _prior(history: list[dict], table: str, run_id: str,
+           full_snapshot: bool) -> dict | None:
+    """The latest manifest in `history` committed under `run_id`, if
+    any; a ValueError when it is of the other kind (append vs
+    compaction)."""
+    prior = next((m for m in reversed(history) if m["run_id"] == run_id),
+                 None)
+    if prior is None or bool(prior.get("full_snapshot")) == full_snapshot:
+        return prior
+    if full_snapshot:
+        raise ValueError(
+            f"run_id {run_id!r} was already used by an append "
+            f"commit on {table!r}; pick a distinct maintenance run_id")
+    raise ValueError(
+        f"run_id {run_id!r} was already used by a compaction commit on "
+        f"{table!r}; appending under it would be silently dropped — "
+        "pick a distinct run_id")
 
+
+class SnapshotCatalog:
     def __init__(self, root: str):
         self.root = Path(root)
 
     def _tdir(self, table: str) -> Path:
         return self.root / table
 
-    def _manifests(self, table: str) -> list[Path]:
-        tdir = self._tdir(table)
-        if not tdir.exists():
-            return []
-        return sorted(tdir.glob("manifest-*.json"))
-
     def snapshots(self, table: str) -> list[dict]:
-        """Every committed manifest of the table, oldest first."""
-        return [json.loads(m.read_text()) for m in self._manifests(table)]
+        """Every committed manifest of the table, oldest first — the
+        one manifest reader. Manifests named manifest-<seq>-<run_id>.json
+        by earlier versions of this module match the glob and sort
+        by sequence among the current names."""
+        return [json.loads(p.read_text())
+                for p in sorted(self._tdir(table).glob("manifest-*.json"))]
 
     def last_snapshot(self, table: str) -> dict | None:
-        ms = self._manifests(table)
-        if not ms:
-            return None
-        return json.loads(ms[-1].read_text())
+        history = self.snapshots(table)
+        return history[-1] if history else None
 
     def committed_run_ids(self, table: str) -> list[str]:
         return [m["run_id"] for m in self.snapshots(table)]
 
     def append(self, df: DataFrame, table: str, run_id: str) -> dict:
-        """Write data files, then commit atomically via manifest rename.
+        """Write data files, then commit a manifest listing them.
 
         Idempotent per run_id: re-appending an already-committed run_id
         (the foreachBatch crash-replay path — a batch that committed
         but wasn't checkpointed is re-run with the same batch id) is a
         no-op returning the existing manifest — unless that run_id was
         consumed by a COMPACTION, which is an error (the new batch's
-        rows would silently never land otherwise). Without the no-op,
-        the mode("overwrite") below would delete the part files the
-        earlier manifest references and dangle every subsequent read().
+        rows would silently never land otherwise).
 
         Columns flagged by hide() are written unflagged and listed in
         the manifest's "hidden" key.
 
-        Each call writes its own attempt directory and re-checks the
-        run_id under the commit lock, so concurrent appends of one
-        run_id commit exactly one manifest and delete nothing.
+        Each call writes its own attempt directory, and _commit
+        re-checks the run_id before every commit attempt, so concurrent
+        appends of one run_id commit exactly one manifest and delete
+        nothing.
         """
-        tdir = self._tdir(table)
-        prior = self._prior(tdir, table, run_id, full_snapshot=False)
+        prior = _prior(self.snapshots(table), table, run_id, False)
         if prior is not None:
             return prior
         hidden = [f.name for f in df.schema.fields
                   if f.metadata.get(HIDDEN)]
         for c in hidden:  # the flag is the manifest's, not the files'
             df = df.withMetadata(c, {})
-        files = self._write_attempt(df, tdir, run_id)
-        with self._commit_lock(tdir):
-            # a concurrent writer of this run_id committed first: its
-            # manifest stands, this attempt's files are orphans
-            prior = self._prior(tdir, table, run_id, full_snapshot=False)
-            if prior is not None:
-                return prior
-            prev = self.last_snapshot(table)
-            seq = (prev["sequence"] + 1) if prev else 1
-            manifest = {
-                "sequence": seq,
-                "run_id": run_id,
-                "files": files,
-                "parent": prev["run_id"] if prev else None,
-                "committed_at_unix": int(time.time()),
-            }
-            if hidden:
-                manifest["hidden"] = hidden
-            return self._commit(tdir, manifest)
+        files = self._write_attempt(df, self._tdir(table), run_id)
+        return self._commit(table, run_id, files, hidden)
 
     @staticmethod
     def _write_attempt(df: DataFrame, tdir: Path, run_id: str) -> list[str]:
@@ -148,121 +141,56 @@ class SnapshotCatalog:
         return sorted(
             str(p.relative_to(tdir)) for p in data_dir.glob("*.parquet"))
 
-    def _prior(self, tdir: Path, table: str, run_id: str,
-               full_snapshot: bool) -> dict | None:
-        """The committed manifest of `run_id`, if any; a ValueError
-        when it is of the other kind (append vs compaction)."""
-        prior = self._manifest_for(tdir, run_id)
-        if prior is None or bool(prior.get("full_snapshot")) == full_snapshot:
-            return prior
-        if full_snapshot:
-            raise ValueError(
-                f"run_id {run_id!r} was already used by an append "
-                f"commit on {table!r}; pick a distinct maintenance "
-                "run_id")
-        raise ValueError(
-            f"run_id {run_id!r} was already used by a compaction "
-            f"commit on {table!r}; appending under it would be "
-            "silently dropped — pick a distinct run_id")
+    def _commit(self, table: str, run_id: str, files: list[str],
+                hidden: list[str], pinned: int | None = None) -> dict:
+        """Commit `files` as the table's next snapshot; the manifest
+        that stands for `run_id` afterwards. A compaction passes the
+        sequence it `pinned` and commits a full snapshot.
 
-    @staticmethod
-    def _manifest_for(tdir: Path, run_id: str) -> dict | None:
-        """Latest committed manifest for exactly this run_id.
-        Filenames are manifest-<9 digits>-<run_id>.json; the glob
-        candidates are re-checked with an anchored regex because a
-        bare 'manifest-*-{run_id}.json' glob lets '*' absorb
-        '<seq>-<other-prefix>' and match foreign run_ids whose name
-        merely ends with this one (e.g. 'nightly-r1' vs 'r1')."""
-        pat = re.compile(
-            rf"manifest-\d{{9}}-{re.escape(run_id)}\.json\Z")
-        hits = sorted(p for p in tdir.glob(f"manifest-*-{run_id}.json")
-                      if pat.fullmatch(p.name))
-        return json.loads(hits[-1].read_text()) if hits else None
-
-    def _commit(self, tdir, manifest: dict) -> dict:
+        The manifest goes to a temp file, which is hard-linked to
+        manifest-<seq>.json; the link fails when that name exists, so
+        exactly one writer gets each sequence number and a reader never
+        sees a partial manifest. A writer that loses re-reads the
+        history and tries the next number — unless the winner committed
+        this run_id (its manifest stands, this attempt's files are
+        orphans for vacuum()), or, for a compaction, the table moved
+        past the pinned snapshot: committing on top would supersede the
+        newer rows, so that raises ConcurrentCommitError."""
+        tdir = self._tdir(table)
+        full = pinned is not None
         tmp = tdir / f".manifest-{uuid.uuid4().hex}.tmp"
-        tmp.write_text(json.dumps(manifest, indent=1))
-        final = (tdir / f"manifest-{manifest['sequence']:09d}"
-                        f"-{manifest['run_id']}.json")
-        os.replace(tmp, final)  # atomic commit point
-        return manifest
-
-    @staticmethod
-    def _pid_space() -> str | None:
-        """Who can see this process's pid: host, boot and pid
-        namespace. Two processes in the same pid space see each other's
-        pids; None when /proc cannot tell (then no lock is judged by
-        its pid)."""
         try:
-            boot = Path("/proc/sys/kernel/random/boot_id").read_text()
-            pidns = os.readlink("/proc/self/ns/pid")
-        except OSError:
-            return None
-        return f"{socket.gethostname()}/{boot.strip()}/{pidns}"
-
-    def _lock_is_stale(self, lock: Path) -> bool:
-        """A lock holds "<pid space> <pid> <time>". It is stale when its
-        holder ran in this pid space and has exited, or — for a holder
-        elsewhere (another host, boot or pid namespace, whose pid means
-        nothing here) or a lock that cannot be parsed — when it is
-        older than LOCK_STALE."""
-        try:
-            space, pid, _ = lock.read_text().split()
-            here = self._pid_space()
-            if here is not None and space == here:
-                os.kill(int(pid), 0)  # signal 0: existence check only
-        except ProcessLookupError:
-            return True
-        except (OSError, ValueError):
-            pass  # alive under another user, gone, or unparseable
-        return time.time() - lock.stat().st_mtime > self.LOCK_STALE
-
-    def _commit_lock(self, tdir: Path):
-        """Exclusive inter-process lock for the [decide sequence →
-        rename manifest] window. O_EXCL create is atomic on POSIX;
-        a stale lock (a crashed committer, see _lock_is_stale) is
-        broken. Sequence numbers are therefore unique even with
-        concurrent append/compact writers."""
-        import contextlib
-
-        lock = tdir / ".commit.lock"
-
-        @contextlib.contextmanager
-        def held():
-            tdir.mkdir(parents=True, exist_ok=True)
-            deadline = time.monotonic() + self.LOCK_TIMEOUT
             while True:
+                history = self.snapshots(table)
+                prior = _prior(history, table, run_id, full)
+                if prior is not None:
+                    return prior
+                prev = history[-1] if history else None
+                seq = prev["sequence"] + 1 if prev else 1
+                if full and seq != pinned + 1:
+                    raise ConcurrentCommitError(
+                        f"table {table!r} advanced from sequence "
+                        f"{pinned} to {seq - 1} while compacting; "
+                        "rerun compact()")
+                manifest = {
+                    "sequence": seq,
+                    "run_id": run_id,
+                    "files": files,
+                    "parent": prev["run_id"] if prev else None,
+                    "committed_at_unix": int(time.time()),
+                }
+                if full:  # supersedes earlier manifests
+                    manifest["full_snapshot"] = True
+                if hidden:
+                    manifest["hidden"] = hidden
+                tmp.write_text(json.dumps(manifest, indent=1))
                 try:
-                    fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    os.write(fd, f"{self._pid_space() or '-'} "
-                                 f"{os.getpid()} {time.time()}".encode())
-                    os.close(fd)
-                    break
+                    os.link(tmp, tdir / f"manifest-{seq:09d}.json")
                 except FileExistsError:
-                    try:
-                        if self._lock_is_stale(lock):
-                            # claim the break atomically: rename wins
-                            # exactly once — a plain unlink could race
-                            # another breaker and delete the FRESH
-                            # lock that breaker's winner just created
-                            claimed = lock.with_name(
-                                f".commit.stale-{uuid.uuid4().hex}")
-                            os.rename(lock, claimed)
-                            claimed.unlink(missing_ok=True)
-                            continue
-                    except OSError:
-                        continue  # lock changed hands mid-break
-                    if time.monotonic() > deadline:
-                        raise TimeoutError(
-                            f"commit lock on {tdir} held for >"
-                            f"{self.LOCK_TIMEOUT}s") from None
-                    time.sleep(0.05)
-            try:
-                yield
-            finally:
-                lock.unlink(missing_ok=True)
-
-        return held()
+                    continue  # another writer took seq
+                return manifest
+        finally:
+            tmp.unlink(missing_ok=True)
 
     def compact(self, spark: SparkSession, table: str,
                 *, target_files: int = 8,
@@ -271,53 +199,30 @@ class SnapshotCatalog:
         semantics): rewrite the current union into ~target_files
         parquet files and commit a FULL snapshot that supersedes the
         manifest history. Readers always see either the old file set
-        or the new one (manifest rename is the atomic switch); old
+        or the new one (the manifest commit is the atomic switch); old
         data files stay on disk for time-travel/GC, exactly like
         Iceberg's expire_snapshots being a separate step. Idempotent
         per run_id like append() — but a run_id already used by an
         APPEND is rejected instead of silently reported as compacted.
 
         Safe against a concurrent append: the rewrite is read from a
-        pinned snapshot, and the commit re-checks (under the commit
-        lock) that no manifest landed after that snapshot — if one
-        did, the full_snapshot commit would silently supersede the
-        concurrent append's rows, so compact raises
-        ConcurrentCommitError instead (rerun it; the orphaned rewrite
-        files are vacuum()'s job)."""
-        tdir = self._tdir(table)
-        prior = self._prior(tdir, table, run_id, full_snapshot=True)
-        if prior is not None:
+        pinned snapshot, and the commit must land directly on top of
+        it — if a manifest landed after that snapshot, the
+        full_snapshot commit would silently supersede the concurrent
+        append's rows, so compact raises ConcurrentCommitError instead
+        (rerun it; the orphaned rewrite files are vacuum()'s job)."""
+        history = self.snapshots(table)
+        prior = _prior(history, table, run_id, True)
+        if prior is not None or not history:
             return prior
-        pinned = self.last_snapshot(table)
-        if pinned is None:
-            return None
-        paths, hidden = self._read_set(table, as_of=pinned["sequence"])
+        pinned = history[-1]["sequence"]
+        paths, hidden = self._read_set(table, as_of=pinned)
         if not paths:
             return None
         files = self._write_attempt(
-            spark.read.parquet(*paths).coalesce(target_files), tdir, run_id)
-        with self._commit_lock(tdir):
-            prior = self._prior(tdir, table, run_id, full_snapshot=True)
-            if prior is not None:
-                return prior
-            prev = self.last_snapshot(table)
-            if prev is None or prev["sequence"] != pinned["sequence"]:
-                raise ConcurrentCommitError(
-                    f"table {table!r} advanced from sequence "
-                    f"{pinned['sequence']} to "
-                    f"{prev['sequence'] if prev else None} while "
-                    "compacting; rerun compact()")
-            manifest = {
-                "sequence": prev["sequence"] + 1,
-                "run_id": run_id,
-                "files": files,
-                "parent": prev["run_id"],
-                "committed_at_unix": int(time.time()),
-                "full_snapshot": True,  # supersedes earlier manifests
-            }
-            if hidden:
-                manifest["hidden"] = hidden
-            return self._commit(tdir, manifest)
+            spark.read.parquet(*paths).coalesce(target_files),
+            self._tdir(table), run_id)
+        return self._commit(table, run_id, files, hidden, pinned=pinned)
 
     def vacuum(self, table: str, *,
                grace_seconds: int = 900) -> list[str]:
@@ -350,8 +255,7 @@ class SnapshotCatalog:
         live: set[str] = set()
         ever_listed: set[str] = set()
         superseded_at = 0  # latest full-snapshot commit time
-        for m in self._manifests(table):
-            info = json.loads(m.read_text())
+        for info in self.snapshots(table):
             if info.get("full_snapshot"):
                 live.clear()
                 superseded_at = max(superseded_at,
@@ -436,7 +340,8 @@ class SnapshotCatalog:
         when the run has no manifest or vacuum() has reclaimed its
         files (a later compaction superseded them)."""
         tdir = self._tdir(table)
-        info = self._manifest_for(tdir, run_id)
+        info = next((m for m in reversed(self.snapshots(table))
+                     if m["run_id"] == run_id), None)
         if info is None:
             return None
         paths = [tdir / f for f in info["files"]]

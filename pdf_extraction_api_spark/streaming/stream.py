@@ -21,7 +21,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..plans.extract import commit_run, repair_audits, run_extraction
+from ..plans.extract import (
+    ARROW_BATCH_CONF,
+    commit_run,
+    repair_audits,
+    run_extraction,
+)
 from ..sources.catalog import SnapshotCatalog
 
 
@@ -35,7 +40,11 @@ def start_extraction_stream(
     """Incremental extraction: each microbatch runs the kernel and
     commits one catalog snapshot (run_id = batch id). Audits a crash
     lost before this start are repaired first; a replayed batch
-    re-derives its own."""
+    re-derives its own. The session takes the kernel's Arrow batch
+    bounds (ARROW_BATCH_CONF) before the stream starts, so every
+    microbatch runs under them."""
+    for key, value in ARROW_BATCH_CONF.items():
+        spark.conf.set(key, value)
     repair_audits(spark, catalog, table, f"{table}_audit")
     stream = (
         spark.readStream.schema(spark.read.parquet(pages_path).schema)

@@ -102,16 +102,16 @@ def test_compact_aborts_when_append_races(spark, tmp_path):
 
     # interleave: once compact has pinned + rewritten, an append lands
     # before compact's commit. Simulate by committing the append from
-    # inside a subclassed commit-lock acquisition.
+    # inside a subclassed _commit, before compact's first link.
     class Racing(SnapshotCatalog):
         raced = False
 
-        def _commit_lock(self, tdir):
+        def _commit(self, table, run_id, files, hidden, pinned=None):
             if not Racing.raced:
                 Racing.raced = True
                 clean = SnapshotCatalog(str(self.root))
                 clean.append(_df(spark, [("b", 2)]), "t", run_id="r2")
-            return super()._commit_lock(tdir)
+            return super()._commit(table, run_id, files, hidden, pinned)
 
     racing = Racing(str(tmp_path / "wh"))
     with pytest.raises(ConcurrentCommitError):
@@ -230,42 +230,26 @@ def test_carry_collision_rejected(spark):
         run_extraction(pages, carry=("url",))
 
 
-def test_commit_lock_stale_break_and_contention(spark, tmp_path):
-    """A crashed committer's stale lock must be broken (atomically —
-    via rename-claim, so concurrent breakers can never delete a fresh
-    lock), and concurrent appends under the lock must serialize with
-    unique sequence numbers."""
-    import os
+def test_concurrent_commits_get_unique_gapless_sequences(spark, tmp_path):
+    """Concurrent commits race for the same manifest name: each link
+    has one winner, the losers take the next number, so sequences stay
+    unique and gapless and no temp file is left behind."""
     import threading
-    import time
 
     from pdf_extraction_api_spark.sources.catalog import SnapshotCatalog
 
     cat = _cat(tmp_path, "wh")
-    tdir = tmp_path / "wh" / "t"
-    tdir.mkdir(parents=True)
-    # a stale lock from a "crashed" committer
-    lock = tdir / ".commit.lock"
-    lock.write_text("dead 0")
-    old = time.time() - SnapshotCatalog.LOCK_STALE - 10
-    os.utime(lock, (old, old))
-    cat.append(_df(spark, [("a", 1)]), "t", run_id="r1")  # breaks it
-    assert {r.url for r in cat.read(spark, "t").collect()} == {"a"}
-
-    # contention: many threads commit pre-written file lists under the
-    # lock (bypassing Spark writes for speed) — sequences stay unique
+    cat.append(_df(spark, [("a", 1)]), "t", run_id="r1")
+    # many threads commit empty file lists (bypassing Spark writes for
+    # speed), released together so their first links collide
+    start = threading.Barrier(8, timeout=60)
     results, errors = [], []
 
     def committer(i):
         try:
             c = SnapshotCatalog(str(tmp_path / "wh"))
-            with c._commit_lock(tdir):
-                prev = c.last_snapshot("t")
-                m = {"sequence": prev["sequence"] + 1,
-                     "run_id": f"t{i}", "files": [],
-                     "parent": prev["run_id"],
-                     "committed_at_unix": int(time.time())}
-                results.append(c._commit(tdir, m)["sequence"])
+            start.wait()
+            results.append(c._commit("t", f"t{i}", [], [])["sequence"])
         except Exception as exc:  # pragma: no cover
             errors.append(exc)
 
@@ -277,39 +261,58 @@ def test_commit_lock_stale_break_and_contention(spark, tmp_path):
         t.join()
     assert not errors
     assert sorted(results) == list(range(2, 10))  # unique, gapless
+    tdir = tmp_path / "wh" / "t"
+    assert sorted(p.name for p in tdir.glob("*manifest*")) == [
+        f"manifest-{seq:09d}.json" for seq in range(1, 10)]
+    assert sorted(cat.committed_run_ids("t")[1:]) == [
+        f"t{i}" for i in range(8)]
 
 
-def test_commit_lock_breaks_dead_local_holder_at_once(spark, tmp_path):
-    """A fresh lock whose holder ran in this pid space (host, boot and
-    pid namespace) and has exited is broken at once; a fresh lock from
-    another pid space — another host, or a container on this host with
-    the same hostname but its own pid namespace — still waits for the
-    age rule (its holder's pid means nothing here)."""
-    import subprocess
-    import time
+def test_leftover_manifest_temp_blocks_nobody(spark, tmp_path):
+    """A writer killed between writing its manifest temp file and
+    linking it leaves a `.manifest-*.tmp`: there is no lock to release,
+    the next commit takes the sequence the dead writer wanted, and no
+    read ever opens the temp file."""
+    import json
 
     cat = _cat(tmp_path, "wh")
-    tdir = tmp_path / "wh" / "t"
-    tdir.mkdir(parents=True)
-    lock = tdir / ".commit.lock"
-    here = cat._pid_space()
-    assert here is not None
-    dead = subprocess.Popen(["true"])
-    dead.wait()  # reaped: its pid names no live process
-    lock.write_text(f"{here} {dead.pid} {time.time()}")
-    t0 = time.monotonic()
     cat.append(_df(spark, [("a", 1)]), "t", run_id="r1")
-    assert time.monotonic() - t0 < cat.LOCK_TIMEOUT
-    assert not lock.exists()
+    tdir = tmp_path / "wh" / "t"
+    left = tdir / ".manifest-0123456789abcdef.tmp"
+    left.write_text(json.dumps(
+        {"sequence": 2, "run_id": "dead", "files": ["data/missing.parquet"],
+         "parent": "r1", "committed_at_unix": 0})[:40])  # torn write
+    m = cat.append(_df(spark, [("b", 2)]), "t", run_id="r2")
+    assert m["sequence"] == 2
+    assert cat.committed_run_ids("t") == ["r1", "r2"]
+    assert {r.url for r in cat.read(spark, "t").collect()} == {"a", "b"}
+    assert cat.read(spark, "t", as_of=1).count() == 1
+    assert left.exists()
 
-    host, boot, _ = here.split("/")
-    cat.LOCK_TIMEOUT = 0.5
-    for elsewhere in (f"not-{host}/{boot}/pid:[1]",
-                      f"{host}/{boot}/pid:[1]"):
-        lock.write_text(f"{elsewhere} {dead.pid} {time.time()}")
-        with pytest.raises(TimeoutError):
-            cat.append(_df(spark, [("b", 2)]), "t", run_id="r2")
-        assert lock.exists()
+
+def test_old_manifest_names_still_read(spark, tmp_path):
+    """Tables committed by earlier versions name their manifests
+    manifest-<seq>-<run_id>.json: they still read, a replayed run id
+    is still a no-op, and the sequence continues under the new names."""
+    cat = _cat(tmp_path, "wh")
+    cat.append(_df(spark, [("a", 1)]), "t", run_id="r1")
+    cat.append(_df(spark, [("b", 2)]), "t", run_id="r2")
+    tdir = tmp_path / "wh" / "t"
+    for seq, run_id in ((1, "r1"), (2, "r2")):
+        (tdir / f"manifest-{seq:09d}.json").rename(
+            tdir / f"manifest-{seq:09d}-{run_id}.json")
+
+    assert {r.url for r in cat.read(spark, "t").collect()} == {"a", "b"}
+    assert cat.read(spark, "t", as_of=1).count() == 1
+    replay = cat.append(_df(spark, [("x", -1)]), "t", run_id="r1")
+    assert replay["sequence"] == 1
+    m = cat.append(_df(spark, [("c", 3)]), "t", run_id="r3")
+    assert (m["sequence"], m["parent"]) == (3, "r2")
+    assert sorted(p.name for p in tdir.glob("manifest-*.json")) == [
+        "manifest-000000001-r1.json", "manifest-000000002-r2.json",
+        "manifest-000000003.json"]
+    assert {r.url for r in cat.read(spark, "t").collect()} == {
+        "a", "b", "c"}
 
 
 def _results_run(spark, cat, run_id, urls):
@@ -329,7 +332,7 @@ def test_concurrent_audit_repairs_commit_once(spark, tmp_path):
     """Two job.main runs can repair the same missing audit at the same
     moment (say, an extraction and a cron --compact). Both write the
     audit's data before either commits; each writes its own attempt
-    directory and re-checks the run id under the lock, so exactly one
+    directory and re-checks the run id before its commit, so exactly one
     manifest commits, the table reads whole, and the loser's files are
     orphans that vacuum reclaims."""
     import os

@@ -1,9 +1,10 @@
 """Crash tests of the commit path: a job.main killed at each point
-between its first data write and its last rename must leave a
+between its first data write and its last commit must leave a
 warehouse that a re-run completes.
 
 Each kill point is one subprocess that runs job.main with one catalog
-method patched to call os._exit(137) at that point. Each crashed
+method (or the os.link that commits a manifest) patched to call
+os._exit(137) at that point. Each crashed
 warehouse is then copied twice and re-run in-process with --resume:
 
 - "same": the crashed command again, under the crashed run id (the
@@ -36,12 +37,12 @@ pytestmark = pytest.mark.skipif(
     not os.path.exists(PAGES), reason="golden fixtures missing")
 
 KILL_POINTS = [
-    "results-data-written",     # results files written, lock not taken
+    "results-data-written",     # results files written, not committed
     "results-appended",         # results append returned
-    "audit-data-written",       # audit files written, lock not taken
-    "compact-rewrite-written",  # compaction files written, lock not taken
+    "audit-data-written",       # audit files written, not committed
+    "compact-rewrite-written",  # compaction files written, not committed
     "vacuum-midway",            # first unreachable file deleted
-    "results-lock-held",        # results manifest renamed, lock not freed
+    "results-manifest-linked",  # results manifest linked, temp not removed
 ]
 MAINTENANCE = {
     "compact-rewrite-written": ["--compact", "--target-files", "1"],
@@ -55,24 +56,23 @@ def _arm(point: str) -> None:
     `point` (runs in the crash subprocess only)."""
     from pdf_extraction_api_spark.sources.catalog import SnapshotCatalog
 
-    lock, commit = SnapshotCatalog._commit_lock, SnapshotCatalog._commit
+    commit, link = SnapshotCatalog._commit, os.link
     append, unlink = SnapshotCatalog.append, Path.unlink
 
-    def _commit_lock(self, tdir):
-        # a commit takes the lock right after its data write; the
-        # compaction is the only results commit of a maintenance run
-        table = Path(tdir).name
+    def _commit(self, table, *args, **kwargs):
+        # a commit follows its data write; the compaction is the only
+        # results commit of a maintenance run
         if (point in ("results-data-written", "compact-rewrite-written")
                 and table == "results"
                 or point == "audit-data-written" and table == "audit"):
             os._exit(137)
-        return lock(self, tdir)
+        return commit(self, table, *args, **kwargs)
 
-    def _commit(self, tdir, manifest):
-        out = commit(self, tdir, manifest)
-        if point == "results-lock-held" and Path(tdir).name == "results":
+    def _link(src, dst, *args, **kwargs):
+        link(src, dst, *args, **kwargs)
+        if (point == "results-manifest-linked"
+                and Path(dst).parent.name == "results"):
             os._exit(137)
-        return out
 
     def _append(self, df, table, run_id):
         out = append(self, df, table, run_id)
@@ -85,10 +85,10 @@ def _arm(point: str) -> None:
         if point == "vacuum-midway" and self.suffix == ".parquet":
             os._exit(137)
 
-    SnapshotCatalog._commit_lock = _commit_lock
     SnapshotCatalog._commit = _commit
     SnapshotCatalog.append = _append
     Path.unlink = _unlink
+    os.link = _link
 
 
 def _crash(point: str, argv: list[str]) -> None:

@@ -61,20 +61,18 @@ def test_job_main_runs_kernel_once(spark, tmp_path, capsys):
 
 def test_job_rejects_out_of_range_ints_with_usage(tmp_path, capsys):
     """Count and size flags exit 2 with usage at parse time, before any
-    Spark import: --arrow-batch <= 0 would lift the per-batch memory
-    bound (Spark reads maxRecordsPerBatch <= 0 as no limit), a negative
-    --vacuum-grace would let vacuum reclaim an in-flight append's
-    files, --salt-partitions 0 would silently skip salting, and
-    --target-files 0 would fail deep inside Spark."""
+    Spark import: a negative --vacuum-grace would let vacuum reclaim an
+    in-flight append's files, --salt-partitions 0 would silently skip
+    salting, --target-files 0 would fail deep inside Spark, and a
+    value that is no int at all is rejected the same way."""
     from pdf_extraction_api_spark.job import main
 
     base = ["--pages", PAGES, "--warehouse", str(tmp_path / "wh"),
             "--run-id", "bad"]
-    for flag, value in [("--arrow-batch", "0"), ("--arrow-batch", "-5"),
-                        ("--salt-partitions", "0"),
+    for flag, value in [("--salt-partitions", "0"),
                         ("--target-files", "0"),
                         ("--vacuum-grace", "-1"),
-                        ("--arrow-batch", "many")]:
+                        ("--salt-partitions", "many")]:
         with pytest.raises(SystemExit) as exc:
             main(base + [flag, value])
         assert exc.value.code == 2, (flag, value)
@@ -122,6 +120,7 @@ def _stage_dir(tmp_path) -> str:
 
 def test_streaming_extraction(spark, tmp_path):
     from pdf_extraction_api_spark.kernel.batch import RESULT_SCHEMA
+    from pdf_extraction_api_spark.plans.extract import ARROW_BATCH_CONF
     from pdf_extraction_api_spark.sources.catalog import SnapshotCatalog
     from pdf_extraction_api_spark.streaming.stream import (
         start_extraction_stream,
@@ -129,9 +128,14 @@ def test_streaming_extraction(spark, tmp_path):
 
     pages_dir = _stage_dir(tmp_path)
     cat = SnapshotCatalog(str(tmp_path / "wh"))
+    for key in ARROW_BATCH_CONF:  # Spark's defaults until the stream starts
+        spark.conf.unset(key)
     q = start_extraction_stream(
         spark, pages_dir, cat, "stream_results",
         checkpoint_dir=str(tmp_path / "ckpt"))
+    # the microbatches run the kernel under job.py's Arrow batch bounds
+    for key, value in ARROW_BATCH_CONF.items():
+        assert spark.conf.get(key) == value, key
     q.awaitTermination(300)
     out = cat.read(spark, "stream_results")
     # the stream commits exactly what job.main commits

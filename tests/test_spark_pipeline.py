@@ -258,8 +258,7 @@ def test_snapshot_catalog_resume(spark, tmp_path):
     # compaction: rewrite the union into few files via a full snapshot;
     # same rows, later appends still layer on top
     n_files_before = len({
-        f for m in cat._manifests("results")
-        for f in __import__("json").loads(m.read_text())["files"]})
+        f for m in cat.snapshots("results") for f in m["files"]})
     c = cat.compact(spark, "results", target_files=2)
     assert c["full_snapshot"] and len(c["files"]) <= 2
     after = cat.read(spark, "results")
