@@ -83,13 +83,16 @@ def split_bytes_for(docs: int, max_cores: int) -> int:
 def make_session(cores: int, split_bytes: int | None = None):
     from pyspark.sql import SparkSession
 
+    # the kernel's Arrow batch policy, as job.py and the stream apply it
+    from pdf_extraction_api_spark.plans.extract import ARROW_BATCH_CONF
+
     split = split_bytes or split_bytes_for(BENCH_DOCS, CPUS)
     return (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(f"spark-extract-bench-{cores}")
         .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        .config(map=ARROW_BATCH_CONF)
         .config("spark.sql.files.maxPartitionBytes", str(split))
         .config("spark.sql.files.openCostInBytes", str(1 << 20))
         .config("spark.driver.memory", "24g")

@@ -132,6 +132,11 @@ def main(argv: list[str] | None = None) -> int:
     if args.stats:
         # over the committed files: the kernel runs once per job
         committed = cat.read_run(spark, "results", args.run_id)
+        if committed is None:  # a replay of a vacuumed run
+            print(f"warning: cannot print the stats of run "
+                  f"{args.run_id!r}: its 'results' files were vacuumed "
+                  "after a compaction")
+            return 0
         row = run_stats(committed).collect()[0]
         print(json.dumps(row.asDict(recursive=True), default=str))
     return 0

@@ -9,7 +9,12 @@ never at the mercy of UTF-8 normalization (SURVEY.md §7 hard part #1).
 (plans/extract.py) and the SQL UDF run it. It yields packed records —
 one tuple per document in RESULT_SCHEMA order, spans as kind codes
 plus int32 columns instead of one dict per span — and `record_arrays`
-turns a batch of them into Arrow arrays column by column.
+turns a batch of them into Arrow arrays column by column. The loop is
+a pure per-document transform: every document, duplicate bodies
+included, is parsed on its own, and a worker keeps no results between
+documents or batches. Skipping exact-duplicate bodies, if it ever
+pays, belongs in the plan (a hash aggregate on the body before the
+kernel), not in worker state.
 
 Every output array is built from buffers (`arrow_array`), never by
 `pa.array` over a Python sequence: that call imports pandas through
@@ -82,7 +87,7 @@ SPAN_KINDS = ("content", "boilerplate", "table_cell")
 _KIND_CODE = {k: i for i, k in enumerate(SPAN_KINDS)}
 _CONTENT = _KIND_CODE["content"]
 # (kind codes, pages, starts, ends) of a document without spans; shared
-# like every packed record, so never mutated
+# by every such record, so never mutated
 _NO_SPANS = (b"", array("i"), array("i"), array("i"))
 
 
@@ -124,88 +129,27 @@ def extract_one(url: str, html: bytes) -> dict:
     return record_dict(extract_record(url, html))
 
 
-# html-bytes → packed-record memo (the record's url is rewritten on a
-# hit: url is a pure pass-through key). Crawl corpora carry
-# exact-duplicate bodies under different urls, and the kernel is a
-# pure function of the bytes, so repeats skip the parse entirely. Per
-# worker process (reused across Arrow batches); mega-docs excluded to
-# bound entry size. Bounded BOTH by entry count and by an input-bytes
-# budget — a packed record is the extracted text, the tables and 13
-# bytes per span (no per-span objects), all of which grow with the
-# body, so the key budget bounds the values too. The count cap alone
-# admitted a ~256 MiB/worker worst case (1024 x 256 KiB bodies), too
-# much times 1000 executors. Records are shared read-only — nothing
-# downstream mutates one after kernel_batch.
-#
-# A body is admitted on its SECOND sighting (TinyLFU's doorkeeper):
-# _FIRST_SEEN is a FIFO of hash(body) for bodies seen once, and only a
-# body already in it enters the memo. On one scan task of the bench
-# corpus (1,980 docs, 1,857 distinct bodies) only 6 bodies recur, yet
-# first-sighting admission filled the memo with 1,024 one-hit records;
-# with the doorkeeper it holds those 6, and a worker's heap high-water
-# growth over the task fell 26.2 -> 14.3 MB. The price is one more
-# parse per recurring body. The memo stays keyed by the full bytes,
-# so a hash collision can only admit a body early, never return a
-# wrong record; hash() of a bytes object is cached by the memo lookup
-# that precedes every put.
-_RESULT_MEMO: dict[bytes, tuple] = {}
-_RESULT_MEMO_CAP = 1024
-_RESULT_MEMO_MAX_DOC = 1 << 18       # don't cache >256 KiB bodies
-_RESULT_MEMO_MAX_BYTES = 32 << 20    # FIFO-evict past 32 MiB of keys
-_memo_bytes = 0
-_FIRST_SEEN: dict[int, None] = {}
-_FIRST_SEEN_CAP = 8192
-
-
-def memo_put(key: bytes, rec: tuple) -> None:
-    """Insert on a body's second sighting (the first only records its
-    hash), FIFO-bounded under both caps; oversized bodies skipped."""
-    global _memo_bytes
-    if len(key) > _RESULT_MEMO_MAX_DOC:
-        return
-    h = hash(key)
-    if h not in _FIRST_SEEN:
-        if len(_FIRST_SEEN) >= _FIRST_SEEN_CAP:
-            del _FIRST_SEEN[next(iter(_FIRST_SEEN))]
-        _FIRST_SEEN[h] = None
-        return
-    del _FIRST_SEEN[h]
-    while _RESULT_MEMO and (
-            len(_RESULT_MEMO) >= _RESULT_MEMO_CAP
-            or _memo_bytes + len(key) > _RESULT_MEMO_MAX_BYTES):
-        oldest = next(iter(_RESULT_MEMO))
-        del _RESULT_MEMO[oldest]
-        _memo_bytes -= len(oldest)
-    _RESULT_MEMO[key] = rec
-    _memo_bytes += len(key)
-
-
 def kernel_batch(
     urls: Iterable[str], htmls: Iterable[bytes | None],
 ) -> tuple[list[tuple], list[int], list[int]]:
     """The per-document loop: (urls, htmls) → (packed records, input
-    bytes per doc, µs per doc). Duplicate bodies come from the memo
-    under their own url; a doc that raises yields its error record
-    instead of failing the batch."""
+    bytes per doc, µs per doc). Every document is parsed on its own,
+    so the worker keeps no result state between documents or batches;
+    a doc that raises yields its error record instead of failing the
+    batch."""
     records: list[tuple] = []
     bytes_in: list[int] = []
     kernel_us: list[int] = []
     clock = time.perf_counter_ns
     for url, html in zip(urls, htmls):
         t0 = clock()
-        key = html if html is not None else b""
-        rec = _RESULT_MEMO.get(key)
-        if rec is None:
-            try:
-                rec = extract_record(url, html)
-            except Exception as exc:  # a bad doc never kills a task
-                rec = (url, 0, b"", [], _NO_SPANS, 0, 0,
-                       f"{type(exc).__name__}: {exc}")
-            memo_put(key, rec)
-        elif rec[0] != url:  # memo hit under a different url
-            rec = (url,) + rec[1:]
+        try:
+            rec = extract_record(url, html)
+        except Exception as exc:  # a bad doc never kills a task
+            rec = (url, 0, b"", [], _NO_SPANS, 0, 0,
+                   f"{type(exc).__name__}: {exc}")
         records.append(rec)
-        bytes_in.append(len(key))
+        bytes_in.append(len(html) if html is not None else 0)
         kernel_us.append((clock() - t0) // 1000)
     return records, bytes_in, kernel_us
 

@@ -65,7 +65,7 @@ def _make_kernel(carry: tuple[str, ...]):
     group on input attributes (e.g. lang) with NO post-kernel join.
 
     Each input batch goes through kernel_batch, the loop the SQL UDF
-    runs too (dup-body memo, per-doc error records). Its packed
+    runs too (one parse per document, per-doc error records). Its packed
     records become the output batch column by column (record_arrays),
     every array built from buffers (arrow_array; spans as one ListArray
     over concatenated kind-code and int32 buffers) — no per-span dict,
@@ -152,8 +152,8 @@ def register_extract_udf(spark: SparkSession, name: str = "extract_doc"):
     pure-SQL users can run it:  SELECT url, extract_doc(html).* FROM
     pages.  Returns the scalar summary struct (pages, extracted bytes,
     table/span counts, error) — Arrow-batched like the mapInArrow
-    path, same kernel_batch loop, same memo, same record_arrays
-    columns; full nested results (tables/spans) stay on
+    path, same kernel_batch loop (one parse per document), same
+    record_arrays columns; full nested results (tables/spans) stay on
     run_extraction, the plan-level surface.
 
     The UDF is html-only (url is a pass-through key the caller already

@@ -221,7 +221,7 @@ def s7_snapshot_timetravel(spark, sf):
     two committed appends (batch 1 = doc_id < 32, batch 2 = 32..63)
     into a SnapshotCatalog table, then one read pinned at sequence 1
     and one current read, summarized per view. Exercises the real
-    manifest protocol (atomic rename commits, idempotent run_ids —
+    manifest protocol (exclusive-link commits, idempotent run_ids —
     re-running this query re-appends under the same run_ids and the
     catalog no-ops) end to end; the oracle reconstructs both views
     from the originating table. The fixture catalog is content-keyed

@@ -87,12 +87,8 @@ def test_kernel_batch_error_record(monkeypatch):
     def boom(html):
         raise ValueError("boom")
 
-    B._RESULT_MEMO.clear()
     monkeypatch.setattr(B, "parse_document", boom)
-    try:
-        (rec,), _, _ = B.kernel_batch(["bad"], [b"<p>raises</p>"])
-    finally:
-        B._RESULT_MEMO.clear()
+    (rec,), _, _ = B.kernel_batch(["bad"], [b"<p>raises</p>"])
     assert B.record_dict(rec) == {
         "url": "bad", "n_pages": 0, "extracted_text": b"", "tables": [],
         "spans": [], "n_tables": 0, "n_content_spans": 0,
@@ -140,82 +136,17 @@ def test_split_whitespace_equals_regex_ws():
     assert bad == [], [hex(b) for b in bad[:10]]
 
 
-def test_duplicate_bodies_memoized_with_correct_urls():
-    """Exact-duplicate html under different urls: the per-worker memo
-    admits the body on its second sighting and then reuses the parsed
-    body (same object identity for the nested results) while every
-    output record keeps ITS OWN url."""
+def test_duplicate_bodies_keep_their_own_urls():
+    """Exact-duplicate html under different urls: every output record
+    keeps ITS OWN url and equals extract_one of that url and body."""
     from pdf_extraction_api_spark.kernel import batch as B
 
-    B._RESULT_MEMO.clear()
-    B._FIRST_SEEN.clear()
     html = (b"<body><p>Shared body long enough to be content.</p>"
             b'<table border="1"><tr><th>a</th><th>b</th></tr>'
             b"<tr><td>1</td><td>2</td></tr></table></body>")
     recs, _, _ = B.kernel_batch(["u1", "u2", "u3", "u4"], [html] * 4)
     assert [r[0] for r in recs] == ["u1", "u2", "u3", "u4"]
-    assert len(B._RESULT_MEMO) == 1  # one body memoized once
-    _, r1, r2, r3 = recs  # r1 is the admitted record, r2/r3 memo hits
-    assert r1[3] is r2[3] is r3[3]  # memo hit: shared read-only tables
-    assert r1[4] is r2[4] is r3[4]  # ... and packed spans
-    assert B.record_dict(r2) == extract_one("u3", html)
-
-
-def test_memo_skips_mega_docs():
-    from pdf_extraction_api_spark.kernel import batch as B
-
-    B._RESULT_MEMO.clear()
-    B._FIRST_SEEN.clear()
-    mega = b"<p>" + b"word " * (B._RESULT_MEMO_MAX_DOC // 5 + 10) + b"</p>"
-    B.kernel_batch(["m", "m2"], [mega, mega])  # 2nd sighting admits
-    assert len(B._RESULT_MEMO) == 0
-
-
-def test_memo_byte_budget_evicts_fifo():
-    """The memo is bounded by an input-bytes budget as well as the
-    entry count (round 6): 1000 executors x a worst-case 256 MiB
-    per-worker memo was the scale hazard the budget removes. FIFO
-    eviction keeps the accounting exact."""
-    from pdf_extraction_api_spark.kernel import batch as B
-
-    B._RESULT_MEMO.clear()
-    B._FIRST_SEEN.clear()
-    B._memo_bytes = 0
-    try:
-        body = 200 << 10  # within the per-doc cap
-        for i in range(300):  # 300 x 200 KiB >> 32 MiB budget
-            key = i.to_bytes(4, "big") * (body // 4)
-            B.memo_put(key, (i,))  # first sighting: not admitted
-            B.memo_put(key, (i,))
-        assert B._memo_bytes <= B._RESULT_MEMO_MAX_BYTES
-        assert len(B._RESULT_MEMO) < 300
-        # exact accounting: recompute from scratch
-        assert B._memo_bytes == sum(len(k) for k in B._RESULT_MEMO)
-        # newest entries survive (FIFO evicts oldest)
-        assert any(v[0] == 299 for v in B._RESULT_MEMO.values())
-        assert not any(v[0] == 0 for v in B._RESULT_MEMO.values())
-    finally:
-        B._RESULT_MEMO.clear()
-        B._FIRST_SEEN.clear()
-        B._memo_bytes = 0
-
-
-def test_memo_skips_one_hit_bodies():
-    """More distinct bodies than the first-sighting FIFO holds, each
-    seen once: none enters the memo and the FIFO stays within its cap."""
-    from pdf_extraction_api_spark.kernel import batch as B
-
-    B._RESULT_MEMO.clear()
-    B._FIRST_SEEN.clear()
-    B._memo_bytes = 0
-    try:
-        for i in range(B._FIRST_SEEN_CAP + 500):
-            B.memo_put(b"<p>%d</p>" % i, (i,))
-        assert len(B._RESULT_MEMO) == 0
-        assert B._memo_bytes == 0
-        assert len(B._FIRST_SEEN) <= B._FIRST_SEEN_CAP
-    finally:
-        B._FIRST_SEEN.clear()
+    assert B.record_dict(recs[2]) == extract_one("u3", html)
 
 
 def test_columnar_assembly_matches_from_pylist(monkeypatch):
@@ -223,9 +154,10 @@ def test_columnar_assembly_matches_from_pylist(monkeypatch):
     pa.RecordBatch.from_pylist over extract_one's dict view, on the
     golden corpus plus edge docs: an empty body, a None html, a None
     url (validity bitmap), a non-ASCII url and body (byte offsets off
-    the ASCII fast path), a doc that raises, a memo hit under a
-    different url, and a carry column passed through unchanged; and a
-    zero-row batch yields zero-length arrays of the schema's types."""
+    the ASCII fast path), a doc that raises, a golden body again
+    under two more urls, and a carry column passed through unchanged;
+    and a zero-row batch yields zero-length arrays of the schema's
+    types."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -257,8 +189,8 @@ def test_columnar_assembly_matches_from_pylist(monkeypatch):
             "<tr><td>2,5 \u20ac</td><td>\u00a530</td></tr>"
             "</table></body></html>").encode("utf-8")),
         ("edge://raises", b"<p>raise me</p>"),
-        ("edge://dup", rows[3]["html"]),  # admitted on 2nd sighting
-        ("edge://dup2", rows[3]["html"]),  # memo hit, different url
+        ("edge://dup", rows[3]["html"]),  # same body as rows[3] ...
+        ("edge://dup2", rows[3]["html"]),  # ... under a third url
     ]
     urls = [u for u, _ in docs]
     htmls = [h for _, h in docs]
@@ -267,14 +199,8 @@ def test_columnar_assembly_matches_from_pylist(monkeypatch):
         [pa.array(urls), pa.array(htmls, pa.binary()), lang],
         names=["url", "html", "lang"])
 
-    B._RESULT_MEMO.clear()
-    B._FIRST_SEEN.clear()
-    try:
-        (out, empty) = list(_make_kernel(("lang",))(
-            iter([rb, rb.slice(0, 0)])))
-    finally:
-        B._RESULT_MEMO.clear()
-        B._FIRST_SEEN.clear()
+    (out, empty) = list(_make_kernel(("lang",))(
+        iter([rb, rb.slice(0, 0)])))
 
     expected = [extract_one(u, h) for u, h in docs[:-3]] + [
         {"url": "edge://raises", "n_pages": 0, "extracted_text": b"",
@@ -329,8 +255,7 @@ def test_kernel_worker_never_imports_pandas(tmp_path):
         "    batches = [f.get_batch(i)"
         " for i in range(f.num_record_batches)]\n"
         "rows = sum(b.num_rows for b in _make_kernel(())(iter(batches)))\n"
-        "from pdf_extraction_api_spark.kernel.batch import _RESULT_MEMO\n"
-        "print(rows, 'pandas' in sys.modules, len(_RESULT_MEMO))\n"
+        "print(rows, 'pandas' in sys.modules)\n"
     )
     # `python -c` puts the working directory first on sys.path
     res = subprocess.run(
@@ -338,6 +263,4 @@ def test_kernel_worker_never_imports_pandas(tmp_path):
         cwd=Path(__file__).resolve().parents[1],
         capture_output=True, text=True, timeout=300)
     assert res.returncode == 0, res.stderr
-    # 190 distinct bodies, 5 of them recurring x3: only those 5 are
-    # memoized (one-hit bodies are never admitted)
-    assert res.stdout.split() == ["200", "False", "5"]
+    assert res.stdout.split() == ["200", "False"]

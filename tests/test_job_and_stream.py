@@ -59,6 +59,29 @@ def test_job_main_runs_kernel_once(spark, tmp_path, capsys):
     assert stats["documents"] == 200
 
 
+def test_stats_of_replayed_vacuumed_run_warns(spark, tmp_path, capsys):
+    """A replayed run id whose files a compaction superseded and vacuum
+    reclaimed: the append is a no-op and there are no files to read,
+    so --stats warns and prints no stats instead of crashing."""
+    import time
+
+    from pdf_extraction_api_spark.job import main
+
+    wh = str(tmp_path / "wh")
+    base = ["--pages", PAGES, "--warehouse", wh]
+    assert main(base + ["--run-id", "r1"]) == 0
+    assert main(base + ["--run-id", "m1", "--compact"]) == 0
+    time.sleep(1.1)  # int-second commit stamp vs float cutoff
+    assert main(base + ["--run-id", "m1", "--vacuum",
+                        "--vacuum-grace", "0"]) == 0
+    capsys.readouterr()
+    assert main(base + ["--run-id", "r1", "--stats"]) == 0
+    out = capsys.readouterr().out.strip().splitlines()
+    assert out == [
+        "warning: cannot print the stats of run 'r1': its 'results' "
+        "files were vacuumed after a compaction"]
+
+
 def test_job_rejects_out_of_range_ints_with_usage(tmp_path, capsys):
     """Count and size flags exit 2 with usage at parse time, before any
     Spark import: a negative --vacuum-grace would let vacuum reclaim an

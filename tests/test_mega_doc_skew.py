@@ -1,14 +1,11 @@
 """Mega-document stress proof (SURVEY §7 hard part #3).
 
-Three claims a 10^12-doc crawl corpus forces:
+Two claims a 10^12-doc crawl corpus forces:
 
 1. a ≥50 MB single document streams through the kernel with bounded
    memory (a few times the doc size — no quadratic buffering) and
    byte-parity with the reference kernel holds at multi-MB sizes;
-2. the per-worker result memo EXCLUDES mega bodies
-   (_RESULT_MEMO_MAX_DOC) so duplicate-rich caching can never pin
-   hundreds of MB per worker;
-3. a skewed file layout (all mega docs clustered in one parquet file,
+2. a skewed file layout (all mega docs clustered in one parquet file,
    the way sorted crawl dumps really arrive) serializes kernel time
    onto one task by default, and run_extraction(salt_partitions=)
    provably spreads it — asserted on the per-partition kernel_us
@@ -78,30 +75,6 @@ def test_multi_mb_doc_byte_parity():
     mine = extract_one("https://mega.example/5mb", html)
     assert mine["extracted_text"] == ref["extracted_text"]
     assert mine["n_tables"] == len(ref["tables"])
-
-
-def test_memo_excludes_mega_docs():
-    """Bodies over _RESULT_MEMO_MAX_DOC must never enter the result
-    memo (a duplicate-rich corpus would otherwise pin CAP x mega
-    bytes per worker process); small bodies still memoize."""
-    from pdf_extraction_api_spark.kernel import batch as kb
-
-    small = b"<p>tiny body for the memo</p>"
-    big = _mega_html(kb._RESULT_MEMO_MAX_DOC + 1024, seed=3)
-    assert len(big) > kb._RESULT_MEMO_MAX_DOC
-    kb._RESULT_MEMO.clear()
-    kb._FIRST_SEEN.clear()
-    # big repeated: recompute, not cache; small seen twice: admitted
-    recs, _, _ = kb.kernel_batch(["u1", "u2", "u3", "u4"],
-                                 [small, big, big, small])
-    assert len(recs) == 4
-    assert all(r[-1] is None for r in recs)
-    assert small in kb._RESULT_MEMO
-    assert big not in kb._RESULT_MEMO
-    assert len(kb._RESULT_MEMO) == 1
-    # the two big rows still agree (pure function, just not cached)
-    assert recs[1][2] == recs[2][2]
-    assert recs[1][2] is not recs[2][2]
 
 
 def test_salting_spreads_clustered_mega_docs(spark, tmp_path):

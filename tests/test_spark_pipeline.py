@@ -73,12 +73,12 @@ def test_determinism_across_parallelism(spark, golden_map):
 
 
 def test_dup_body_memo_preserves_urls(spark, tmp_path):
-    """The round-6 plan-path dup-body memo caches kernel results by
-    html BYTES; a memo hit under a DIFFERENT url must re-stamp the
-    url while sharing the body results. Three urls share one body in
-    one partition (so one worker's memo serves all three) — each
-    output row must carry its own url, identical extraction, and the
-    url must never leak from the first-seen row."""
+    """Duplicate bodies through the plan: three urls share one body in
+    one partition (so one worker parses all three). Each output row
+    must carry its own url and identical extraction, and the url must
+    never leak from the first-seen row. (The per-worker dup-body memo
+    this test was written against is gone; url pass-through is what it
+    pins now.)"""
     import pyarrow.parquet as pq
 
     from pdf_extraction_api_spark.plans.extract import (
