@@ -170,7 +170,7 @@ def run_extraction_job(spark, corpus_path: str) -> int:
     )
 
     pages = load_pages(spark, corpus_path)
-    results = run_extraction(pages, with_lineage=False)
+    results = run_extraction(pages)
     results.write.format("noop").mode("overwrite").save()
     return pages.count()
 

@@ -127,8 +127,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     commit_run(cat, run_extraction(
-        pages, salt_partitions=args.salt_partitions, with_lineage=True),
-        args.run_id)
+        pages, salt_partitions=args.salt_partitions), args.run_id)
     if args.stats:
         # over the committed files: the kernel runs once per job
         committed = cat.read_run(spark, "results", args.run_id)

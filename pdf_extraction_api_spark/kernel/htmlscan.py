@@ -8,8 +8,11 @@ a large share of kernel time (feed/close re-buffering, ``updatepos``
 line counting, ``interesting`` dispatch, attribute parsing +
 unescaping for every tag). Its batched dispatch token (``_FUSED_TOKEN``)
 covers text runs, attribute-less start tags and simple end tags; every
-other construct goes through the helpers here. Together they skip
-the html.parser bookkeeping DocModel never observes:
+other construct goes through the helpers here. The tag helpers
+(``_starttag``, ``_endtag``) return the tag they parsed instead of
+dispatching it, so ``run_fused``'s start-tag and end-tag blocks are
+the only copy of the model's tag semantics. Together they skip the
+html.parser bookkeeping DocModel never observes:
 
 - no ``updatepos``/``getpos`` line tracking;
 - attribute tuples are only *built* when the raw attr chunk could
@@ -71,8 +74,9 @@ _CDATA_CLOSE = {
 # check_for_whole_start_tag: chars after locatestarttagend that mean
 # "end of input in or before attribute value" → incomplete
 _INCOMPLETE_NEXT = "abcdefghijklmnopqrstuvwxyz=/ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-# attr substrings the DocModel can react to (lexicon class tokens are
-# checked against the raw class value, so 'class' gates all of them)
+# attr substrings run_fused's start block reacts to (lexicon class
+# tokens are checked against the raw class value, so 'class' gates all
+# of them)
 _INTERESTING_ATTRS = ("class", "border", "data-page")
 # _markupbase.parse_marked_section status keywords
 _STD_SECTIONS = frozenset({"temp", "cdata", "ignore", "include",
@@ -141,10 +145,13 @@ def _marked_section(s: str, lt: int, n: int) -> int:
     return _INCOMPLETE if m2 is None else m2.end()
 
 
-def _starttag(s: str, lt: int, data, start, end):
-    """parse_starttag + check_for_whole_start_tag, verbatim.
-    Returns (new_pos, cdata_tag|None); new_pos == _INCOMPLETE → the
-    caller runs the recovery path."""
+def _starttag(s: str, lt: int, data):
+    """parse_starttag + check_for_whole_start_tag, verbatim, minus the
+    dispatch: returns (new_pos, tag|None, attrs, self_closing) and the
+    caller runs the tag through run_fused's start (and, if
+    self-closing, end) block. new_pos == _INCOMPLETE → the caller runs
+    the recovery path; a desynced tag is emitted as data here and
+    returned with tag None."""
     m = _LOCATE.match(s, lt)
     j = m.end()
     nxt = s[j:j + 1]
@@ -154,11 +161,11 @@ def _starttag(s: str, lt: int, data, start, end):
         if s.startswith("/>", j):
             endpos = j + 2
         else:
-            return _INCOMPLETE, None
+            return _INCOMPLETE, None, None, False
     elif nxt == "":
-        return _INCOMPLETE, None
+        return _INCOMPLETE, None, None, False
     elif nxt in _INCOMPLETE_NEXT:
-        return _INCOMPLETE, None
+        return _INCOMPLETE, None, None, False
     else:
         # bogus char right after the tag head: parse_starttag will
         # emit the raw slice as data (j > lt always: _LOCATE consumed
@@ -196,40 +203,35 @@ def _starttag(s: str, lt: int, data, start, end):
         # desynced tag (e.g. '<p\x00>'): raw slice as data, resume
         # right after it — handle_data is NOT unescaped here
         data(s[lt:endpos])
-        return endpos, None
-    if end_chunk == "/>":
-        start(tag, attrs)
-        end(tag)
-        return endpos, None
-    start(tag, attrs)
-    return endpos, (tag if tag in _RAWTEXT else None)
+        return endpos, None, None, False
+    return endpos, tag, attrs, end_chunk == "/>"
 
 
-def _endtag(s: str, lt: int, end) -> int:
-    """parse_endtag (non-CDATA path), verbatim."""
+def _endtag(s: str, lt: int):
+    """parse_endtag (non-CDATA path), verbatim, minus the dispatch:
+    returns (new_pos, tag|None); tag None means no end event."""
     gtm = s.find(">", lt + 1)  # endendtag
     if gtm < 0:
-        return _INCOMPLETE
+        return _INCOMPLETE, None
     m = _ENDTAGFIND.match(s, lt)  # </ \s* name \s* >
     if m:
-        end(m.group(1).lower())
-        return gtm + 1
+        return gtm + 1, m.group(1).lower()
     nm = _TAGFIND.match(s, lt + 2)
     if not nm:
         if s.startswith("</>", lt):
-            return lt + 3  # no event
+            return lt + 3, None
         # parse_bogus_comment (handle_comment is a DocModel no-op)
         pos = s.find(">", lt + 2)
         if pos < 0:  # unreachable: gtm >= lt + 2 exists
-            return _INCOMPLETE
-        return pos + 1
-    end(nm.group(1).lower())
+            return _INCOMPLETE, None
+        return pos + 1, None
     # '>' always exists past nm.end(): the name class excludes '>'
-    return s.find(">", nm.end()) + 1
+    return s.find(">", nm.end()) + 1, nm.group(1).lower()
 
 
-# _starttag's attr-interest gate hardcodes these names; if DocModel ever
-# reacts to a new attribute, this assert forces the gate to be updated
-# too (otherwise the new attr would silently never be parsed).
+# _starttag's attr-interest gate hardcodes these names; if run_fused's
+# start block ever reacts to a new attribute, this assert forces the
+# gate to be updated too (otherwise the new attr would silently never
+# be parsed).
 assert _INTERESTING_ATTRS == ("class", "border", "data-page"), (
     "update the hardcoded attr-interest gate in _starttag")

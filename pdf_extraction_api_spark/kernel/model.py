@@ -65,9 +65,10 @@ def pre_rows(raw: str) -> list[list[str]] | None:
 
 
 class DocModel:
-    """Single-pass extractor state machine. run_fused inlines the hot
-    handle_* bodies; its slow-path helpers (htmlscan) call the methods
-    as start/end/data."""
+    """Single-pass extractor state. The tag semantics live only in
+    run_fused's start-tag and end-tag blocks; the model keeps the
+    state, handle_data (block text, slow-path text) and the close/emit
+    helpers those blocks call."""
 
     def __init__(self):
         self.spans: list[tuple[str, int, int, int]] = []
@@ -182,126 +183,7 @@ class DocModel:
             # same kind decision as the old (0, _nonws_count(raw))
             self._emit_block(page, boiler, raw, "")
 
-    # -- events ----------------------------------------------------------
-    def handle_starttag(self, tag, attrs):
-        boiler_parent = self._stack[-1][1] if self._stack else False
-        if tag in _SKIP:
-            self._skip += 1
-            self._stack.append((tag, boiler_parent, self._page))
-            return
-        if attrs:
-            attrd = dict(attrs)
-            cls = attrd.get("class")
-            boiler = boiler_parent or tag in BOILER_TAGS or (
-                cls is not None and any(
-                    tok in cls.lower() for tok in BOILER_CLASS_TOKENS))
-        else:
-            attrd = None
-            boiler = boiler_parent or tag in BOILER_TAGS
-        page_before = self._page
-        if tag == "section" and attrd is not None:
-            dp = attrd.get("data-page")
-            if dp is not None:
-                try:
-                    self._page = int(dp)
-                except ValueError:
-                    pass
-        if self._pre is not None:
-            if tag == "pre":
-                self._pre[3] += 1
-            self._stack.append((tag, boiler, page_before))
-            return
-        if tag == "table":
-            self._flush_blk()
-            border = attrd.get("border") if attrd is not None else None
-            method = ("lattice" if border not in (None, "", "0")
-                      else "stream")
-            self._tbl.append([self._page, method, [], None, None])
-        elif self._tbl:
-            # hot path: td/tr dominate table-heavy docs — the close
-            # helpers are inlined (same logic as _close_cell/_close_row)
-            t = self._tbl[-1]
-            if tag == "tr":
-                row = t[3]
-                cell = t[4]
-                if cell is not None and row is not None:
-                    row.append("".join(cell))
-                t[4] = None
-                if row is not None:
-                    t[2].append(row)
-                t[3] = []
-            elif tag in ("td", "th"):
-                cell = t[4]
-                if cell is not None and t[3] is not None:
-                    t[3].append("".join(cell))
-                if t[3] is None:
-                    t[3] = []
-                t[4] = []
-        elif tag == "pre":
-            self._flush_blk()
-            self._pre = [self._page, boiler, [], 1]
-        elif tag in _BLOCK:
-            self._flush_blk()
-            self._blk = [self._page, boiler, [], []]
-        elif tag == "a":
-            self._links += 1
-        elif tag in _CONTAINER:
-            self._flush_blk()
-        self._stack.append((tag, boiler, page_before))
-
-    def handle_endtag(self, tag):
-        st = self._stack
-        if st and st[-1][0] == tag:  # well-formed fast path
-            page_before = st[-1][2]
-            st.pop()
-        else:
-            idx = None
-            for i in range(len(st) - 1, -1, -1):
-                if st[i][0] == tag:
-                    idx = i
-                    break
-            if idx is None:
-                return
-            page_before = st[idx][2]
-            del st[idx:]
-        if tag in _SKIP:
-            self._skip = max(0, self._skip - 1)
-            return
-        if self._pre is not None:
-            if tag == "pre":
-                self._pre[3] -= 1
-                if self._pre[3] == 0:
-                    self._finish_pre()
-            return
-        if tag == "table":
-            if self._tbl:
-                self._close_table()
-        elif self._tbl:
-            # hot path: inlined _close_row/_close_cell (see starttag)
-            t = self._tbl[-1]
-            if tag == "tr":
-                row = t[3]
-                cell = t[4]
-                if cell is not None and row is not None:
-                    row.append("".join(cell))
-                t[4] = None
-                if row is not None:
-                    t[2].append(row)
-                t[3] = None
-            elif tag in ("td", "th"):
-                cell = t[4]
-                if cell is not None and t[3] is not None:
-                    t[3].append("".join(cell))
-                t[4] = None
-        elif tag in _BLOCK:
-            self._flush_blk()
-        elif tag == "a":
-            self._links = max(0, self._links - 1)
-        elif tag in _CONTAINER:
-            self._flush_blk()
-        if tag == "section":
-            self._page = page_before
-
+    # -- text events (tags: run_fused's start/end blocks) ---------------
     def handle_data(self, data):
         if self._skip or not data:
             return
@@ -331,25 +213,27 @@ class DocModel:
 
 
 def run_fused(m: DocModel, s: str) -> None:
-    """The kernel's only HTML tokenizer, fused with DocModel's hot
-    handler bodies (no-attr start tags, end tags, table-cell/pre data)
-    inlined at the dispatch sites, which saves a handler call per
-    event (~300-500 events/doc) plus its re-branching.
+    """The kernel's only HTML tokenizer, and the only copy of the model's
+    start-tag and end-tag semantics.
 
     Event semantics are html.parser's (feed + close), reproduced with
-    the stdlib's own regexes; attr-bearing tags, comments, marked
-    sections and EOF recovery go through htmlscan's slow-path helpers.
-    Model semantics are the handle_* bodies, verbatim (slow paths call
-    the real methods). Equivalence guards, both byte-compared against
-    refkernel (which stays on html.parser): tests/test_htmlscan.py
-    (corpus + NASTY) and tests/test_fuzz_parity.py (hypothesis soup +
-    raw bytes through extract_one, which uses this path).
+    the stdlib's own regexes. One batched token covers text runs,
+    attribute-less start tags and simple end tags; attr-bearing or
+    malformed tags, comments, marked sections and EOF recovery go
+    through htmlscan's slow-path helpers, which return the tag instead
+    of dispatching it. Both paths set ``tag`` / ``attrd`` / ``etag``
+    and fall through to the same two blocks, inline in the loop, so no
+    event costs a handler call (~300-500 events/doc). A self-closing
+    tag runs the start block and then the end block; a script/style
+    start tag sets ``etag`` once its CDATA close is found. Equivalence
+    guards, both byte-compared against refkernel (which stays on
+    html.parser): tests/test_htmlscan.py (corpus + NASTY) and
+    tests/test_fuzz_parity.py (hypothesis soup + raw bytes through
+    extract_one, which uses this path).
     """
     from . import htmlscan as H
 
     data = m.handle_data
-    start = m.handle_starttag
-    end = m.handle_endtag
     st = m._stack
     tbl = m._tbl
     unescape = H.unescape
@@ -383,93 +267,168 @@ def run_fused(m: DocModel, s: str) -> None:
                 data(chunk)
         if tag is not None:
             tag = tag.lower()
+            attrd = None
             i = mtok.end()
-            # ---- inlined handle_starttag(tag, []) ----
+        elif etag is not None:
+            etag = etag.lower()
+            i = mtok.end()
+        else:
+            # neither simple form matched at this '<': verbatim slow
+            # dispatch (attr-bearing/malformed tags, comments, decls,
+            # marked sections, PIs, EOF '<'), mirroring html.parser
+            # goahead; only tags set tag/etag, the rest emit no event
+            lt = mtok.end(1)
+            c = s[lt + 1: lt + 2]
+            # ASCII letters only — html.parser's starttagopen is [a-zA-Z]
+            if "a" <= c <= "z" or "A" <= c <= "Z":
+                i, tag, attrs, closed = H._starttag(s, lt, data)
+                if i < 0:
+                    i = H._recover(s, lt, data)
+                    continue
+                attrd = dict(attrs) if attrs else None
+                if closed:
+                    etag = tag
+            elif c == "/":
+                i, etag = H._endtag(s, lt)
+                if i < 0:
+                    i = H._recover(s, lt, data)
+                    continue
+            elif c == "!":
+                if s.startswith("<!--", lt):
+                    m2 = H._COMMENTCLOSE.search(s, lt + 4)
+                    i = H._recover(s, lt, data) if m2 is None else m2.end()
+                elif s.startswith("<![", lt):
+                    k = H._marked_section(s, lt, n)
+                    if k == H._CRASH:
+                        # html.parser raises AssertionError; refkernel
+                        # catches it and stops parsing — match that.
+                        return
+                    i = H._recover(s, lt, data) if k < 0 else k
+                elif s[lt:lt + 9].lower() == "<!doctype":
+                    gt = s.find(">", lt + 9)
+                    i = H._recover(s, lt, data) if gt < 0 else gt + 1
+                else:
+                    # parse_bogus_comment (handle_comment is a no-op)
+                    gt = s.find(">", lt + 2)
+                    i = H._recover(s, lt, data) if gt < 0 else gt + 1
+                continue
+            elif c == "?":
+                # parse_pi (handle_pi is a DocModel no-op)
+                gt = s.find(">", lt + 2)
+                i = H._recover(s, lt, data) if gt < 0 else gt + 1
+                continue
+            elif c == "":
+                # lone '<' at EOF: goahead breaks, final flush emits it
+                data("<")
+                return
+            else:
+                data("<")  # raw single char, then resume as text
+                i = lt + 1
+                continue
+        if tag is not None:
+            # ---- start tag (attrd: None unless an attr can matter) ----
             boiler = st[-1][1] if st else False
+            page_before = page = m._page
             if tag in _SKIP:
                 m._skip += 1
-                st.append((tag, boiler, m._page))
-                if tag in H._RAWTEXT:
+                st.append((tag, boiler, page))
+                if etag is None and tag in H._RAWTEXT:
+                    # CDATA mode: content raw, ends only at a full
+                    # </tag\s*> ; an unterminated tail is NEVER flushed
+                    # (goahead: cdata break + final-emit guard). The
+                    # content itself is no event: handle_data would
+                    # drop it (m._skip >= 1 here)
                     m2 = H._CDATA_CLOSE[tag].search(s, i)
                     if m2 is None:
                         return
-                    # cdata content: handle_data drops it
-                    # (m._skip >= 1 here), so no data call
-                    end(tag)
+                    etag = tag
                     i = m2.end()
-                continue
-            page = m._page
-            if not boiler and tag in BOILER_TAGS:
-                boiler = True
-            if m._pre is not None:
-                if tag == "pre":
-                    m._pre[3] += 1
-            elif tag == "table":
-                m._flush_blk()
-                tbl.append([page, "stream", [], None, None])
-            elif tbl:
-                t = tbl[-1]
-                if tag == "tr":
-                    row = t[3]
-                    cell = t[4]
-                    if cell is not None and row is not None:
-                        row.append("".join(cell))
-                    t[4] = None
-                    if row is not None:
-                        t[2].append(row)
-                    t[3] = []
-                elif tag in ("td", "th"):
-                    cell = t[4]
-                    if cell is not None and t[3] is not None:
-                        t[3].append("".join(cell))
-                    if t[3] is None:
+            else:
+                if not boiler and tag in BOILER_TAGS:
+                    boiler = True
+                if attrd is not None:
+                    cls = attrd.get("class")
+                    if not boiler and cls is not None:
+                        low = cls.lower()
+                        boiler = any(tok in low for tok in BOILER_CLASS_TOKENS)
+                    if tag == "section":
+                        dp = attrd.get("data-page")
+                        if dp is not None:
+                            try:
+                                page = m._page = int(dp)
+                            except ValueError:
+                                pass
+                if m._pre is not None:
+                    if tag == "pre":
+                        m._pre[3] += 1
+                elif tag == "table":
+                    m._flush_blk()
+                    border = attrd.get("border") if attrd is not None else None
+                    tbl.append([page, "stream" if border in (None, "", "0")
+                                else "lattice", [], None, None])
+                elif tbl:
+                    # hot path: td/tr dominate table-heavy docs — the
+                    # close helpers are inlined (same logic as
+                    # _close_cell/_close_row)
+                    t = tbl[-1]
+                    if tag == "tr":
+                        row = t[3]
+                        cell = t[4]
+                        if cell is not None and row is not None:
+                            row.append("".join(cell))
+                        t[4] = None
+                        if row is not None:
+                            t[2].append(row)
                         t[3] = []
-                    t[4] = []
-            elif tag == "pre":
-                m._flush_blk()
-                m._pre = [page, boiler, [], 1]
-            elif tag in _BLOCK:
-                m._flush_blk()
-                m._blk = [page, boiler, [], []]
-            elif tag == "a":
-                m._links += 1
-            elif tag in _CONTAINER:
-                m._flush_blk()
-            st.append((tag, boiler, page))
-            # ---- end inline (no rawtext: handled above) ----
-            continue
+                    elif tag in ("td", "th"):
+                        cell = t[4]
+                        if cell is not None and t[3] is not None:
+                            t[3].append("".join(cell))
+                        if t[3] is None:
+                            t[3] = []
+                        t[4] = []
+                elif tag == "pre":
+                    m._flush_blk()
+                    m._pre = [page, boiler, [], 1]
+                elif tag in _BLOCK:
+                    m._flush_blk()
+                    m._blk = [page, boiler, [], []]
+                elif tag == "a":
+                    m._links += 1
+                elif tag in _CONTAINER:
+                    m._flush_blk()
+                st.append((tag, boiler, page_before))
         if etag is not None:
-            tag = etag.lower()
-            i = mtok.end()
-            # ---- inlined handle_endtag ----
-            if st and st[-1][0] == tag:
+            # ---- end tag ----
+            if st and st[-1][0] == etag:  # well-formed fast path
                 page_before = st[-1][2]
                 st.pop()
             else:
                 idx = None
                 for j in range(len(st) - 1, -1, -1):
-                    if st[j][0] == tag:
+                    if st[j][0] == etag:
                         idx = j
                         break
                 if idx is None:
                     continue
                 page_before = st[idx][2]
                 del st[idx:]
-            if tag in _SKIP:
+            if etag in _SKIP:
                 m._skip = max(0, m._skip - 1)
                 continue
             if m._pre is not None:
-                if tag == "pre":
+                if etag == "pre":
                     m._pre[3] -= 1
                     if m._pre[3] == 0:
                         m._finish_pre()
                 continue
-            if tag == "table":
+            if etag == "table":
                 if tbl:
                     m._close_table()
             elif tbl:
+                # hot path: inlined _close_row/_close_cell
                 t = tbl[-1]
-                if tag == "tr":
+                if etag == "tr":
                     row = t[3]
                     cell = t[4]
                     if cell is not None and row is not None:
@@ -478,76 +437,19 @@ def run_fused(m: DocModel, s: str) -> None:
                     if row is not None:
                         t[2].append(row)
                     t[3] = None
-                elif tag in ("td", "th"):
+                elif etag in ("td", "th"):
                     cell = t[4]
                     if cell is not None and t[3] is not None:
                         t[3].append("".join(cell))
                     t[4] = None
-            elif tag in _BLOCK:
+            elif etag in _BLOCK:
                 m._flush_blk()
-            elif tag == "a":
+            elif etag == "a":
                 m._links = max(0, m._links - 1)
-            elif tag in _CONTAINER:
+            elif etag in _CONTAINER:
                 m._flush_blk()
-            if tag == "section":
+            if etag == "section":
                 m._page = page_before
-            # ---- end inline ----
-            continue
-        # neither simple form matched at this '<': verbatim slow
-        # dispatch (attr-bearing/malformed tags, comments, decls,
-        # marked sections, PIs, EOF '<'), mirroring html.parser goahead
-        lt = mtok.end(1)
-        c = s[lt + 1: lt + 2]
-        # ASCII letters only — html.parser's starttagopen is [a-zA-Z]
-        if "a" <= c <= "z" or "A" <= c <= "Z":
-            i, cdata = H._starttag(s, lt, data, start, end)
-            if i < 0:
-                i = H._recover(s, lt, data)
-                continue
-            if cdata is not None:
-                # CDATA mode: content raw (never unescaped), ends only
-                # at a full </tag\s*> ; an unterminated tail is NEVER
-                # flushed (goahead: cdata break + final-emit guard)
-                m2 = H._CDATA_CLOSE[cdata].search(s, i)
-                if m2 is None:
-                    return
-                if m2.start() > i:
-                    data(s[i:m2.start()])
-                end(cdata)
-                i = m2.end()
-        elif c == "/":
-            i = H._endtag(s, lt, end)
-            if i < 0:
-                i = H._recover(s, lt, data)
-        elif c == "!":
-            if s.startswith("<!--", lt):
-                m2 = H._COMMENTCLOSE.search(s, lt + 4)
-                i = H._recover(s, lt, data) if m2 is None else m2.end()
-            elif s.startswith("<![", lt):
-                k = H._marked_section(s, lt, n)
-                if k == H._CRASH:
-                    # html.parser raises AssertionError; refkernel
-                    # catches it and stops parsing — match that.
-                    return
-                i = H._recover(s, lt, data) if k < 0 else k
-            elif s[lt:lt + 9].lower() == "<!doctype":
-                gt = s.find(">", lt + 9)
-                i = H._recover(s, lt, data) if gt < 0 else gt + 1
-            else:
-                # parse_bogus_comment (handle_comment is a no-op)
-                gt = s.find(">", lt + 2)
-                i = H._recover(s, lt, data) if gt < 0 else gt + 1
-        elif c == "?":
-            # parse_pi (handle_pi is a DocModel no-op)
-            gt = s.find(">", lt + 2)
-            i = H._recover(s, lt, data) if gt < 0 else gt + 1
-        elif c == "":
-            # lone '<' at EOF: goahead breaks, final flush emits it
-            data("<")
-            return
-        else:
-            data("<")  # raw single char, then resume as text
-            i = lt + 1
 
 
 def parse_document(html: bytes) -> DocModel:

@@ -55,8 +55,7 @@ def pages_from_documents(spark: SparkSession, sf: str,
 
 
 def _results(spark, sf) -> DataFrame:
-    return run_extraction(
-        pages_from_documents(spark, sf), with_lineage=False)
+    return run_extraction(pages_from_documents(spark, sf))
 
 
 # SQL fragment: the kernel's whitespace-normalized view of `text`
@@ -156,8 +155,7 @@ def flagship(spark, sf):
     Arrow batch (run_extraction carry=) — no join back to the scan, so
     at corpus scale the rollup is scan → kernel → one hash agg."""
     r = run_extraction(
-        pages_from_documents(spark, sf), with_lineage=False,
-        carry=("lang",))
+        pages_from_documents(spark, sf), carry=("lang",))
     return (
         r.groupBy("lang")
         .agg(
@@ -191,7 +189,7 @@ def ex5_domain_rollup(spark, sf):
         spark, sf,
         url=F.concat(F.lit("https://"), F.col("source"),
                      F.lit(".example/"), F.col("doc_id").cast("string")))
-    r = run_extraction(pages, with_lineage=False)
+    r = run_extraction(pages)
     return (
         r.select(
             F.parse_url("url", F.lit("HOST")).alias("domain"),

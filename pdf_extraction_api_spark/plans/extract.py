@@ -117,10 +117,12 @@ def run_extraction(
     pages: DataFrame,
     *,
     salt_partitions: int | None = None,
-    with_lineage: bool = True,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """pages(url, html, ...) → extraction results (one row per url).
+    """pages(url, html, ...) → extraction results (one row per url),
+    lineage columns (LINEAGE_COLS) included: commit_run stores them as
+    hidden columns, and every other caller selects or aggregates its
+    own columns.
 
     `carry` names extra pages columns to pass through the kernel
     unchanged (e.g. ("lang",)) so per-attribute rollups need no join
@@ -137,10 +139,7 @@ def run_extraction(
         src = src.repartition(salt_partitions, F.xxhash64("url"))
     schema = StructType(
         KERNEL_SCHEMA.fields + [pages.schema[c] for c in carry])
-    out = src.mapInArrow(_make_kernel(carry), schema=schema)
-    if not with_lineage:
-        out = out.drop(*LINEAGE_COLS)
-    return out
+    return src.mapInArrow(_make_kernel(carry), schema=schema)
 
 
 EXTRACT_UDF_SCHEMA = ("n_pages INT, extracted_text BINARY, "

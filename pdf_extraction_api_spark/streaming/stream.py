@@ -55,7 +55,7 @@ def start_extraction_stream(
     def commit_batch(batch_df: DataFrame, batch_id: int):
         # append is idempotent per run_id, so a crash-replayed batch
         # commits neither table twice
-        commit_run(catalog, run_extraction(batch_df, with_lineage=True),
+        commit_run(catalog, run_extraction(batch_df),
                    f"batch-{batch_id:06d}", table, f"{table}_audit")
 
     return (

@@ -24,6 +24,14 @@ _FRAGMENTS = st.sampled_from([
     "mean std n= 42", "revenue profit", "1.0  2.0\n3.0  4.0\n",
     "café", " ", "\x01", "</", "<//>", "<3",
     "<p", "=\"", "'", '"',
+    # attr-bearing rawtext, self-closing and classed tags, spaced end
+    # tags: the slow path's tags through run_fused's start/end blocks
+    '<script type="x">', '<style media="x">', "<script/>",
+    '<br class="x" />', '<td class="a"/>', '<tr class="r">',
+    "<td colspan=2>", "</td >", "</tr\t>", '<section data-page="x">',
+    "<section data-page='5'>", '<pre class="c">',
+    '<table class="sidebar">', '<p class="menu">', '<TABLE BORDER="0">',
+    '<P CLASS="Footer">',
 ])
 
 

@@ -97,6 +97,49 @@ NASTY = [
     # inside a table cell
     b"<section data-page='2'><pre>a  b\nc  d</pre></section>"
     b"<script>x<td></script><table><tr><td>1<p>q</p></td></table>",
+    # --- attr-bearing and self-closing tags through the start/end
+    # blocks (the slow path's tags share run_fused's blocks) ---
+    # self-closing void tag with a class inside a paragraph
+    b'<p>Before the classed break<br class="x" />after it, still one'
+    b" block long enough.</p>",
+    # self-closing cell with a class inside a ruled table
+    b'<table border="1"><tr><td class="a"/>x<td>b</td></tr>'
+    b"<tr><td>c</td><td>d</td></tr></table>",
+    # rawtext with attributes: '<' and a fake <p> stay hidden
+    b'<script type="text/js">if (a < b) { y = "<p>fake</p>"; }</script>'
+    b"<p>Visible paragraph after the typed script, long enough.</p>",
+    # self-closing script with attrs: no CDATA mode, text stays visible
+    b'<script type="x"/><p>Text after a self-closed script tag, long'
+    b" enough to keep.</p>",
+    # unterminated rawtext tail with attributes is never flushed
+    b"<p>Kept paragraph before the style, long enough here.</p>"
+    b'<style media="x">p { color: red } dropped tail',
+    # boiler class tokens on a container and on a block
+    b'<div class="footer"><p>Footer paragraph text long enough to'
+    b' count.</p></div><p class="menu">Menu paragraph text long'
+    b" enough to count.</p><p>Plain content paragraph after them.</p>",
+    # boiler-classed borderless table
+    b'<table class="sidebar" border="0"><tr><td>a</td><td>b</td></tr>'
+    b"<tr><td>c</td><td>d</td></tr></table>",
+    # data-page that is not an int keeps the current page
+    b'<section data-page="x"><p>Paragraph under a bad page value,'
+    b" long enough.</p></section>",
+    # nested paged sections: closing the inner one restores page 2
+    b'<section data-page="2"><p>Page two paragraph long enough.</p>'
+    b'<section data-page="5"><p>Page five paragraph long enough.</p>'
+    b"</section><p>Back on page two, paragraph long enough.</p>"
+    b"</section>",
+    # nested classed pre blocks
+    b'<pre class="a">col a    col b\n1.0    2.0\n<pre class="b">3.0'
+    b"    4.0</pre>\n5.0    6.0</pre>",
+    # uppercase attr names and values on a ruled, nav-classed table
+    b'<TABLE Border="1" CLASS="Nav"><TR><TD>x</TD><TD>y</TD></TR>'
+    b"<TR><TD>1</TD><TD>2</TD></TR></TABLE>",
+    # end tags with trailing whitespace
+    b"<p>Paragraph with a spaced close, long enough here.</p >"
+    b"<table border=1><tr><td>a</td\t><td>b</td></tr><tr><td>c"
+    b"</td><td>d</td></tr></table><p><a href=x>link</a >tail text"
+    b" long enough.</p>",
 ]
 
 

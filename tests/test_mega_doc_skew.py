@@ -115,9 +115,9 @@ def test_salting_spreads_clustered_mega_docs(spark, tmp_path):
         return float(stats.max()) / float(stats.sum())
 
     pages = load_pages(spark, path)
-    plain = max_share(run_extraction(pages, with_lineage=True))
+    plain = max_share(run_extraction(pages))
     salted = max_share(
-        run_extraction(pages, with_lineage=True, salt_partitions=16))
+        run_extraction(pages, salt_partitions=16))
     # default: the mega file is one task -> one partition holds ~all
     # kernel time; salted: no partition should keep a majority
     assert plain > 0.5, plain

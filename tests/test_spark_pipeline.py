@@ -100,8 +100,7 @@ def test_dup_body_memo_preserves_urls(spark, tmp_path):
     out = {
         r["url"]: r
         for r in run_extraction(
-            load_pages(spark, str(tmp_path / "p")), with_lineage=False
-        ).collect()
+            load_pages(spark, str(tmp_path / "p"))).collect()
     }
     assert set(out) == {u for u, _ in data}
     bodies = {u: (bytes(out[u]["extracted_text"]), out[u]["n_tables"])
