@@ -26,7 +26,7 @@ codec is the fallback. All queries here are rows-only for the driver
 checked against independently-computed numpy in tests/test_imageops.py.
 
 The image corpus is generated deterministically per doc_id inside the
-same mapInPandas pass (seeded numpy), so the whole pipeline —
+same Python pass (seeded numpy), so the whole pipeline —
 generate → encode → decode → metrics — exercises real Arrow-batched
 BINARY columns end-to-end at any scale.
 """
@@ -405,6 +405,30 @@ def pngc_encode(arr) -> bytes:
     return pngc.encode(arr)
 
 
+def _metrics_batches(batches):
+    """mm_image_metrics' per-batch body: one fused_report per doc_id
+    (column 0), and the output batch built one _METRICS_SCHEMA column
+    at a time with arrow_array. No pandas, no from_pylist and no
+    pa.array over a Python list: pyarrow's lazy shim would load pandas
+    into the worker (~38 MB)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..kernel import png as pngc
+    from ..kernel.batch import arrow_array
+
+    schema = to_arrow_schema(_METRICS_SCHEMA)
+    for rb in batches:
+        rows = []
+        for doc_id in rb.column(0).to_pylist():
+            kind, arr = _gen_image(doc_id)
+            rows.append(fused_report(doc_id, kind, arr, pngc.encode(arr)))
+        yield pa.RecordBatch.from_arrays(
+            [arrow_array([r[f.name] for r in rows], f.type)
+             for f in schema],
+            schema=schema)
+
+
 def mm_image_metrics(spark, sf):
     """N1-N5 over real PNGs in ONE fused Python pass: metrics (N1),
     edge density (N2), line estimation (N3), type-conditional
@@ -412,10 +436,12 @@ def mm_image_metrics(spark, sf):
     the analyses into one decode; r8 fuses the GENERATION stage in as
     well — the corpus PNG is encoded and analyzed inside the same
     task, so the blob never crosses the Python→JVM→Python boundary
-    between two mapInPandas stages and the decode disappears outright
+    between two Python stages and the decode disappears outright
     (the stdlib codec is lossless, so decode(encode(a)) == a —
     pinned by test_png_roundtrip_identity and the mm_image_dims
-    oracle). Shared gray/edge intermediates: see fused_report.
+    oracle). Shared gray/edge intermediates: see fused_report. The
+    pass is ONE mapInArrow (_metrics_batches) whose output batches
+    are built from buffers, so no worker running it imports pandas.
 
     Rows-only for the driver: the convolution/variance float pipeline
     (Laplacian, Gaussian blur, FIND_EDGES) isn't reconstructable in
@@ -424,27 +450,13 @@ def mm_image_metrics(spark, sf):
     and fused ⇔ unfused row equality is pinned by
     test_fused_report_matches_unfused."""
     # one partition per core: x4 wave-smoothing was A/B'd and lost
-    # (3.97s vs 3.17s at sf1.0) — each extra mapInPandas task pays an
+    # (3.97s vs 3.17s at sf1.0) — each extra Python task pays an
     # Arrow-stream + worker handshake that outweighs the straggler
     # tail at these image sizes
     ids = (T(spark, sf, "documents").select("doc_id")
            .repartition(spark.sparkContext.defaultParallelism,
                         F.col("doc_id")))
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from ..kernel import png as pngc
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"].values:
-                kind, arr = _gen_image(int(doc_id))
-                blob = pngc.encode(arr)
-                rows.append(fused_report(int(doc_id), kind, arr, blob))
-            yield pd.DataFrame(rows)
-
-    return ids.mapInPandas(run, schema=_METRICS_SCHEMA)
+    return ids.mapInArrow(_metrics_batches, schema=_METRICS_SCHEMA)
 
 
 def resize(arr, out_h: int, out_w: int):

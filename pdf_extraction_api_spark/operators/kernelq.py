@@ -182,7 +182,7 @@ def ex5_domain_rollup(spark, sf):
     registered domain): synthesize a realistic URL per page
     (https://<source>.example/<doc_id>), run the kernel, parse the
     host back OUT of the url column with parse_url, and roll up docs +
-    extracted volume per domain. Plan: scan → kernel (mapInPandas) →
+    extracted volume per domain. Plan: scan → kernel (mapInArrow) →
     one hash agg on the parsed host — the parse is a JVM scalar
     projection, no join, no second shuffle."""
     pages = pages_from_documents(

@@ -227,3 +227,85 @@ def test_fused_report_matches_unfused():
             "changed": "true" if enh != blob else "false",
         }
         assert fused_report(doc_id, kind, arr, blob) == expected
+
+
+def _id_batch(ids):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [pa.array(list(ids), pa.int64())], names=["doc_id"])
+
+
+def test_metrics_batches_match_from_pylist():
+    """_metrics_batches assembles its output from buffers; the batches
+    must equal what from_pylist builds over the same fused_report rows
+    with the query's Arrow schema — over ids covering all five kinds
+    (and gray/RGB), and over a zero-row batch, whose arrays must come
+    out zero-length and typed."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pdf_extraction_api_spark.operators.imageops import (
+        _KINDS,
+        _METRICS_SCHEMA,
+        _metrics_batches,
+        fused_report,
+    )
+
+    schema = to_arrow_schema(_METRICS_SCHEMA)
+    id_batches = [range(0, 7), range(7, 8), range(30, 45), range(0)]
+    got = list(_metrics_batches(_id_batch(ids) for ids in id_batches))
+    assert len(got) == len(id_batches)
+    kinds = set()
+    for ids, rb in zip(id_batches, got):
+        rows = []
+        for doc_id in ids:
+            kind, arr = _gen_image(doc_id)
+            kinds.add(kind)
+            rows.append(fused_report(doc_id, kind, arr, pngc.encode(arr)))
+        want = pa.RecordBatch.from_pylist(rows, schema=schema)
+        assert rb.schema == schema
+        assert rb.equals(want)
+    assert kinds == set(_KINDS)
+    empty = got[-1]
+    assert empty.num_rows == 0
+    assert [len(c) for c in empty.columns] == [0] * len(schema)
+    assert [c.type for c in empty.columns] == list(schema.types)
+
+
+def test_image_metrics_worker_never_imports_pandas(tmp_path):
+    """mm_image_metrics is a mapInArrow, so its workers never need
+    pandas, and the per-batch body must not load it (~38 MB RSS per
+    worker, kept for the life of a reused worker): run it over a few
+    doc_id batches in a fresh interpreter and check sys.modules. The
+    ids go through an Arrow IPC file because pyarrow.parquet imports
+    pandas itself."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pyarrow as pa
+
+    ipc = tmp_path / "ids.arrow"
+    batches = [_id_batch(range(i, i + 10)) for i in range(0, 50, 10)]
+    with pa.ipc.new_file(ipc, batches[0].schema) as w:
+        for rb in batches:
+            w.write_batch(rb)
+    script = (
+        "import sys\n"
+        "import pyarrow as pa\n"
+        "from pdf_extraction_api_spark.operators.imageops import"
+        " _metrics_batches\n"
+        "with pa.ipc.open_file(sys.argv[1]) as f:\n"
+        "    batches = [f.get_batch(i)"
+        " for i in range(f.num_record_batches)]\n"
+        "rows = sum(b.num_rows for b in _metrics_batches(iter(batches)))\n"
+        "print(rows, 'pandas' in sys.modules)\n"
+    )
+    # `python -c` puts the working directory first on sys.path
+    res = subprocess.run(
+        [sys.executable, "-c", script, str(ipc)],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True, text=True, timeout=300)
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.split() == ["50", "False"]

@@ -255,8 +255,8 @@ def test_registry_plan_lint(spark, registry):
     """No registry query may plan a CartesianProduct (unbounded pair
     blowup) or row-at-a-time Python (BatchEvalPython / scalar
     PythonUDF) — the two anti-patterns that silently kill 100 TB runs.
-    Arrow-batched mapInPandas/applyInPandas operators are the only
-    sanctioned Python."""
+    Arrow-batched mapInArrow/mapInPandas/applyInPandas operators are
+    the only sanctioned Python."""
     queries, _ = registry
     offenders = {}
     for name, fn in queries.items():
@@ -268,6 +268,22 @@ def test_registry_plan_lint(spark, registry):
         if bad:
             offenders[name] = bad
     assert offenders == {}, offenders
+
+
+def test_headline_plans_have_no_pandas_udf(spark, registry):
+    """Python workers are reused across queries, so one pandas UDF
+    among the headline queries loads pandas (~38 MB) into every worker
+    of the headline pass. No headline plan may hold an *InPandas
+    operator (MapInPandas, FlatMapGroupsInPandas, AggregateInPandas,
+    WindowInPandas); their Python runs as mapInArrow."""
+    from perfbench.run import HEADLINE
+
+    queries, _ = registry
+    offenders = [
+        name for name in HEADLINE
+        if "InPandas" in (queries[name](spark, SF)._jdf.queryExecution()
+                          .executedPlan().toString())]
+    assert offenders == [], offenders
 
 
 def test_bpe_tokens_vertical_tab_parity(spark, tmp_path):
