@@ -20,7 +20,9 @@ Every output array is built from buffers (`arrow_array`), never by
 `pa.array` over a Python sequence: that call imports pandas through
 pyarrow's lazy pandas shim (~40 MB RSS), which a mapInArrow worker
 otherwise never loads, and the kernel runs in one worker per
-executor core.
+executor core. `map_rows` gives the operators the same batches: a
+mapInArrow over a per-row Python function, its output built with
+`arrow_array`.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ from __future__ import annotations
 import time
 from array import array
 from collections.abc import Iterable, Sequence
-from functools import cache
+from functools import cache, partial
 from itertools import accumulate, chain
 
 from pyspark.sql.types import (
@@ -227,6 +229,34 @@ def arrow_array(values: Sequence, typ):
     return pa.Array.from_buffers(
         typ, n, [validity, _offsets(lengths), pa.py_buffer(data)],
         null_count=nulls)
+
+
+def row_batches(fn, schema, batches):
+    """mapInArrow body over a per-row function: `fn(*values)` gets each
+    input row's values in column order (Python objects, from
+    to_pylist) and yields that row's output dicts, 0..n per row. Each
+    input batch becomes one output batch of Spark schema `schema`,
+    built column by column with arrow_array, so the worker never
+    imports pandas."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    for rb in batches:
+        rows = [out
+                for values in zip(*(c.to_pylist() for c in rb.columns))
+                for out in fn(*values)]
+        yield pa.RecordBatch.from_arrays(
+            [arrow_array([r[f.name] for r in rows], f.type)
+             for f in arrow_schema],
+            schema=arrow_schema)
+
+
+def map_rows(df, fn, schema):
+    """`df` through the per-row function `fn` as one mapInArrow (see
+    row_batches) whose output has Spark schema `schema`: the operators'
+    one adapter from Python rows to Arrow batches."""
+    return df.mapInArrow(partial(row_batches, fn, schema), schema=schema)
 
 
 def _spans_array(spans: tuple, list_type):

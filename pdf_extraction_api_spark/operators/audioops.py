@@ -23,8 +23,6 @@ from __future__ import annotations
 
 import io
 import wave
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -37,10 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernel.batch import map_rows
 from .relational import T
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 _RATE = 8000  # Hz — small deterministic clips
 
@@ -163,20 +159,11 @@ def audio_payloads(spark, sf):
     ids = (T(spark, sf, "documents").select("doc_id")
            .repartition(spark.sparkContext.defaultParallelism))
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def gen(doc_id):
+        kind, blob = synth_wav(doc_id)
+        yield {"doc_id": doc_id, "audio_kind": kind, "wav": blob}
 
-        for pdf in batches:
-            kinds, blobs, out = [], [], []
-            for doc_id in pdf["doc_id"].values:
-                kind, blob = synth_wav(int(doc_id))
-                out.append(int(doc_id))
-                kinds.append(kind)
-                blobs.append(blob)
-            yield pd.DataFrame(
-                {"doc_id": out, "audio_kind": kinds, "wav": blobs})
-
-    return ids.mapInPandas(gen, schema=_AUDIO_SCHEMA)
+    return map_rows(ids, gen, _AUDIO_SCHEMA)
 
 
 def mm_audio_features(spark, sf):
@@ -202,28 +189,21 @@ def mm_audio_features(spark, sf):
     forever."""
     wavs = audio_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(doc_id, kind, blob):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["audio_kind"].values,
-                    pdf["wav"].values):
-                pcm, rate = decode_wav_pcm(bytes(blob))
-                x = pcm.astype(np.float64) / 32767.0
-                f = audio_features(x, rate)
-                p64 = pcm.astype(np.int64)
-                rows.append({"doc_id": int(doc_id), "audio_kind": kind,
-                             "sample_rate": rate,
-                             "duration_s": f["duration_s"],
-                             "sum_sq": int((p64 * p64).sum()),
-                             "peak": f["peak"],
-                             "zcr": f["zcr"]})
-            yield pd.DataFrame(rows)
+        pcm, rate = decode_wav_pcm(blob)
+        x = pcm.astype(np.float64) / 32767.0
+        f = audio_features(x, rate)
+        p64 = pcm.astype(np.int64)
+        yield {"doc_id": doc_id, "audio_kind": kind,
+               "sample_rate": rate,
+               "duration_s": f["duration_s"],
+               "sum_sq": int((p64 * p64).sum()),
+               "peak": f["peak"],
+               "zcr": f["zcr"]}
 
-    return wavs.mapInPandas(run, schema=_FEAT_SCHEMA)
+    return map_rows(wavs, run, _FEAT_SCHEMA)
 
 
 def mm_audio_spectral(spark, sf):
@@ -235,23 +215,14 @@ def mm_audio_spectral(spark, sf):
     frequency to within one FFT bin, tests/test_audioops.py)."""
     wavs = audio_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def run(doc_id, kind, blob):
+        x, rate = decode_wav(blob)
+        f = audio_features(x, rate)
+        yield {"doc_id": doc_id, "audio_kind": kind,
+               "spectral_centroid_hz": f["spectral_centroid_hz"],
+               "dominant_hz": f["dominant_hz"]}
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["audio_kind"].values,
-                    pdf["wav"].values):
-                x, rate = decode_wav(bytes(blob))
-                f = audio_features(x, rate)
-                rows.append({
-                    "doc_id": int(doc_id), "audio_kind": kind,
-                    "spectral_centroid_hz": f["spectral_centroid_hz"],
-                    "dominant_hz": f["dominant_hz"]})
-            yield pd.DataFrame(rows)
-
-    return wavs.mapInPandas(run, schema=_SPECTRAL_SCHEMA)
+    return map_rows(wavs, run, _SPECTRAL_SCHEMA)
 
 
 _DIMS_SCHEMA = StructType([
@@ -269,20 +240,12 @@ def mm_audio_dims(spark, sf):
     in kernel-side WAV handling breaks the hash match."""
     wavs = audio_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def run(doc_id, kind, blob):
+        x, rate = decode_wav(blob)
+        yield {"doc_id": doc_id, "audio_kind": kind,
+               "sample_rate": rate, "n_samples": len(x)}
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["audio_kind"].values,
-                    pdf["wav"].values):
-                x, rate = decode_wav(bytes(blob))
-                rows.append({"doc_id": int(doc_id), "audio_kind": kind,
-                             "sample_rate": rate, "n_samples": len(x)})
-            yield pd.DataFrame(rows)
-
-    return wavs.mapInPandas(run, schema=_DIMS_SCHEMA)
+    return map_rows(wavs, run, _DIMS_SCHEMA)
 
 
 # Full value oracle for mm_audio_features: re-synthesize the int16
@@ -379,25 +342,16 @@ def dd_audio_dup(spark, sf):
     oracle rebuilds the census from the analytic PCM model."""
     wavs = audio_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(doc_id, kind, blob):
         import numpy as np
-        import pandas as pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["audio_kind"].values,
-                    pdf["wav"].values):
-                pcm, _rate = decode_wav_pcm(bytes(blob))
-                p64 = pcm.astype(np.int64)
-                idx = np.arange(len(p64), dtype=np.int64)
-                rows.append({
-                    "doc_id": int(doc_id), "audio_kind": kind,
-                    "n_samples": len(p64),
-                    "psum": int(p64.sum()),
-                    "pmom": int((idx * p64).sum()),
-                })
-            yield pd.DataFrame(rows)
+        pcm, _rate = decode_wav_pcm(blob)
+        p64 = pcm.astype(np.int64)
+        idx = np.arange(len(p64), dtype=np.int64)
+        yield {"doc_id": doc_id, "audio_kind": kind,
+               "n_samples": len(p64),
+               "psum": int(p64.sum()),
+               "pmom": int((idx * p64).sum())}
 
     schema = StructType([
         StructField("doc_id", LongType()),
@@ -413,7 +367,7 @@ def dd_audio_dup(spark, sf):
     # linted by test_video_audio_dup_decode_once)
     from pyspark import StorageLevel
 
-    fr = (wavs.mapInPandas(run, schema=schema)
+    fr = (map_rows(wavs, run, schema)
           .persist(StorageLevel.MEMORY_AND_DISK))
     sig = ["n_samples", "psum", "pmom"]
     groups = fr.groupBy(*sig).agg(

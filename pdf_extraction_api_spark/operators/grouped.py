@@ -1,15 +1,13 @@
-"""Grouped custom ops via applyInPandas (the per-group kernel shape).
+"""Grouped custom ops via applyInArrow (the per-group kernel shape).
 
 `vec_centroid_by_label` — per-cluster embedding centroid computed with
-numpy inside applyInPandas (the grouped-map UDF surface; at scale this
+numpy inside applyInArrow (the grouped-map UDF surface; at scale this
 is the k-means update step / IVF coarse-quantizer training). Oracle:
 per-dimension AVG via position explode in SQL — so even the grouped
 Python path is value-checked against an independent engine.
 """
 
 from __future__ import annotations
-
-from typing import TYPE_CHECKING
 
 from pyspark.sql.types import (
     DoubleType,
@@ -18,10 +16,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernel.batch import arrow_array
 from .relational import T
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 _CENTROID_SCHEMA = StructType([
     StructField("label", IntegerType()),
@@ -30,23 +26,26 @@ _CENTROID_SCHEMA = StructType([
 ])
 
 
-def _centroid(pdf: "pd.DataFrame") -> "pd.DataFrame":
+def _centroid(tbl):
+    """One label's group (a pyarrow.Table) → its per-dimension mean
+    rows, the columns built with arrow_array."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    mat = np.stack(pdf["embedding"].values).astype("float64")
-    mean = np.round(mat.mean(axis=0), 6)
-    label = int(pdf["label"].iloc[0])
-    return pd.DataFrame({
-        "label": [label] * mat.shape[1],
-        "dim": list(range(mat.shape[1])),
-        "centroid": mean,
-    })
+    mat = np.array(tbl.column("embedding").to_pylist(), dtype="float64")
+    dims = mat.shape[1]
+    schema = to_arrow_schema(_CENTROID_SCHEMA)
+    columns = ([tbl.column("label")[0].as_py()] * dims, list(range(dims)),
+               np.round(mat.mean(axis=0), 6).tolist())
+    return pa.Table.from_arrays(
+        [arrow_array(c, f.type) for c, f in zip(columns, schema)],
+        schema=schema)
 
 
 def vec_centroid_by_label(spark, sf):
     e = T(spark, sf, "embeddings").select("label", "embedding")
-    return e.groupBy("label").applyInPandas(
+    return e.groupBy("label").applyInArrow(
         _centroid, schema=_CENTROID_SCHEMA)
 
 

@@ -33,9 +33,6 @@ BINARY columns end-to-end at any scale.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -47,10 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernel.batch import map_rows
 from .relational import T
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 _KINDS = ("photograph", "chart", "table_image", "diagram", "screenshot")
 
@@ -127,22 +122,11 @@ def image_payloads(spark, sf):
     ids = (T(spark, sf, "documents").select("doc_id")
            .repartition(spark.sparkContext.defaultParallelism))
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def gen(doc_id):
+        kind, arr = _gen_image(doc_id)
+        yield {"doc_id": doc_id, "img_kind": kind, "png": pngc_encode(arr)}
 
-        from ..kernel import png as pngc
-
-        for pdf in batches:
-            kinds, blobs, out_ids = [], [], []
-            for doc_id in pdf["doc_id"].values:
-                kind, arr = _gen_image(int(doc_id))
-                kinds.append(kind)
-                blobs.append(pngc.encode(arr))
-                out_ids.append(int(doc_id))
-            yield pd.DataFrame(
-                {"doc_id": out_ids, "img_kind": kinds, "png": blobs})
-
-    return ids.mapInPandas(gen, schema=_IMG_SCHEMA)
+    return map_rows(ids, gen, _IMG_SCHEMA)
 
 
 def _to_gray(arr):
@@ -405,28 +389,11 @@ def pngc_encode(arr) -> bytes:
     return pngc.encode(arr)
 
 
-def _metrics_batches(batches):
-    """mm_image_metrics' per-batch body: one fused_report per doc_id
-    (column 0), and the output batch built one _METRICS_SCHEMA column
-    at a time with arrow_array. No pandas, no from_pylist and no
-    pa.array over a Python list: pyarrow's lazy shim would load pandas
-    into the worker (~38 MB)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from ..kernel import png as pngc
-    from ..kernel.batch import arrow_array
-
-    schema = to_arrow_schema(_METRICS_SCHEMA)
-    for rb in batches:
-        rows = []
-        for doc_id in rb.column(0).to_pylist():
-            kind, arr = _gen_image(doc_id)
-            rows.append(fused_report(doc_id, kind, arr, pngc.encode(arr)))
-        yield pa.RecordBatch.from_arrays(
-            [arrow_array([r[f.name] for r in rows], f.type)
-             for f in schema],
-            schema=schema)
+def _metrics_row(doc_id):
+    """mm_image_metrics' per-row body: the fused_report of doc_id's
+    generated image."""
+    kind, arr = _gen_image(doc_id)
+    yield fused_report(doc_id, kind, arr, pngc_encode(arr))
 
 
 def mm_image_metrics(spark, sf):
@@ -440,8 +407,9 @@ def mm_image_metrics(spark, sf):
     (the stdlib codec is lossless, so decode(encode(a)) == a —
     pinned by test_png_roundtrip_identity and the mm_image_dims
     oracle). Shared gray/edge intermediates: see fused_report. The
-    pass is ONE mapInArrow (_metrics_batches) whose output batches
-    are built from buffers, so no worker running it imports pandas.
+    pass is ONE mapInArrow (map_rows over _metrics_row) whose output
+    batches are built from buffers, so no worker running it imports
+    pandas.
 
     Rows-only for the driver: the convolution/variance float pipeline
     (Laplacian, Gaussian blur, FIND_EDGES) isn't reconstructable in
@@ -456,7 +424,7 @@ def mm_image_metrics(spark, sf):
     ids = (T(spark, sf, "documents").select("doc_id")
            .repartition(spark.sparkContext.defaultParallelism,
                         F.col("doc_id")))
-    return ids.mapInArrow(_metrics_batches, schema=_METRICS_SCHEMA)
+    return map_rows(ids, _metrics_row, _METRICS_SCHEMA)
 
 
 def resize(arr, out_h: int, out_w: int):
@@ -518,34 +486,26 @@ def mm_image_resize(spark, sf):
     same strength of evidence.)"""
     imgs = image_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(doc_id, kind, blob):
         import numpy as np
-        import pandas as pd
 
         from ..kernel import png as pngc
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["img_kind"].values,
-                    pdf["png"].values):
-                arr = pngc.decode(bytes(blob))
-                th = resize(arr, THUMB, THUMB)
-                rows.append({
-                    "doc_id": int(doc_id), "img_kind": kind,
-                    "src_w": arr.shape[1], "src_h": arr.shape[0],
-                    "thumb_w": th.shape[1], "thumb_h": th.shape[0],
-                    "thumb_sum": int(th.sum(dtype=np.int64)),
-                    # UNrounded on purpose: sum and count are exact
-                    # ints on both sides, so the division is
-                    # bit-identical — while a 6-dp round would hit
-                    # banker's-vs-away ties on the dyadic 1024
-                    # denominator (e.g. sum 212968 → x.9765625)
-                    "thumb_mean": float(th.mean()),
-                })
-            yield pd.DataFrame(rows)
+        arr = pngc.decode(blob)
+        th = resize(arr, THUMB, THUMB)
+        yield {
+            "doc_id": doc_id, "img_kind": kind,
+            "src_w": arr.shape[1], "src_h": arr.shape[0],
+            "thumb_w": th.shape[1], "thumb_h": th.shape[0],
+            "thumb_sum": int(th.sum(dtype=np.int64)),
+            # UNrounded on purpose: sum and count are exact ints on
+            # both sides, so the division is bit-identical — while a
+            # 6-dp round would hit banker's-vs-away ties on the dyadic
+            # 1024 denominator (e.g. sum 212968 → x.9765625)
+            "thumb_mean": float(th.mean()),
+        }
 
-    return imgs.mapInPandas(run, schema=_RESIZE_SCHEMA)
+    return map_rows(imgs, run, _RESIZE_SCHEMA)
 
 
 _DIMS_SCHEMA = StructType([
@@ -567,26 +527,17 @@ def mm_image_dims(spark, sf):
     cousin of the rows-only metric queries."""
     imgs = image_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def run(doc_id, kind, blob):
         from ..kernel import png as pngc
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["img_kind"].values,
-                    pdf["png"].values):
-                arr = pngc.decode(bytes(blob))
-                rows.append({
-                    "doc_id": int(doc_id), "img_kind": kind,
-                    "width": int(arr.shape[1]),
-                    "height": int(arr.shape[0]),
-                    "mode": "RGB" if arr.ndim == 3 else "L",
-                })
-            yield pd.DataFrame(rows)
+        arr = pngc.decode(blob)
+        yield {
+            "doc_id": doc_id, "img_kind": kind,
+            "width": arr.shape[1], "height": arr.shape[0],
+            "mode": "RGB" if arr.ndim == 3 else "L",
+        }
 
-    return imgs.mapInPandas(run, schema=_DIMS_SCHEMA)
+    return map_rows(imgs, run, _DIMS_SCHEMA)
 
 
 def _noise_sql(mod: int) -> str:
@@ -760,37 +711,29 @@ def mm_image_metrics_int(spark, sf):
     fan-out, zero shuffles (the output is per-image)."""
     imgs = image_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(doc_id, kind, blob):
         import numpy as np
-        import pandas as pd
 
         from ..kernel import png as pngc
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["img_kind"].values,
-                    pdf["png"].values):
-                arr = pngc.decode(bytes(blob))
-                h, w = arr.shape[0], arr.shape[1]
-                npix = h * w
-                bucket = ("small" if npix < 4096
-                          else "medium" if npix < 8192 else "large")
-                s = int(arr.sum(dtype=np.int64))
-                n_vals = int(arr.size)
-                rows.append({
-                    "doc_id": int(doc_id), "img_kind": kind,
-                    "width": w, "height": h,
-                    "res_bucket": bucket,
-                    "n_vals": n_vals,
-                    "pix_sum": s,
-                    "pix_min": int(arr.min()),
-                    "pix_max": int(arr.max()),
-                    "brightness_mean": s / n_vals,
-                })
-            yield pd.DataFrame(rows)
+        arr = pngc.decode(blob)
+        h, w = arr.shape[0], arr.shape[1]
+        npix = h * w
+        bucket = ("small" if npix < 4096
+                  else "medium" if npix < 8192 else "large")
+        s = int(arr.sum(dtype=np.int64))
+        yield {
+            "doc_id": doc_id, "img_kind": kind,
+            "width": w, "height": h,
+            "res_bucket": bucket,
+            "n_vals": arr.size,
+            "pix_sum": s,
+            "pix_min": int(arr.min()),
+            "pix_max": int(arr.max()),
+            "brightness_mean": s / arr.size,
+        }
 
-    return imgs.mapInPandas(run, schema=_METRICS_INT_SCHEMA)
+    return map_rows(imgs, run, _METRICS_INT_SCHEMA)
 
 
 # channel-value sum of one pixel: RGB channels derive from gray by
@@ -857,42 +800,34 @@ def dd_image_ahash(spark, sf):
     plan with a decoded-feature key."""
     imgs = image_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(doc_id, kind, blob):
         import numpy as np
-        import pandas as pd
 
         from ..kernel import png as pngc
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["img_kind"].values,
-                    pdf["png"].values):
-                arr = pngc.decode(bytes(blob))
-                if arr.ndim == 2:
-                    luma = arr.astype(np.int64)
-                else:
-                    r = arr[:, :, 0].astype(np.int64)
-                    g = arr[:, :, 1].astype(np.int64)
-                    b = arr[:, :, 2].astype(np.int64)
-                    luma = (r * 299 + g * 587 + b * 114) // 1000
-                h, w = luma.shape
-                ts, tn = int(luma.sum()), h * w
-                # block id per pixel: by = y*8//h (NOT the by*h//8
-                # slice boundaries — the two partitions differ when
-                # h % 8 != 0, e.g. h=10 puts y=2 in different blocks)
-                byi = (np.arange(h) * 8) // h
-                bxi = (np.arange(w) * 8) // w
-                bid = (byi[:, None] * 8 + bxi[None, :]).ravel()
-                bs = np.bincount(bid, weights=luma.ravel(),
-                                 minlength=64).astype(np.int64)
-                bn = np.bincount(bid, minlength=64)
-                bits = np.where(bs * tn > ts * bn, "1", "0")
-                rows.append({"doc_id": int(doc_id), "img_kind": kind,
-                             "ahash": "".join(bits)})
-            yield pd.DataFrame(rows)
+        arr = pngc.decode(blob)
+        if arr.ndim == 2:
+            luma = arr.astype(np.int64)
+        else:
+            r = arr[:, :, 0].astype(np.int64)
+            g = arr[:, :, 1].astype(np.int64)
+            b = arr[:, :, 2].astype(np.int64)
+            luma = (r * 299 + g * 587 + b * 114) // 1000
+        h, w = luma.shape
+        ts, tn = int(luma.sum()), h * w
+        # block id per pixel: by = y*8//h (NOT the by*h//8 slice
+        # boundaries — the two partitions differ when h % 8 != 0,
+        # e.g. h=10 puts y=2 in different blocks)
+        byi = (np.arange(h) * 8) // h
+        bxi = (np.arange(w) * 8) // w
+        bid = (byi[:, None] * 8 + bxi[None, :]).ravel()
+        bs = np.bincount(bid, weights=luma.ravel(),
+                         minlength=64).astype(np.int64)
+        bn = np.bincount(bid, minlength=64)
+        bits = np.where(bs * tn > ts * bn, "1", "0")
+        yield {"doc_id": doc_id, "img_kind": kind, "ahash": "".join(bits)}
 
-    sigs = imgs.mapInPandas(run, schema=_AHASH_SCHEMA)
+    sigs = map_rows(imgs, run, _AHASH_SCHEMA)
     return (
         sigs.groupBy("ahash", "img_kind")
         .agg(F.min("doc_id").alias("keeper_id"),

@@ -1,8 +1,9 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 This module keeps the generic binary plumbing (BinaryType columns,
-mapInPandas batch shapes, typed metadata structs, frame-sampling UDTF
-expansion). The REAL decode paths live next door:
+typed metadata structs, and the frame-sampling UDTF expansion: a
+per-row function run through kernel.batch.map_rows, 1 row in → k rows
+out). The REAL decode paths live next door:
 `operators/imageops.py` (pure-stdlib PNG codec + numpy
 metrics/enhance/resize, incl. the oracled mm_image_dims decode check)
 and `operators/audioops.py` (stdlib WAV decode + numpy features).
@@ -15,9 +16,6 @@ engines."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -27,10 +25,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernel.batch import map_rows
 from .relational import T
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 
 def _payloads(spark, sf):
@@ -67,26 +63,15 @@ _FRAME_SCHEMA = StructType([
 ])
 
 
-def _frame_batches(
-    batches: Iterator["pd.DataFrame"],
-) -> Iterator["pd.DataFrame"]:
+def _frames(doc_id, payload):
     """UDTF-shaped expansion: N deterministic 'frames' per payload
     (video frame-sampling stand-in; 1 row in → k rows out)."""
-    import pandas as pd
-
-    for pdf in batches:
-        ids, nos, frames = [], [], []
-        for doc_id, payload in zip(pdf["doc_id"].values,
-                                   pdf["payload"].values):
-            payload = payload if payload is not None else b""
-            k = min(3, max(1, len(payload) // 100))
-            step = max(1, len(payload) // max(k, 1))
-            for i in range(k):
-                ids.append(doc_id)
-                nos.append(i)
-                frames.append(payload[i * step:i * step + 16])
-        yield pd.DataFrame(
-            {"doc_id": ids, "frame_no": nos, "frame_bytes": frames})
+    payload = payload if payload is not None else b""
+    k = min(3, max(1, len(payload) // 100))
+    step = max(1, len(payload) // max(k, 1))
+    for i in range(k):
+        yield {"doc_id": doc_id, "frame_no": i,
+               "frame_bytes": payload[i * step:i * step + 16]}
 
 
 def mm_frame_sample(spark, sf):
@@ -94,8 +79,7 @@ def mm_frame_sample(spark, sf):
     # (BinaryType through Arrow, 1→k row expansion) stays real, but
     # the query's output columns are plain strings the driver's hash
     # harness can canonicalize.
-    df = _payloads(spark, sf).mapInPandas(
-        _frame_batches, schema=_FRAME_SCHEMA)
+    df = map_rows(_payloads(spark, sf), _frames, _FRAME_SCHEMA)
     return df.select("doc_id", "frame_no",
                      F.md5("frame_bytes").alias("frame_md5"))
 

@@ -43,7 +43,7 @@ def spread(df: DataFrame, *key: str) -> DataFrame:
     plans/extract.py's no-pre-kernel-shuffle note). One partition per
     core: wave-smoothing multipliers (x4) were A/B'd and LOST on the
     Python-heavy consumers (ex4 1.56s vs 1.10s, mm_image_metrics
-    3.97s vs 3.17s at sf1.0) — every extra mapInPandas/mapInArrow
+    3.97s vs 3.17s at sf1.0) — every extra mapInArrow/applyInArrow
     task pays an Arrow-stream + worker handshake that outweighs the
     straggler tail. The hash key (unique id) is deterministic, so
     task retries can't duplicate rows (guide §2.5 rand-key warning),

@@ -16,9 +16,6 @@ tests/test_videoops.py (static clips → motion 0; moving-square clips
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -30,10 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..kernel.batch import map_rows
 from .relational import T
-
-if TYPE_CHECKING:
-    import pandas as pd
 
 SAMPLE_EVERY = 2  # keep every 2nd frame
 
@@ -81,22 +76,14 @@ def video_payloads(spark, sf):
     ids = (T(spark, sf, "documents").select("doc_id")
            .repartition(spark.sparkContext.defaultParallelism))
 
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def gen(doc_id):
         from ..kernel import avi as avic
 
-        for pdf in batches:
-            out, kinds, blobs = [], [], []
-            for doc_id in pdf["doc_id"].values:
-                kind, frames = synth_clip(int(doc_id))
-                out.append(int(doc_id))
-                kinds.append(kind)
-                blobs.append(avic.encode(frames, fps=10))
-            yield pd.DataFrame(
-                {"doc_id": out, "clip_kind": kinds, "avi": blobs})
+        kind, frames = synth_clip(doc_id)
+        yield {"doc_id": doc_id, "clip_kind": kind,
+               "avi": avic.encode(frames, fps=10)}
 
-    return ids.mapInPandas(gen, schema=_CLIP_SCHEMA)
+    return map_rows(ids, gen, _CLIP_SCHEMA)
 
 
 def mm_video_frames(spark, sf):
@@ -115,34 +102,27 @@ def mm_video_frames(spark, sf):
     side breaks the hash match."""
     clips = video_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(doc_id, kind, blob):
         import numpy as np
-        import pandas as pd
 
         from ..kernel import avi as avic
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["clip_kind"].values,
-                    pdf["avi"].values):
-                fps, frames = avic.decode(bytes(blob))
-                prev = None
-                for i in range(0, len(frames), SAMPLE_EVERY):
-                    f = frames[i].astype(np.float64)
-                    motion = (float(np.abs(f - prev).mean())
-                              if prev is not None else 0.0)
-                    rows.append({
-                        "doc_id": int(doc_id), "clip_kind": kind,
-                        "fps": fps, "frame_no": i,
-                        "width": f.shape[1], "height": f.shape[0],
-                        "brightness": round(float(f.mean()), 6),
-                        "motion": round(motion, 6),
-                    })
-                    prev = f
-            yield pd.DataFrame(rows)
+        fps, frames = avic.decode(blob)
+        prev = None
+        for i in range(0, len(frames), SAMPLE_EVERY):
+            f = frames[i].astype(np.float64)
+            motion = (float(np.abs(f - prev).mean())
+                      if prev is not None else 0.0)
+            yield {
+                "doc_id": doc_id, "clip_kind": kind,
+                "fps": fps, "frame_no": i,
+                "width": f.shape[1], "height": f.shape[0],
+                "brightness": round(float(f.mean()), 6),
+                "motion": round(motion, 6),
+            }
+            prev = f
 
-    return clips.mapInPandas(run, schema=_FRAME_SCHEMA)
+    return map_rows(clips, run, _FRAME_SCHEMA)
 
 
 _DIMS_SCHEMA = StructType([
@@ -163,27 +143,17 @@ def mm_video_dims(spark, sf):
     match."""
     clips = video_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def run(doc_id, kind, blob):
         from ..kernel import avi as avic
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["clip_kind"].values,
-                    pdf["avi"].values):
-                fps, frames = avic.decode(bytes(blob))
-                rows.append({
-                    "doc_id": int(doc_id), "clip_kind": kind,
-                    "fps": fps,
-                    "width": int(frames[0].shape[1]),
-                    "height": int(frames[0].shape[0]),
-                    "n_frames": len(frames),
-                })
-            yield pd.DataFrame(rows)
+        fps, frames = avic.decode(blob)
+        yield {
+            "doc_id": doc_id, "clip_kind": kind, "fps": fps,
+            "width": frames[0].shape[1], "height": frames[0].shape[0],
+            "n_frames": len(frames),
+        }
 
-    return clips.mapInPandas(run, schema=_DIMS_SCHEMA)
+    return map_rows(clips, run, _DIMS_SCHEMA)
 
 
 # mirrors synth_clip pixel math + the SAMPLE_EVERY=2 sampling of
@@ -279,34 +249,24 @@ def mm_video_scenes(spark, sf):
     changes the column sets and breaks the hash."""
     clips = video_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
+    def run(doc_id, kind, blob):
         from ..kernel import avi as avic
 
-        for pdf in batches:
-            rows = []
-            for doc_id, kind, blob in zip(
-                    pdf["doc_id"].values, pdf["clip_kind"].values,
-                    pdf["avi"].values):
-                _fps, frames = avic.decode(bytes(blob))
-                cuts, mx = 0, 0
-                for i in range(1, len(frames)):
-                    diff_cols = int(
-                        (frames[i] != frames[i - 1])
-                        .any(axis=(0, 2)).sum())
-                    mx = max(mx, diff_cols)
-                    if diff_cols >= SCENE_MIN_COLS:
-                        cuts += 1
-                rows.append({
-                    "doc_id": int(doc_id), "clip_kind": kind,
-                    "n_frames": len(frames), "n_cuts": cuts,
-                    "max_diff_cols": mx,
-                })
-            yield pd.DataFrame(rows)
+        _fps, frames = avic.decode(blob)
+        cuts, mx = 0, 0
+        for i in range(1, len(frames)):
+            diff_cols = int(
+                (frames[i] != frames[i - 1]).any(axis=(0, 2)).sum())
+            mx = max(mx, diff_cols)
+            if diff_cols >= SCENE_MIN_COLS:
+                cuts += 1
+        yield {
+            "doc_id": doc_id, "clip_kind": kind,
+            "n_frames": len(frames), "n_cuts": cuts,
+            "max_diff_cols": mx,
+        }
 
-    return clips.mapInPandas(run, schema=_SCENE_SCHEMA)
+    return map_rows(clips, run, _SCENE_SCHEMA)
 
 
 # analytic mirror: consecutive squares at x0(f) = (f*5) % (w-8) and
@@ -372,28 +332,21 @@ def dd_video_frame_dup(spark, sf):
     the codec."""
     clips = video_payloads(spark, sf)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def run(doc_id, _kind, blob):
         import numpy as np
-        import pandas as pd
 
         from ..kernel import avi as avic
 
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"].values,
-                                    pdf["avi"].values):
-                _fps, frames = avic.decode(bytes(blob))
-                for i in range(0, len(frames), SAMPLE_EVERY):
-                    f = frames[i].astype(np.int64)
-                    h, w = f.shape[0], f.shape[1]
-                    xw = np.arange(w, dtype=np.int64)[None, :, None]
-                    rows.append({
-                        "doc_id": int(doc_id), "frame_no": i,
-                        "w": w, "h": h,
-                        "psum": int(f.sum()),
-                        "pmom": int((xw * f).sum()),
-                    })
-            yield pd.DataFrame(rows)
+        _fps, frames = avic.decode(blob)
+        for i in range(0, len(frames), SAMPLE_EVERY):
+            f = frames[i].astype(np.int64)
+            h, w = f.shape[0], f.shape[1]
+            xw = np.arange(w, dtype=np.int64)[None, :, None]
+            yield {
+                "doc_id": doc_id, "frame_no": i, "w": w, "h": h,
+                "psum": int(f.sum()),
+                "pmom": int((xw * f).sum()),
+            }
 
     # persist the fingerprint relation (a few ints per sampled frame):
     # it feeds three consumers (dup agg, per-doc agg, dup_per join) and
@@ -403,7 +356,7 @@ def dd_video_frame_dup(spark, sf):
     # by test_video_audio_dup_decode_once)
     from pyspark import StorageLevel
 
-    fr = (clips.mapInPandas(run, schema=_FRAMESIG_SCHEMA)
+    fr = (map_rows(clips, run, _FRAMESIG_SCHEMA)
           .persist(StorageLevel.MEMORY_AND_DISK))
     sig = ["w", "h", "psum", "pmom"]
     dup = (fr.groupBy(*sig)

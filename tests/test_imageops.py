@@ -237,24 +237,32 @@ def _id_batch(ids):
 
 
 def test_metrics_batches_match_from_pylist():
-    """_metrics_batches assembles its output from buffers; the batches
-    must equal what from_pylist builds over the same fused_report rows
-    with the query's Arrow schema — over ids covering all five kinds
-    (and gray/RGB), and over a zero-row batch, whose arrays must come
-    out zero-length and typed."""
+    """row_batches assembles its output from buffers; the batches must
+    equal what from_pylist builds over the same per-row function's
+    rows with the query's Arrow schema. mm_image_metrics' _metrics_row
+    runs over ids covering all five kinds (and gray/RGB), and over a
+    zero-row batch, whose arrays must come out zero-length and typed;
+    mm_frame_sample's _frames covers 1→k expansion and a binary
+    column with a null."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    from pdf_extraction_api_spark.kernel.batch import row_batches
     from pdf_extraction_api_spark.operators.imageops import (
         _KINDS,
         _METRICS_SCHEMA,
-        _metrics_batches,
+        _metrics_row,
         fused_report,
+    )
+    from pdf_extraction_api_spark.operators.multimodal import (
+        _FRAME_SCHEMA,
+        _frames,
     )
 
     schema = to_arrow_schema(_METRICS_SCHEMA)
     id_batches = [range(0, 7), range(7, 8), range(30, 45), range(0)]
-    got = list(_metrics_batches(_id_batch(ids) for ids in id_batches))
+    got = list(row_batches(_metrics_row, _METRICS_SCHEMA,
+                           (_id_batch(ids) for ids in id_batches)))
     assert len(got) == len(id_batches)
     kinds = set()
     for ids, rb in zip(id_batches, got):
@@ -272,12 +280,24 @@ def test_metrics_batches_match_from_pylist():
     assert [len(c) for c in empty.columns] == [0] * len(schema)
     assert [c.type for c in empty.columns] == list(schema.types)
 
+    schema = to_arrow_schema(_FRAME_SCHEMA)
+    payloads = [None, b"", bytes(range(50)), bytes(range(250)) + bytes(100)]
+    rb =pa.RecordBatch.from_arrays(
+        [pa.array(range(len(payloads)), pa.int64()),
+         pa.array(payloads, pa.binary())], names=["doc_id", "payload"])
+    got = list(row_batches(_frames, _FRAME_SCHEMA, [rb, rb.slice(0, 0)]))
+    rows = [r for i, p in enumerate(payloads) for r in _frames(i, p)]
+    assert [r["doc_id"] for r in rows] == [0, 1, 2, 3, 3, 3]
+    assert got[0].equals(pa.RecordBatch.from_pylist(rows, schema=schema))
+    assert got[1].num_rows == 0 and got[1].schema == schema
+
 
 def test_image_metrics_worker_never_imports_pandas(tmp_path):
     """mm_image_metrics is a mapInArrow, so its workers never need
-    pandas, and the per-batch body must not load it (~38 MB RSS per
-    worker, kept for the life of a reused worker): run it over a few
-    doc_id batches in a fresh interpreter and check sys.modules. The
+    pandas, and its body (row_batches over _metrics_row) must not
+    load it (~38 MB RSS per worker, kept for the life of a reused
+    worker): run it over a few doc_id batches in a fresh interpreter
+    and check sys.modules. The
     ids go through an Arrow IPC file because pyarrow.parquet imports
     pandas itself."""
     import subprocess
@@ -294,12 +314,14 @@ def test_image_metrics_worker_never_imports_pandas(tmp_path):
     script = (
         "import sys\n"
         "import pyarrow as pa\n"
+        "from pdf_extraction_api_spark.kernel.batch import row_batches\n"
         "from pdf_extraction_api_spark.operators.imageops import"
-        " _metrics_batches\n"
+        " _METRICS_SCHEMA, _metrics_row\n"
         "with pa.ipc.open_file(sys.argv[1]) as f:\n"
         "    batches = [f.get_batch(i)"
         " for i in range(f.num_record_batches)]\n"
-        "rows = sum(b.num_rows for b in _metrics_batches(iter(batches)))\n"
+        "rows = sum(b.num_rows for b in"
+        " row_batches(_metrics_row, _METRICS_SCHEMA, iter(batches)))\n"
         "print(rows, 'pandas' in sys.modules)\n"
     )
     # `python -c` puts the working directory first on sys.path

@@ -253,37 +253,26 @@ def test_asof_join_tie_semantics(spark):
 
 def test_registry_plan_lint(spark, registry):
     """No registry query may plan a CartesianProduct (unbounded pair
-    blowup) or row-at-a-time Python (BatchEvalPython / scalar
-    PythonUDF) — the two anti-patterns that silently kill 100 TB runs.
-    Arrow-batched mapInArrow/mapInPandas/applyInPandas operators are
-    the only sanctioned Python."""
+    blowup), row-at-a-time Python (BatchEvalPython / scalar PythonUDF)
+    — the anti-patterns that silently kill 100 TB runs — or a pandas
+    UDF (any *InPandas operator: MapInPandas, FlatMapGroupsInPandas,
+    AggregateInPandas, WindowInPandas). Python workers are reused
+    across queries, so one pandas UDF loads pandas (~38 MB) into every
+    worker that runs it. Arrow-batched mapInArrow (kernel.batch's
+    map_rows) and groupBy().applyInArrow are the only sanctioned
+    Python."""
     queries, _ = registry
     offenders = {}
     for name, fn in queries.items():
         plan = (fn(spark, SF)
                 ._jdf.queryExecution().executedPlan().toString())
         bad = [pat for pat in
-               ("CartesianProduct", "BatchEvalPython", "PythonUDF")
+               ("CartesianProduct", "BatchEvalPython", "PythonUDF",
+                "InPandas")
                if pat in plan]
         if bad:
             offenders[name] = bad
     assert offenders == {}, offenders
-
-
-def test_headline_plans_have_no_pandas_udf(spark, registry):
-    """Python workers are reused across queries, so one pandas UDF
-    among the headline queries loads pandas (~38 MB) into every worker
-    of the headline pass. No headline plan may hold an *InPandas
-    operator (MapInPandas, FlatMapGroupsInPandas, AggregateInPandas,
-    WindowInPandas); their Python runs as mapInArrow."""
-    from perfbench.run import HEADLINE
-
-    queries, _ = registry
-    offenders = [
-        name for name in HEADLINE
-        if "InPandas" in (queries[name](spark, SF)._jdf.queryExecution()
-                          .executedPlan().toString())]
-    assert offenders == [], offenders
 
 
 def test_bpe_tokens_vertical_tab_parity(spark, tmp_path):
@@ -492,7 +481,7 @@ def test_video_audio_dup_decode_once(spark, registry):
     must run their decode fan-out ONCE. The fingerprint relation is
     persisted, so the plan shows exactly one InMemoryTableScan per
     consumer (video: dup agg + per-doc agg + dup_per join = 3;
-    audio: groups agg + join back = 2) and every MapInPandas
+    audio: groups agg + join back = 2) and every MapInArrow
     occurrence in the plan string is the cached plan reprinted under
     its scans (2 per scan: payload synth + fingerprint pass) — a live
     decode subtree outside the cache would push the count past
@@ -505,7 +494,7 @@ def test_video_audio_dup_decode_once(spark, registry):
         p = (queries[name](spark, SF)
              ._jdf.queryExecution().executedPlan().toString())
         assert p.count("InMemoryTableScan") == n_consumers, (name, p)
-        assert p.count("MapInPandas") <= 2 * n_consumers, (name, p)
+        assert p.count("MapInArrow") <= 2 * n_consumers, (name, p)
 
 
 def test_r8_optimized_ops_parallelism_determinism(spark, registry):
