@@ -94,15 +94,21 @@ _CRASH = -2       # html.parser would raise AssertionError here
 #   group 2 — simple start tag name: tagfind_tolerant + immediate '>'
 #             (the gate `tagfind.match; s[k]=='>'`, where
 #             parse_starttag yields start(tag, []) with no attrfind
-#             walk; backtracking cannot widen it — the trailing class
-#             chars are never '>', so giving one back still fails)
+#             walk). The tagfind part is an atomic group, because
+#             backtracking into it can never find the '>': each char
+#             it gives back is a name, whitespace or '/' char, and a
+#             shorter name only lets the trailing \s|/ run retake the
+#             same chars and stop where it stopped before. So a failed
+#             gate fails at once instead of backtracking through the
+#             whole name run, which made runs of unterminated `<a`
+#             quadratic on top of html.parser's own rescans
 #   group 3 — end tag name: endtagfind verbatim (sans the leading '<')
 # Anything else (attrs, comments, PIs, marked sections, EOF '<') makes
 # both tag groups None and falls to the verbatim slow dispatch.
 # The refkernel parity suites gate this (tests/test_htmlscan.py,
 # tests/test_fuzz_parity.py).
 _FUSED_TOKEN = re.compile(
-    "([^<]*)<(?:" + _TAGFIND.pattern + ">|"
+    "([^<]*)<(?:(?>" + _TAGFIND.pattern + ")>|"
     + _ENDTAGFIND.pattern[1:] + ")?")
 assert _FUSED_TOKEN.groups == 3, "stdlib tokenizer patterns changed shape"
 

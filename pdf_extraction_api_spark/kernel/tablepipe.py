@@ -26,7 +26,6 @@ from .lexicon import (
 
 _WS = re.compile(r"\s+")
 _NUMERIC = re.compile(r"^-?\d+\.?\d*$")
-_NUMERIC_MATCH = _NUMERIC.match
 
 
 def _numeric_match(c: str) -> bool:

@@ -312,15 +312,6 @@ FROM documents
 """
 
 
-_ADUP_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("audio_kind", StringType()),
-    StructField("n_samples", LongType()),
-    StructField("n_twins", LongType()),
-    StructField("is_dup", StringType()),   # 'true'/'false' hash-stable
-])
-
-
 def dd_audio_dup(spark, sf):
     """Cross-clip duplicate-AUDIO detection — the audio leg of the
     multimodal dedup family beside [dd_image_ahash] and

@@ -43,7 +43,6 @@ from .vectorops import (
     _KM_COS,
     _cosine,
     _dim_of,
-    _with_norm,
     EMBED_BUCKET_CAP,
     KMEANS_FINAL_CTES,
     kmeans_cells,
@@ -308,8 +307,7 @@ def dd_semdedup(spark, sf):
             # salted key is "cell#shard" — recover the cell id
             F.split("key", "#").getItem(0).cast("long").alias("cell"),
             "doc_a", "doc_b",
-            (_cosine("q_v", "c_v")
-             / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
+            _cosine().alias("cos"),
         )
         .filter(F.col("cos") >= SEM_TAU)
     )

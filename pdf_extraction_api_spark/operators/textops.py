@@ -63,11 +63,27 @@ def ws_tokens(col: str = "text"):
     """THE whitespace tokenizer — the cross-engine parity contract
     every text operator's oracle depends on (Java \\s+ split, empties
     dropped). New operators must use this helper (and WS_TOKS_SQL on
-    the oracle side) instead of inlining the expression; the older
-    textops call sites predate it and are left inline deliberately —
-    editing their function sources would churn the committed
-    QUERY_FPRINTS of driver-green queries for zero semantic change."""
+    the oracle side) instead of inlining the expression. The shared
+    shingle helpers call it; the older registry query functions that
+    predate it keep the expression inline deliberately — editing their
+    sources would churn the committed QUERY_FPRINTS of oracle-verified
+    queries for zero semantic change."""
     return F.filter(F.split(col, r"\s+"), lambda x: x != "")
+
+
+def _shingle_col(toks):
+    """The SHINGLE-token windows of the `toks` array column, each
+    joined by one space (docs shorter than SHINGLE must be filtered
+    out first: sequence(0, size - SHINGLE) would run backwards)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.size(toks) - SHINGLE),
+        lambda i: F.concat_ws(
+            " ",
+            F.element_at(toks, i + 1),
+            F.element_at(toks, i + 2),
+            F.element_at(toks, i + 3),
+        ),
+    )
 
 
 # the DuckDB mirror of ws_tokens (RE2 \s+ split + empty filter)
@@ -105,21 +121,10 @@ def _shingle_arrays(spark, sf) -> DataFrame:
     # lambda captures): measured 5x slowdown. CollapseProject keeps
     # the tiers separate because the aliases are non-cheap and
     # multiply referenced.
-    toked = d.select(
-        "doc_id",
-        F.filter(F.split("text", r"\s+"), lambda x: x != "").alias("toks"),
-    ).filter(F.size("toks") >= SHINGLE)
-    toks = F.col("toks")
-    sh = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - SHINGLE),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(toks, i + 1),
-            F.element_at(toks, i + 2),
-            F.element_at(toks, i + 3),
-        ),
-    )
-    return toked.select("doc_id", F.array_distinct(sh).alias("shs"))
+    toked = d.select("doc_id", ws_tokens().alias("toks")).filter(
+        F.size("toks") >= SHINGLE)
+    return toked.select(
+        "doc_id", F.array_distinct(_shingle_col("toks")).alias("shs"))
 
 
 def _shingles(spark, sf) -> DataFrame:
@@ -140,22 +145,12 @@ def _shingles(spark, sf) -> DataFrame:
     (dd_ngram_jaccard) are safe — the inferred filter then runs over
     cached arrays."""
     d = spread(T(spark, sf, "documents"), "doc_id")
-    toked = d.select(
-        "doc_id",
-        F.filter(F.split("text", r"\s+"), lambda x: x != "").alias("toks"),
-    ).filter(F.size("toks") >= SHINGLE)
-    toks = F.col("toks")
-    sh = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - SHINGLE),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(toks, i + 1),
-            F.element_at(toks, i + 2),
-            F.element_at(toks, i + 3),
-        ),
-    )
+    toked = d.select("doc_id", ws_tokens().alias("toks")).filter(
+        F.size("toks") >= SHINGLE)
     return toked.select(
-        "doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
+        "doc_id",
+        F.explode(F.array_distinct(_shingle_col("toks")))
+        .alias("shingle"))
 
 
 _SHINGLES_SQL = f"""
@@ -1492,19 +1487,12 @@ def incremental_verdicts(new_docs: DataFrame,
         .select("doc_id").distinct()
         .withColumn("exact", F.lit("true"))
     )
-    toked = new_docs.select(
-        "doc_id",
-        F.filter(F.split("text", r"\s+"), lambda x: x != "").alias("toks"),
-    ).filter(F.size("toks") >= SHINGLE)
-    toks = F.col("toks")
-    sh = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - SHINGLE),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i + 1), F.element_at(toks, i + 2),
-            F.element_at(toks, i + 3)),
-    )
+    toked = new_docs.select("doc_id", ws_tokens().alias("toks")).filter(
+        F.size("toks") >= SHINGLE)
     new_sh = toked.select(
-        "doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
+        "doc_id",
+        F.explode(F.array_distinct(_shingle_col("toks")))
+        .alias("shingle"))
     new_s = _band_keys(new_sh)
     near = (
         hist_sigs.select("key").join(F.broadcast(new_s), "key")

@@ -1,17 +1,25 @@
-"""Similarity search over the `embeddings` table (array<float>).
+"""Similarity search and near-duplicate detection over the `embeddings`
+table (array<float>).
 
-- ann_topk_brute  — brute-force cosine top-k (the correctness baseline):
-  dot product via zip_with + aggregate (JVM higher-order functions, no
-  Python), rank via window.
-- ann_ivf_label   — the scale path: IVF-style coarse partition using the
-  `label` column as the cluster id; the query only scans its own
-  cluster's candidates (at 100 TB: co-partition by centroid id, the
-  probe is a partition-pruned equi join instead of a cross join).
-- dd_embed_cosine — embedding near-duplicate pairs above a cosine
-  threshold within clusters.
+- Exact and approximate top-k: ann_topk_brute (the brute-force recall
+  baseline), ann_ivf_label / ann_ivf_probe / ann_ivf_kmeans (IVF over
+  the query's own label, its nearest label means, or its nearest
+  k-means-learned cells), ann_multiprobe_lsh
+  (hyperplane-signature buckets at Hamming distance <= 1) and
+  ann_sq8_rerank (scalar-quantized scan, exact rerank).
+- Near-duplicate pairs: dd_embed_cosine (label blocks), dd_embed_lsh
+  (signature buckets) and dd_incremental_embed (a new batch probed
+  against history).
+- Vector transforms: vec_pca_power and vec_rp_project.
 
-Cosine is computed in full double precision on both engines; reported
-values rounded to 4 decimals (ranking uses full precision).
+The search and dedup queries (and curation.dd_semdedup) score, rank
+and verify through one set of helpers, which hold the cross-engine
+contract the DuckDB oracles pin: `_norm` / `_dot` fold in double in
+element order, `_cosine` divides by the `_with_norm` norms, `_top_k`
+ranks by (cos DESC, c_id ASC), `_nearest_cells` probes the N_PROBE
+nearest centroids by (ccos DESC, cell ASC), and `_verified_pairs`
+keeps candidate pairs with exact cosine >= SIM_THRESHOLD. Ranking uses
+full precision; reported values are rounded to 4 decimals.
 """
 
 from __future__ import annotations
@@ -44,29 +52,83 @@ N_PROBE = 3
 # all vector math onto one task).
 
 
+def _norm(col):
+    """Euclidean norm of an array column, summed in double."""
+    return F.sqrt(F.aggregate(
+        col, F.lit(0.0),
+        lambda acc, x: acc + x.cast("double") * x.cast("double")))
+
+
+def _dot(a, b):
+    """Dot product of two array columns, summed in double in element
+    order (what DuckDB's list_dot_product reproduces at 4 dp)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def _with_norm(df: DataFrame, vec: str, prefix: str) -> DataFrame:
     return df.select(
         F.col("vec_id").alias(f"{prefix}_id"),
         F.col("label").alias(f"{prefix}_label"),
         F.col(vec).alias(f"{prefix}_v"),
-        F.sqrt(
-            F.aggregate(
-                F.col(vec),
-                F.lit(0.0),
-                lambda acc, x: acc + x.cast("double") * x.cast("double"),
-            )
-        ).alias(f"{prefix}_norm"),
+        _norm(vec).alias(f"{prefix}_norm"),
     )
 
 
-def _cosine(a: str, b: str):
-    dot = F.aggregate(
-        F.zip_with(F.col(a), F.col(b),
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _cosine(a: str = "q", b: str = "c"):
+    """Cosine of the `{a}_v` and `{b}_v` vectors over their `_norm`
+    columns (the `_with_norm` layout)."""
+    return (_dot(f"{a}_v", f"{b}_v")
+            / (F.col(f"{a}_norm") * F.col(f"{b}_norm")))
+
+
+def _top_k(scored: DataFrame, lead=(), tail=()) -> DataFrame:
+    """The K best (q_id, c_id, cos) rows per query, ranked by (cos
+    DESC, c_id ASC): (q_id, *lead, rank, neighbor_id, cos_sim, *tail)
+    with cos_sim rounded to 4 dp."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= K)
+        .select("q_id", *lead, "rank", F.col("c_id").alias("neighbor_id"),
+                F.round("cos", 4).alias("cos_sim"), *tail)
     )
-    return dot
+
+
+def _nearest_cells(q: DataFrame, cent: DataFrame, cell: str,
+                   out: str) -> DataFrame:
+    """Each query's N_PROBE nearest centroids by cosine, ties to the
+    lowest `cell`: (q_id, q_v, q_norm, `out`) against the broadcast
+    (cell, cvec) table."""
+    qc = q.crossJoin(F.broadcast(cent)).select(
+        "q_id", "q_v", "q_norm", cell,
+        (_dot("q_v", "cvec")
+         / (F.col("q_norm") * _norm("cvec"))).alias("ccos"),
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc("ccos"), F.asc(cell))
+    return (
+        qc.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= N_PROBE)
+        .select("q_id", "q_v", "q_norm", F.col(cell).alias(out))
+    )
+
+
+def _verified_pairs(cand: DataFrame, e: DataFrame, *keep) -> DataFrame:
+    """Candidate (doc_a, doc_b, *keep) pairs whose exact cosine is >=
+    SIM_THRESHOLD, with cos_sim rounded to 4 dp."""
+    a = _with_norm(e, "embedding", "q").select(
+        F.col("q_id").alias("doc_a"), "q_v", "q_norm")
+    b = _with_norm(e, "embedding", "c").select(
+        F.col("c_id").alias("doc_b"), "c_v", "c_norm")
+    return (
+        cand.join(a, "doc_a").join(b, "doc_b")
+        .select("doc_a", "doc_b", *keep, _cosine().alias("cos"))
+        .filter(F.col("cos") >= SIM_THRESHOLD)
+        .select("doc_a", "doc_b", *keep, F.round("cos", 4).alias("cos_sim"))
+    )
 
 
 def ann_topk_brute(spark, sf):
@@ -82,22 +144,10 @@ def ann_topk_brute(spark, sf):
     e = spread(T(spark, sf, "embeddings"), "vec_id")
     q = _with_norm(e.filter(F.col("vec_id") < N_QUERIES), "embedding", "q")
     c = _with_norm(e, "embedding", "c")
-    scored = (
+    return _top_k(
         q.crossJoin(c)
         .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id", "c_id",
-            (_cosine("q_v", "c_v")
-             / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("q_id", "rank", F.col("c_id").alias("neighbor_id"),
-                F.round("cos", 4).alias("cos_sim"))
-    )
+        .select("q_id", "c_id", _cosine().alias("cos")))
 
 
 ANN_BRUTE_SQL = f"""
@@ -124,22 +174,10 @@ def ann_ivf_label(spark, sf):
     e = spread(T(spark, sf, "embeddings"), "vec_id")
     q = _with_norm(e.filter(F.col("vec_id") < N_QUERIES), "embedding", "q")
     c = _with_norm(e, "embedding", "c")
-    scored = (
+    return _top_k(
         q.join(c, (F.col("q_label") == F.col("c_label"))
                & (F.col("q_id") != F.col("c_id")))
-        .select(
-            "q_id", "c_id",
-            (_cosine("q_v", "c_v")
-             / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("q_id", "rank", F.col("c_id").alias("neighbor_id"),
-                F.round("cos", 4).alias("cos_sim"))
-    )
+        .select("q_id", "c_id", _cosine().alias("cos")))
 
 
 ANN_IVF_SQL = f"""
@@ -182,20 +220,7 @@ def dd_embed_cosine(spark, sf):
     cand = capped_bucket_pairs(
         e.select("label", "vec_id"), "label", "vec_id", LABEL_BLOCK_CAP
     ).select("doc_a", "doc_b")
-    a = _with_norm(e, "embedding", "q").select(
-        F.col("q_id").alias("doc_a"), "q_v", "q_norm")
-    b = _with_norm(e, "embedding", "c").select(
-        F.col("c_id").alias("doc_b"), "c_v", "c_norm")
-    return (
-        cand.join(a, "doc_a").join(b, "doc_b")
-        .select(
-            "doc_a", "doc_b",
-            (_cosine("q_v", "c_v")
-             / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
-        )
-        .filter(F.col("cos") >= SIM_THRESHOLD)
-        .select("doc_a", "doc_b", F.round("cos", 4).alias("cos_sim"))
-    )
+    return _verified_pairs(cand, e)
 
 
 DD_EMBED_SQL = f"""
@@ -268,45 +293,14 @@ def ann_ivf_probe(spark, sf):
     e = spread(T(spark, sf, "embeddings"), "vec_id")
     cent = _label_centroids(e, _dim_of(e))
     q = _with_norm(e.filter(F.col("vec_id") < N_QUERIES), "embedding", "q")
-    # assign: nearest centroid by cosine (argmax over broadcast table)
-    qc = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "q_id", "q_v", "q_norm", "c_label",
-            (_cosine("q_v", "cvec")
-             / (F.col("q_norm")
-                * F.sqrt(F.aggregate(
-                    F.col("cvec"), F.lit(0.0),
-                    lambda a, x: a + x * x)))).alias("ccos"),
-        )
-    )
-    w_assign = Window.partitionBy("q_id").orderBy(
-        F.desc("ccos"), F.asc("c_label"))
-    assigned = (
-        qc.withColumn("rk", F.row_number().over(w_assign))
-        .filter(F.col("rk") <= N_PROBE)
-        .select("q_id", "q_v", "q_norm",
-                F.col("c_label").alias("probe_label"))
-    )
+    assigned = _nearest_cells(q, cent, "c_label", "probe_label")
     c = _with_norm(e, "embedding", "c")
-    scored = (
+    return _top_k(
         assigned.join(
             c, (F.col("probe_label") == F.col("c_label"))
             & (F.col("q_id") != F.col("c_id")))
-        .select(
-            "q_id", "probe_label", "c_id",
-            (_cosine("q_v", "c_v")
-             / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("q_id", "probe_label", "rank",
-                F.col("c_id").alias("neighbor_id"),
-                F.round("cos", 4).alias("cos_sim"))
-    )
+        .select("q_id", "probe_label", "c_id", _cosine().alias("cos")),
+        lead=("probe_label",))
 
 
 ANN_IVF_PROBE_SQL = f"""
@@ -455,39 +449,14 @@ def ann_ivf_kmeans(spark, sf):
     final, cent = kmeans_cells(e, dim)
 
     q = _with_norm(e.filter(F.col("vec_id") < N_QUERIES), "embedding", "q")
-    cn = F.sqrt(F.aggregate(
-        F.col("cvec"), F.lit(0.0), lambda a, x: a + x * x))
-    qc = q.crossJoin(F.broadcast(cent)).select(
-        "q_id", "q_v", "q_norm", "cell",
-        (_cosine("q_v", "cvec") / (F.col("q_norm") * cn)).alias("ccos"),
-    )
-    w_assign = Window.partitionBy("q_id").orderBy(
-        F.desc("ccos"), F.asc("cell"))
-    probes = (
-        qc.withColumn("rk", F.row_number().over(w_assign))
-        .filter(F.col("rk") <= N_PROBE)
-        .select("q_id", "q_v", "q_norm",
-                F.col("cell").alias("probe_cell"))
-    )
+    probes = _nearest_cells(q, cent, "cell", "probe_cell")
     cand = final.select(
         F.col("m_id").alias("c_id"), "m_cell",
         F.col("m_v").alias("c_v"), F.col("m_norm").alias("c_norm"))
-    scored = (
+    return _top_k(
         probes.join(cand, (F.col("probe_cell") == F.col("m_cell"))
                     & (F.col("q_id") != F.col("c_id")))
-        .select(
-            "q_id", "c_id",
-            (_cosine("q_v", "c_v")
-             / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("q_id", "rank", F.col("c_id").alias("neighbor_id"),
-                F.round("cos", 4).alias("cos_sim"))
-    )
+        .select("q_id", "c_id", _cosine().alias("cos")))
 
 
 # cosine template + Lloyd-unroll CTE builders at module level so
@@ -594,20 +563,14 @@ def _hyperplanes() -> list[list[int]]:
 
 def _sig_col():
     """Hyperplane sign-bit signature as a Column (shared by
-    dd_embed_lsh and dd_incremental_embed). Stays on the
-    aggregate(zip_with(...)) fold — the static unrolled-sum variant
-    measured 3x slower (see the dead-end note above _with_norm)."""
+    dd_embed_lsh, ann_multiprobe_lsh and dd_incremental_embed). Stays
+    on the `_dot` fold — the static unrolled-sum variant measured 3x
+    slower (see the dead-end note above `_norm`)."""
     planes = _hyperplanes()
     bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    F.col("embedding"),
-                    F.array(*[F.lit(float(v)) for v in planes[j]]),
-                    lambda x, r: x.cast("double") * r,
-                ),
-                F.lit(0.0), lambda acc, x: acc + x,
-            ) > 0, F.lit(1 << j)).otherwise(F.lit(0))
+        F.when(_dot("embedding",
+                    F.array(*[F.lit(float(v)) for v in planes[j]])) > 0,
+               F.lit(1 << j)).otherwise(F.lit(0))
         for j in range(N_PLANES)
     ]
     return sum(bits[1:], bits[0])
@@ -641,22 +604,7 @@ def dd_embed_lsh(spark, sf):
         capped_bucket_pairs(signed, "sig", "vec_id", EMBED_BUCKET_CAP)
         .select("doc_a", "doc_b", F.col("key").cast("int").alias("bucket"))
     )
-    # exact cosine verification of the candidates
-    a = _with_norm(e, "embedding", "q").select(
-        F.col("q_id").alias("doc_a"), "q_v", "q_norm")
-    b = _with_norm(e, "embedding", "c").select(
-        F.col("c_id").alias("doc_b"), "c_v", "c_norm")
-    return (
-        cand.join(a, "doc_a").join(b, "doc_b")
-        .select(
-            "doc_a", "doc_b", "bucket",
-            (_cosine("q_v", "c_v")
-             / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
-        )
-        .filter(F.col("cos") >= SIM_THRESHOLD)
-        .select("doc_a", "doc_b", "bucket",
-                F.round("cos", 4).alias("cos_sim"))
-    )
+    return _verified_pairs(cand, e, "bucket")
 
 
 def _embed_lsh_sql() -> str:
@@ -724,18 +672,10 @@ def ann_multiprobe_lsh(spark, sf):
         F.col("c_id").alias("c_id2"), "c_v", "c_norm")
     scored = (cand.join(qn, "q_id")
               .join(cn, cand.c_id == cn.c_id2)
-              .select("q_id", "c_id",
-                      (_cosine("q_v", "c_v")
-                       / (F.col("q_norm") * F.col("c_norm")))
-                      .alias("cos")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    wc = Window.partitionBy("q_id")
-    return (scored
-            .withColumn("rank", F.row_number().over(w))
-            .withColumn("n_cand", F.count("*").over(wc))
-            .filter(F.col("rank") <= K)
-            .select("q_id", "rank", F.col("c_id").alias("neighbor_id"),
-                    F.round("cos", 4).alias("cos_sim"), "n_cand"))
+              .select("q_id", "c_id", _cosine().alias("cos"))
+              .withColumn("n_cand",
+                          F.count("*").over(Window.partitionBy("q_id"))))
+    return _top_k(scored, tail=("n_cand",))
 
 
 def _multiprobe_sql() -> str:
@@ -814,20 +754,13 @@ def dd_incremental_embed(spark, sf):
             F.col("vec_id").alias(f"{pfx}_id"),
             F.col("embedding").alias(f"{pfx}_v"),
             "sig",
-            F.sqrt(F.aggregate(
-                F.col("embedding"), F.lit(0.0),
-                lambda a, x: a + x.cast("double") * x.cast("double"),
-            )).alias(f"{pfx}_norm"))
+            _norm("embedding").alias(f"{pfx}_norm"))
 
     new = normed(signed.filter(is_new), "q")
     hist = normed(signed.filter(~is_new), "c")
     coll = (
         hist.join(new, "sig")
-        .select(
-            "q_id", F.col("c_id").alias("hid"),
-            (_cosine("q_v", "c_v")
-             / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
-        )
+        .select("q_id", F.col("c_id").alias("hid"), _cosine().alias("cos"))
     )
     best = (
         coll.groupBy("q_id")
@@ -1035,23 +968,14 @@ def ann_sq8_rerank(spark, sf):
     deq = F.transform(
         "code", lambda c, i: F.get("mn", i) + c.cast("double")
         * F.get("sc", i))
-    cand = cand.select(
-        "c_id", "code",
-        F.sqrt(F.aggregate(deq, F.lit(0.0),
-                           lambda a, x: a + x * x)).alias("deq_norm"))
+    cand = cand.select("c_id", "code", _norm(deq).alias("deq_norm"))
 
     q = e.filter(F.col("vec_id") < N_QUERIES).crossJoin(
         F.broadcast(rng)).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_v"),
-        F.sqrt(F.aggregate(
-            F.col("embedding"), F.lit(0.0),
-            lambda a, x: a + x.cast("double") * x.cast("double"),
-        )).alias("q_norm"),
-        F.aggregate(
-            F.zip_with("embedding", "mn",
-                       lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda a, x: a + x).alias("qmn"),
+        _norm("embedding").alias("q_norm"),
+        _dot("embedding", "mn").alias("qmn"),
         F.zip_with("embedding", "sc",
                    lambda x, y: x.cast("double") * y).alias("qs"),
     )
@@ -1060,10 +984,7 @@ def ann_sq8_rerank(spark, sf):
         .filter(F.col("q_id") != F.col("c_id"))
         .select(
             "q_id", "c_id", "q_v", "q_norm",
-            ((F.col("qmn") + F.aggregate(
-                F.zip_with("qs", "code",
-                           lambda x, y: x * y.cast("double")),
-                F.lit(0.0), lambda a, x: a + x))
+            ((F.col("qmn") + _dot("qs", "code"))
              / (F.col("q_norm") * F.col("deq_norm"))).alias("approx"),
         )
     )
@@ -1073,18 +994,8 @@ def ann_sq8_rerank(spark, sf):
             .drop("prk"))
     c_ex = _with_norm(e, "embedding", "c")
     rr = c_ex.join(F.broadcast(pool), c_ex["c_id"] == pool["c_id"]).select(
-        "q_id", c_ex["c_id"].alias("c_id"), "approx",
-        (_cosine("q_v", "c_v")
-         / (F.col("q_norm") * F.col("c_norm"))).alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("c_id"))
-    return (
-        rr.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select("q_id", "rank", F.col("c_id").alias("neighbor_id"),
-                F.round("cos", 4).alias("cos_sim"),
-                F.round("approx", 4).alias("cos_sq8"))
-    )
+        "q_id", c_ex["c_id"].alias("c_id"), "approx", _cosine().alias("cos"))
+    return _top_k(rr, tail=(F.round("approx", 4).alias("cos_sq8"),))
 
 
 ANN_SQ8_SQL = f"""

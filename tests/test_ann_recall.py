@@ -259,3 +259,45 @@ def test_multiprobe_lsh_probe_geometry_and_gain(spark):
             if c != q and s == sigs[q]
             and bucket_n[s] <= EMBED_BUCKET_CAP)
     assert sum(n_cand_got.values()) > total_single
+
+
+def test_duplicate_vectors_break_ties_by_lowest_id(spark, tmp_path):
+    """Every vector is the same, so every cosine ties exactly: the
+    top-K ranking must take the lowest c_ids and the IVF probe the
+    N_PROBE lowest labels — the (cos DESC, c_id ASC) and (ccos DESC,
+    cell ASC) tie-breaks the DuckDB oracles pin. Labels run opposite
+    to ids, so a lowest-id rule would probe the wrong cells."""
+    from pdf_extraction_api_spark.operators.vectorops import (
+        K,
+        N_PROBE,
+        N_QUERIES,
+        ann_ivf_probe,
+        ann_topk_brute,
+    )
+
+    n = 20
+    label = {i: 7 - i % 5 for i in range(n)}
+    rows = [(i, label[i], [0.6, 0.8, 0.0, 0.0])
+            for i in reversed(range(n))]
+    (spark.createDataFrame(
+        rows, "vec_id LONG, label LONG, embedding ARRAY<FLOAT>")
+     .repartition(3)
+     .write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet")))
+    sf = str(tmp_path)
+
+    def ranked(fn):
+        out = {}
+        for r in fn(spark, sf).collect():
+            assert r.cos_sim == 1.0
+            out.setdefault(r.q_id, []).append((r.rank, r.neighbor_id))
+        return {q: [c for _, c in sorted(v)] for q, v in out.items()}
+
+    assert ranked(ann_topk_brute) == {
+        q: [c for c in range(n) if c != q][:K] for q in range(N_QUERIES)}
+
+    probes = sorted(set(label.values()))[:N_PROBE]
+    assert {r.probe_label for r in ann_ivf_probe(spark, sf).collect()} \
+        == set(probes)
+    assert ranked(ann_ivf_probe) == {
+        q: [c for c in range(n) if c != q and label[c] in probes][:K]
+        for q in range(N_QUERIES)}

@@ -32,6 +32,8 @@ _FRAGMENTS = st.sampled_from([
     "<section data-page='5'>", '<pre class="c">',
     '<table class="sidebar">', '<p class="menu">', '<TABLE BORDER="0">',
     '<P CLASS="Footer">',
+    # unterminated tag names that run into the next '<'
+    "<a", '{"t":"<em","v":1},',
 ])
 
 

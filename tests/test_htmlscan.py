@@ -140,6 +140,10 @@ NASTY = [
     b"<table border=1><tr><td>a</td\t><td>b</td></tr><tr><td>c"
     b"</td><td>d</td></tr></table><p><a href=x>link</a >tail text"
     b" long enough.</p>",
+    # unterminated tag-name runs (16 KB each): the simple-start-tag
+    # gate must fail without backtracking through each run
+    b"<a" * 8192,
+    b'{"t":"<em","v":1},' * 910,
 ]
 
 

@@ -23,11 +23,17 @@ def registry():
     return e.queries(), e.oracle_sql()
 
 
-def test_all_queries_build(spark, registry):
+@pytest.fixture(scope="module")
+def built(spark, registry):
+    """Every registry query's DataFrame, built once for the module:
+    building all ~170 plans takes over a minute at sf0.001."""
     queries, _ = registry
-    assert len(queries) >= 60
-    for name, fn in queries.items():
-        df = fn(spark, SF)
+    return {name: fn(spark, SF) for name, fn in queries.items()}
+
+
+def test_all_queries_build(built):
+    assert len(built) >= 60
+    for name, df in built.items():
         assert df.columns, name
 
 
@@ -251,7 +257,7 @@ def test_asof_join_tie_semantics(spark):
     assert got == {100: 12, 101: 10, 201: 20, 202: 20}, got
 
 
-def test_registry_plan_lint(spark, registry):
+def test_registry_plan_lint(built):
     """No registry query may plan a CartesianProduct (unbounded pair
     blowup), row-at-a-time Python (BatchEvalPython / scalar PythonUDF)
     — the anti-patterns that silently kill 100 TB runs — or a pandas
@@ -261,11 +267,9 @@ def test_registry_plan_lint(spark, registry):
     worker that runs it. Arrow-batched mapInArrow (kernel.batch's
     map_rows) and groupBy().applyInArrow are the only sanctioned
     Python."""
-    queries, _ = registry
     offenders = {}
-    for name, fn in queries.items():
-        plan = (fn(spark, SF)
-                ._jdf.queryExecution().executedPlan().toString())
+    for name, df in built.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
         bad = [pat for pat in
                ("CartesianProduct", "BatchEvalPython", "PythonUDF",
                 "InPandas")
