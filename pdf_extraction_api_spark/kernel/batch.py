@@ -11,9 +11,15 @@ one tuple per document in RESULT_SCHEMA order, spans as kind codes
 plus int32 columns instead of one dict per span — and `record_arrays`
 turns a batch of them into Arrow arrays column by column. The loop is
 a pure per-document transform: every document, duplicate bodies
-included, is parsed on its own, and a worker keeps no results between
-documents or batches. Skipping exact-duplicate bodies, if it ever
-pays, belongs in the plan (a hash aggregate on the body before the
+included, is parsed on its own. One thing outlives a document:
+`tablepipe._CLS_CACHE`, a FIFO memo of score and classify by grid
+content hash (at most 4,096 entries), kept for the life of the worker
+process, so across batches, tasks and job runs. It changes no output
+byte, only cost: a worker that gets back a scan split it ran before
+finds all of the split's grids there (if they fit the 4,096 entries),
+a worker with a new split about 7% (ROADMAP direction 4 has the
+measurements). Skipping exact-duplicate bodies, if it ever pays,
+belongs in the plan (a hash aggregate on the body before the
 kernel), not in worker state.
 
 Every output array is built from buffers (`arrow_array`), never by

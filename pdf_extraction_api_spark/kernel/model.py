@@ -15,6 +15,19 @@ from .lexicon import BOILER_CLASS_TOKENS, BOILER_TAGS
 _WS = re.compile(r"\s+")
 _GAP = re.compile(r" {2,}")
 
+# Row token (run_fused's `<tr>` branch): the rest of a plain row, up to
+# and including its `</tr>` — cells written exactly `<td>text</td>` or
+# `<th>text</th>`, any text between them, nothing else. _CELL_TEXT
+# then reads the cells' texts out of the matched span. The general
+# path reaches the same state for such a row; see run_fused. The
+# quantifiers are possessive because giving anything back can never
+# help: every [^<]* run is followed by a '<', and a repetition given
+# back would leave the tail to find '</tr>' where '<td>' or '<th>'
+# stands. So a row that does not fit fails at its first odd '<'.
+_SIMPLE_ROW = re.compile(
+    r"(?:[^<]*+(?:<td>[^<]*+</td>|<th>[^<]*+</th>))*+[^<]*+</tr>")
+_CELL_TEXT = re.compile(r"<t[dh]>([^<]*)<")
+
 _SKIP = frozenset({"script", "style", "noscript", "template", "svg",
                    "head"})
 _BLOCK = frozenset({"p", "h1", "h2", "h3", "h4", "h5", "h6", "li",
@@ -225,9 +238,23 @@ def run_fused(m: DocModel, s: str) -> None:
     and fall through to the same two blocks, inline in the loop, so no
     event costs a handler call (~300-500 events/doc). A self-closing
     tag runs the start block and then the end block; a script/style
-    start tag sets ``etag`` once its CDATA close is found. Equivalence
-    guards, both byte-compared against refkernel (which stays on
-    html.parser): tests/test_htmlscan.py (corpus + NASTY) and
+    start tag sets ``etag`` once its CDATA close is found.
+
+    Row token: at a ``<tr>`` start tag inside a table (not self-closed,
+    not under a skipped element, not in a ``<pre>``), a row that
+    ``_SIMPLE_ROW`` matches whole is read with one regex match and one
+    ``_CELL_TEXT.findall`` instead of one token per tag. It is exact:
+    on that row the token path opens and closes each cell in turn
+    (stack push then pop), appends each cell's one text chunk —
+    unescaped if it holds ``&`` — and drops the text between cells
+    (no cell is open there); ``</tr>`` pops the ``<tr>`` and appends
+    the row. So the row token appends the same row, leaves no row open
+    and the stack as it was. Any other shape (attributes, uppercase
+    tags, ``<th>`` closed by ``</td>``, nested tags, no ``</tr>``)
+    fails the match and takes the token path.
+
+    Equivalence guards, both byte-compared against refkernel (which
+    stays on html.parser): tests/test_htmlscan.py (corpus + NASTY) and
     tests/test_fuzz_parity.py (hypothesis soup + raw bytes through
     extract_one, which uses this path).
     """
@@ -238,6 +265,8 @@ def run_fused(m: DocModel, s: str) -> None:
     tbl = m._tbl
     unescape = H.unescape
     token = H._FUSED_TOKEN.match
+    simple_row = _SIMPLE_ROW.match
+    cell_text = _CELL_TEXT.findall
     n = len(s)
     i = 0
     while i < n:
@@ -379,6 +408,19 @@ def run_fused(m: DocModel, s: str) -> None:
                         t[4] = None
                         if row is not None:
                             t[2].append(row)
+                        if etag is None and not m._skip:
+                            # row token: a plain row is read whole
+                            mrow = simple_row(s, i)
+                            if mrow is not None:
+                                end = mrow.end()
+                                row = cell_text(s, i, end)
+                                if s.find("&", i, end) >= 0:
+                                    row = [unescape(c) if "&" in c else c
+                                           for c in row]
+                                t[2].append(row)
+                                t[3] = None
+                                i = end
+                                continue
                         t[3] = []
                     elif tag in ("td", "th"):
                         cell = t[4]

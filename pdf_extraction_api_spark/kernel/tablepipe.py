@@ -13,6 +13,7 @@ import hashlib
 import json
 import math
 import re
+from itertools import compress
 
 from .lexicon import (
     CLASS_ORDER,
@@ -53,42 +54,33 @@ def _numeric_match(c: str) -> bool:
 
 _META = set(".^$*+?{}[]()|\\")
 
-
-def _compile_counters(patterns):
-    """Split patterns into (literals → str.count) and (regexes →
-    findall with capturing groups made non-capturing — same match
-    count, no per-match tuple allocation)."""
-    literals, regexes = [], []
-    for p in patterns:
-        if p in _NEVER_ON_LOWER:
-            continue
-        if not _META.intersection(p):
-            literals.append(p)
-        else:
-            regexes.append((
-                re.compile(re.sub(r"(?<!\\)\((?!\?)", "(?:", p)),
-                _gate_for(p),
-            ))
-    return literals, regexes
-
-
-_DIGIT = object()  # gate sentinel: pattern can't match digit-free text
-_HAS_DIGIT = re.compile(r"\d")
-
-# Conservative prefilters for the classify regexes: `gate` is a plain
-# substring every match of the pattern must contain (so skipping
-# findall when the gate is absent can never change a count). Inferred
-# for patterns with a mandatory \d+ / \d{n} atom; hand-audited literal
-# gates for the rest. Patterns like \$[\d,]+ (which matches "$," with
-# no digit) get a literal gate, not the digit one.
-_LITERAL_GATES = {
+# Must-contain literals of the classify regexes: every match of the
+# pattern holds the literal, so a grid whose lowered text lacks it
+# cannot match (the gate). None of the literals can overlap itself and
+# findall's matches are disjoint, so each match holds its own
+# occurrence and lowered.count(lit) also bounds the match count (the
+# bound classify_grid prunes with). Hand-audited; the bound is
+# property-tested in tests/test_engine_kernel.py. `\$[\d,]+` matches
+# "$," with no digit, so it gets "$", not a digit gate. The one regex
+# without a literal is the market pattern `\d{1,3}(,\d{3})*`: each of
+# its matches holds a digit, so the digit count bounds it.
+_MUST_CONTAIN = {
     r"\$[\d,]+": "$",
+    r"\$\d+\.\d{2}": "$",
+    r"\d+%": "%",
+    r"\d+\.\d+%": "%",
+    r"%\s*\([^)]+\)": "%",
+    r"\d+\.\d+x": "x",
+    r"r\s*=\s*[0-9.-]+": "=",
+    r"n\s*=\s*\d+": "=",
+    r"p\s*[<=]\s*0\.\d+": "0.",
     r"phase\s+[IVX123]": "phase",
     r"tco2e?": "tco2",
     r"scope\s*[123]": "scope",
-    r"%\s*\([^)]+\)": "%",
-    r"r\s*=\s*[0-9.-]+": "=",
 }
+_DIGIT_BOUNDED = r"\d{1,3}(,\d{3})*"
+_ASCII_DIGITS = "0123456789"
+_ANY_DIGIT = re.compile(r"\d")
 
 # classify runs its regexes over LOWERCASED text in both engines
 # (refkernel/classify.py:204,218 and classify_grid below), so a
@@ -103,16 +95,55 @@ _NEVER_ON_LOWER = frozenset({
 })
 
 
-def _gate_for(pattern: str):
-    lit = _LITERAL_GATES.get(pattern)
-    if lit is not None:
-        return lit
-    if "\\d+" in pattern or "\\d{" in pattern:
-        return _DIGIT
-    return None
+def _classify_plan():
+    """The classify lexicon as one import-time plan: the distinct
+    literals to count per grid (the pattern literals and the regex
+    gates, each once), and per class in CLASS_ORDER (its keywords, the
+    most they can score, the count indices of its literals, its
+    regexes as (compiled, count index of the gate, or None for the
+    digit-bounded one)). A regex two classes share is one compiled
+    object, so classify_grid scans it once per grid. Capture groups are
+    made non-capturing: same match count, no per-match tuple."""
+    counted: list[str] = []
+    compiled: dict[str, re.Pattern] = {}
+
+    def count_index(lit):
+        if lit not in counted:
+            counted.append(lit)
+        return counted.index(lit)
+
+    plan = []
+    for ttype in CLASS_ORDER:
+        kws = KEYWORDS[ttype]
+        # a header hit must imply a lowered hit (see classify_grid)
+        assert all(kw.isascii() for kw in kws)
+        lits, rxs = [], []
+        for p in PATTERNS[ttype]:
+            if p in _NEVER_ON_LOWER:
+                continue
+            if not _META.intersection(p):
+                lits.append(count_index(p))
+                continue
+            lit = _MUST_CONTAIN.get(p)
+            assert lit is not None or p == _DIGIT_BOUNDED, (
+                f"classify regex without a bound: {p}")
+            rx = compiled.setdefault(
+                p, re.compile(re.sub(r"(?<!\\)\((?!\?)", "(?:", p)))
+            rxs.append((rx, None if lit is None else count_index(lit)))
+        plan.append((kws, 5 * len(kws), tuple(lits), tuple(rxs)))
+    return tuple(counted), tuple(plan)
 
 
-_PATTERNS_C = {t: _compile_counters(ps) for t, ps in PATTERNS.items()}
+_COUNTED, _CLASS_PLAN = _classify_plan()
+_N_CLASSES = len(CLASS_ORDER)
+
+
+def _digit_count(s: str) -> int:
+    if s.isascii():
+        return sum(map(s.count, _ASCII_DIGITS))
+    return len(_ANY_DIGIT.findall(s))  # \d takes every Unicode Nd
+
+
 _UNITS_C = [(p, re.compile(r"\b" + p + r"\b", re.I)) for p in UNIT_PATTERNS]
 _TICKER = re.compile(r"\b[A-Z]{1,5}\b(?:\.[A-Z]{2})?")
 _FISCAL = [
@@ -259,34 +290,66 @@ def score_quality(grid: list[list[str]]) -> float:
 
 
 def classify_grid(grid: list[list[str]]) -> tuple[str, dict[str, str]]:
+    """Classify a cleaned grid: the CLASS_ORDER class with the highest
+    lexicon score, the first one on a tie, general_data if all score 0.
+
+    Each class first gets an upper bound from counts alone: its
+    literals' counts (exact), its regexes' gate counts (a regex's
+    match count is at most its must-contain literal's count, the
+    market pattern's at most the digit count) and 5 per keyword.
+    Classes are then scored exactly in descending-bound order, keyword
+    tests and regex scans included, and a class whose bound cannot
+    beat the best score so far (a tie loses to an earlier class) is
+    skipped. Same answer as scoring every class:
+    tests/test_engine_kernel.py compares it with refkernel on grids
+    built to tie."""
     joined = " ".join(c for r in grid for c in r if c)
     lowered = joined.lower()
     headers = (" ".join(c for c in grid[0] if c).lower() if grid else "")
 
-    has_digit = _HAS_DIGIT.search(lowered) is not None
-    best_type, best_score = None, -1
-    for ttype in CLASS_ORDER:
-        score = 0
-        for kw in KEYWORDS[ttype]:
-            if kw in lowered:
-                score += 2
-            if kw in headers:
-                score += 3
-        literals, regexes = _PATTERNS_C[ttype]
-        for lit in literals:
-            score += 2 * lowered.count(lit)
-        for rx, gate in regexes:
-            if gate is not None:
-                if gate is _DIGIT:
-                    if not has_digit:
-                        continue
-                elif gate not in lowered:
-                    continue
-            score += 2 * len(rx.findall(lowered))
-        if score > best_score:
-            best_type, best_score = ttype, score
-    if best_score == 0:
-        best_type = "general_data"
+    counts = list(map(lowered.count, _COUNTED))
+    digits = None
+    bound = []
+    for _, kw_max, lits, rxs in _CLASS_PLAN:
+        b = kw_max
+        for k in lits:
+            b += 2 * counts[k]
+        for _, k in rxs:
+            if k is not None:
+                b += 2 * counts[k]
+            else:
+                if digits is None:
+                    digits = _digit_count(lowered)
+                b += 2 * digits
+        bound.append(b)
+
+    found: dict = {}
+    best_c, best_score = 0, -1
+    for c in sorted(range(_N_CLASSES), key=bound.__getitem__,
+                    reverse=True):
+        b = bound[c]
+        if b < best_score:
+            break  # the rest are bounded lower still
+        if b == best_score and c > best_c:
+            continue
+        kws, kw_max, _, rxs = _CLASS_PLAN[c]
+        # the bound with each estimate replaced by the exact value
+        score = b - kw_max
+        # headers is a prefix of lowered up to final-sigma spelling
+        # (one non-ASCII char either way), and keywords are ASCII: a
+        # header hit is always a lowered hit, so only those test headers
+        for kw in compress(kws, map(lowered.__contains__, kws)):
+            score += 5 if kw in headers else 2
+        for rx, k in rxs:
+            n = digits if k is None else counts[k]
+            if n:
+                m = found.get(rx)
+                if m is None:
+                    m = found[rx] = len(rx.findall(lowered))
+                score -= 2 * (n - m)
+        if score > best_score or (score == best_score and c < best_c):
+            best_c, best_score = c, score
+    best_type = CLASS_ORDER[best_c] if best_score else "general_data"
 
     md: dict[str, str] = {"table_classification": best_type}
     extract = EXTRACTORS.get(best_type, ())

@@ -850,9 +850,7 @@ def vec_pca_power(spark, sf):
             F.element_at("embedding", i + 1).cast("double")
             - F.element_at("mv", i + 1) for i in range(dim)
         ]).alias("x"))
-    dot = F.aggregate(
-        F.zip_with("x", "v", lambda a, b: a * b),
-        F.lit(0.0), lambda acc, y: acc + y)
+    dot = _dot("x", "v")  # both already double: the casts are no-ops
     v = spark.range(1).select(
         F.array(*[F.lit(1.0 / math.sqrt(dim))] * dim).alias("v"))
     for _ in range(N_POWER_ITERS):
@@ -1080,9 +1078,8 @@ def vec_rp_project(spark, sf):
     Scale shape: the sign matrix is RP_D rows built ONCE from a
     range() — broadcast-joined to the vector scan, so projection is
     a pure map over vectors (no shuffle at all beyond the broadcast);
-    the dot product is the ordered zip_with/aggregate double fold
-    (`_cosine` convention, which list_dot_product reproduces at the
-    4-dp rounding)."""
+    the dot product is `_dot`, the ordered zip_with/aggregate double
+    fold, which list_dot_product reproduces at the 4-dp rounding."""
     e = spread(T(spark, sf, "embeddings"), "vec_id")
     j = F.col("id").cast("string")
     sign = lambda i: F.when(  # noqa: E731
@@ -1094,10 +1091,7 @@ def vec_rp_project(spark, sf):
         F.col("id").cast("int").alias("j"),
         F.transform(F.sequence(F.lit(0), F.lit(DIM - 1)), sign)
         .alias("s"))
-    dot = F.aggregate(
-        F.zip_with(F.col("embedding"), F.col("s"),
-                   lambda x, y: x.cast("double") * y),
-        F.lit(0.0), lambda acc, x: acc + x)
+    dot = _dot("embedding", "s")
     return (e.join(F.broadcast(smat))
             .select("vec_id", "label", "j",
                     # + 0.0 folds IEEE -0.0 to 0.0 (DuckDB rounds

@@ -7,6 +7,9 @@ and asserts the shared classification lexicon is identical data.
 
 from __future__ import annotations
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from fixtures.gen_pages import gen_rows
 from pdf_extraction_api_spark.kernel import lexicon
 from pdf_extraction_api_spark.kernel.batch import extract_one
@@ -119,6 +122,104 @@ def test_never_on_lower_patterns_are_dead():
         # and the lowercase transform is not an identity on the
         # mandatory atom (guards against a future all-caps-free edit)
         assert probe.lower() != probe
+
+
+# a probe each classify regex matches, holding its must-contain literal
+_GATE_PROBES = {
+    r"\$[\d,]+": "$1,234",
+    r"\$\d+\.\d{2}": "$12.50",
+    r"\d+%": "12%",
+    r"\d+\.\d+%": "1.5%",
+    r"%\s*\([^)]+\)": "% (n=3)",
+    r"\d+\.\d+x": "1.5x",
+    r"r\s*=\s*[0-9.-]+": "r = 0.5",
+    r"n\s*=\s*\d+": "n=42",
+    r"p\s*[<=]\s*0\.\d+": "p < 0.05",
+    r"phase\s+[IVX123]": "phase 2",
+    r"tco2e?": "tco2e",
+    r"scope\s*[123]": "scope 1",
+}
+
+
+def test_classify_regexes_have_a_bound():
+    """Every classify regex that tablepipe does not elide has a
+    must-contain literal, or is the digit-bounded market pattern. Each
+    literal is lowercase (classify counts it in lowered text) and lies
+    inside a match of its pattern."""
+    import re
+
+    from pdf_extraction_api_spark.kernel.tablepipe import (
+        _DIGIT_BOUNDED,
+        _META,
+        _MUST_CONTAIN,
+        _NEVER_ON_LOWER,
+    )
+
+    regexes = {p for ps in lexicon.PATTERNS.values() for p in ps
+               if _META.intersection(p) and p not in _NEVER_ON_LOWER}
+    assert regexes == set(_MUST_CONTAIN) | {_DIGIT_BOUNDED}
+    assert set(_GATE_PROBES) == set(_MUST_CONTAIN)
+    for pat, lit in _MUST_CONTAIN.items():
+        assert lit == lit.lower(), pat
+        mt = re.search(pat, _GATE_PROBES[pat])
+        assert mt is not None and lit in mt.group(0), pat
+
+
+_BOUND_TEXT = st.lists(st.sampled_from([
+    *"0123456789.,$%=x()<- ", "p", "n", "r", "e", "phase", "scope",
+    "tco2", "0.", "٣",  # ARABIC-INDIC DIGIT THREE is a \d too
+]), max_size=40).map("".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_BOUND_TEXT)
+def test_must_contain_count_bounds_matches(text):
+    """classify_grid's bounds: a regex's match count never exceeds its
+    literal's count, nor the market pattern's the digit count."""
+    import re
+
+    from pdf_extraction_api_spark.kernel.tablepipe import (
+        _DIGIT_BOUNDED,
+        _MUST_CONTAIN,
+    )
+
+    for pat, lit in _MUST_CONTAIN.items():
+        assert len(re.findall(pat, text)) <= text.count(lit), pat
+    assert (len(re.findall(_DIGIT_BOUNDED, text))
+            <= len(re.findall(r"\d", text)))
+
+
+_CLASSIFY_VOCAB = sorted({kw for kws in lexicon.KEYWORDS.values()
+                          for kw in kws}
+                         | set(_GATE_PROBES.values())
+                         | {"million", "cash", "flow", "mwh", "12,345"})
+
+
+def test_classify_grid_ties_match_refkernel():
+    """classify_grid scores classes in bound order and skips those that
+    cannot win. A header cell holding two lexicon items ties the
+    classes they score for whenever those differ; every pair must pick
+    refkernel's class, which is the first in CLASS_ORDER on a tie."""
+    from pdf_extraction_api_spark.kernel.tablepipe import classify_grid
+
+    assert classify_grid([["margin"]])[0] == "financial_income"  # vs ratios
+    for a in _CLASSIFY_VOCAB:
+        for b in _CLASSIFY_VOCAB:
+            grid = [[f"{a} {b}"], ["x"]]
+            assert (classify_grid(grid)[0]
+                    == ref_classify.classify_table(grid)[0]), grid
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.lists(st.sampled_from(_CLASSIFY_VOCAB + ["", "7"]),
+                         min_size=1, max_size=3),
+                min_size=1, max_size=4))
+def test_classify_grid_matches_refkernel(grid):
+    """Small grids of lexicon items, empty cells and a bare digit:
+    the pruned classify picks refkernel's class."""
+    from pdf_extraction_api_spark.kernel.tablepipe import classify_grid
+
+    assert classify_grid(grid)[0] == ref_classify.classify_table(grid)[0]
 
 
 def test_split_whitespace_equals_regex_ws():

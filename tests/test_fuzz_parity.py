@@ -34,6 +34,13 @@ _FRAGMENTS = st.sampled_from([
     '<P CLASS="Footer">',
     # unterminated tag names that run into the next '<'
     "<a", '{"t":"<em","v":1},',
+    # whole rows for the row token, and near-misses it must leave to
+    # the token path
+    "<tr><td>a</td><td>b</td></tr>", "<tr></tr>", "<tr><td></td></tr>",
+    "<tr><th>h</td></tr>", "<tr><td>AT&amp;T</td></tr>",
+    "<tr>\n <td>a</td> x <td>b</td>\n</tr>", "<TD>", "<tr><TD>u</TD></tr>",
+    "<tr><td>eof", "<tr/>", "<tr><td><table><tr><td>i</td></tr></table>",
+    "<noscript>", "</noscript>",
 ])
 
 

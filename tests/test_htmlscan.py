@@ -144,6 +144,43 @@ NASTY = [
     # gate must fail without backtracking through each run
     b"<a" * 8192,
     b'{"t":"<em","v":1},' * 910,
+    # --- rows the row token reads whole, and shapes it must leave to
+    # the token path ---
+    b"<table><tr><td>a</td><td>b</td></tr><tr><td>c</td><td>d</td>"
+    b"</tr></table>",
+    b"<table><tr></tr><tr><td></td></tr><tr><td>x</td><td>y</td></tr>"
+    b"<tr><td>1</td><td>2</td></tr></table>",
+    # a <th> closed by </td>
+    b"<table><tr><th>h1</td><th>h2</th></tr><tr><td>1</td><td>2</td>"
+    b"</tr></table>",
+    # a cell holding &amp; and one with an unterminated entity
+    b"<table><tr><th>AT&amp;T</th><th>fish &amp chips</th></tr>"
+    b"<tr><td>&#65;&#x42;</td><td>caf&eacute;</td></tr></table>",
+    # whitespace and text between cells, before the first cell and
+    # before </tr>
+    b"<table>\n  <tr>\n    <td>a</td>\n    <td> b </td>  \n  </tr>\n"
+    b"  <tr>lead<td>c</td>mid<td>d</td>tail</tr>\n</table>",
+    b"<table><tr><TD>upper</TD><td>lower</td></tr>"
+    b"<tr><td>1</td><td>2</td></tr></table>",
+    # a row at EOF with no </tr>
+    b"<table><tr><td>a</td><td>b</td></tr><tr><td>c</td><td>d</td>",
+    b"<table><tr/><td>a</td><td>b</td><tr><td>c</td><td>d</td></tr>"
+    b"</table>",
+    # a table inside a cell
+    b"<table><tr><td>outer<table><tr><td>i1</td><td>i2</td></tr>"
+    b"<tr><td>i3</td><td>i4</td></tr></table></td><td>o2</td></tr>"
+    b"<tr><td>o3</td><td>o4</td></tr></table>",
+    # rows inside <noscript> (text dropped) and <pre> (raw text)
+    b"<noscript><table><tr><td>a</td><td>b</td></tr><tr><td>c</td>"
+    b"<td>d</td></tr></table></noscript><p>After the noscript table,"
+    b" long enough.</p>",
+    b"<table><tr><td>1</td><td>2</td></tr><tr><td><pre>x  y\nz  w"
+    b"</pre></td></tr></table>",
+    b"<pre><table><tr><td>a</td><td>b</td></tr>\n<tr><td>c</td>"
+    b"<td>d</td></tr></table></pre>",
+    # an unclosed <tr> before a long text run: the failed row match
+    # must stop at the next '<' (linear in the input)
+    (b"<table><tr>" + b"x" * 16384) * 2,
 ]
 
 
@@ -175,3 +212,53 @@ def test_scanner_matches_refkernel_on_nasty(idx):
     eng = extract_one("u", html)
     ref = extract_document("u", html)
     assert _norm(eng) == _norm(ref), html
+
+
+class _CountingMatch:
+    """Stands in for a compiled pattern and counts its matches."""
+
+    def __init__(self, rx):
+        self.rx = rx
+        self.calls = self.hits = 0
+
+    def match(self, s, pos):
+        self.calls += 1
+        mt = self.rx.match(s, pos)
+        self.hits += mt is not None
+        return mt
+
+
+def test_row_token_reads_plain_rows_whole(monkeypatch):
+    """Engine only: a plain 500-row table is read one row token per
+    row, with the same grid as refkernel."""
+    from pdf_extraction_api_spark.kernel import model
+
+    proxy = _CountingMatch(model._SIMPLE_ROW)
+    monkeypatch.setattr(model, "_SIMPLE_ROW", proxy)
+    html = ("<table border=1>" + "".join(
+        f"<tr><th>r{k}</th><td>{k}</td><td>a&amp;b</td></tr>\n"
+        for k in range(500)) + "</table>").encode()
+    eng = extract_one("u", html)
+    assert (proxy.calls, proxy.hits) == (500, 500)
+    assert _norm(eng) == _norm(extract_document("u", html))
+
+
+def test_failed_row_token_is_linear():
+    """Engine only: on `<table><tr>` + a long text run, the failed row
+    match stops at the next '<'. Best-of-5 CPU time at 4x the input
+    stays under 8x (linear gives ~4x; a scan to EOF per row, 16x)."""
+    import time
+
+    from pdf_extraction_api_spark.kernel.model import parse_document
+
+    def cpu(k):
+        html = (b"<table><tr>" + b"x" * 16384) * k
+        best = float("inf")
+        for _ in range(5):
+            t0 = time.process_time()
+            parse_document(html)
+            best = min(best, time.process_time() - t0)
+        return best
+
+    small, large = cpu(64), cpu(256)
+    assert large <= 8 * max(small, 1e-3), (small, large)
