@@ -82,7 +82,7 @@ _DIGIT_BOUNDED = r"\d{1,3}(,\d{3})*"
 _ASCII_DIGITS = "0123456789"
 _ANY_DIGIT = re.compile(r"\d")
 
-# classify runs its regexes over LOWERCASED text in both engines
+# classify runs its patterns over LOWERCASED text in both engines
 # (refkernel/classify.py:204,218 and classify_grid below), so a
 # pattern with a mandatory uppercase atom can never match — eliding
 # it changes no count, ever. Hand-audited; the uppercase-mandatory
@@ -91,6 +91,8 @@ _NEVER_ON_LOWER = frozenset({
     r"\d+[KMB]",        # [KMB]: no lowercase members
     r"[A-Z]{2}\d{10}",
     r"[A-Z]{12}",
+    PATTERNS["scientific_data"][0],  # the literal 'Ã‚Â±' (uppercase Ã:
+    # no code point lowercases to it; _ERRBAR counts it un-lowered)
     PATTERNS["scientific_data"][2],  # mandatory 'Ã‚Â±' (uppercase Ã)
 })
 

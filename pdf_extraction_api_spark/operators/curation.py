@@ -32,9 +32,11 @@ from pyspark.sql.window import Window
 
 from .relational import T, spread
 from .textops import (
+    _shingle_col,
     _shingles,
     _SHINGLES_SQL,
     salted_bucket_pairs,
+    token_windows,
     ws_tokens,
     SEGMENT_N,
     WS_TOKS_SQL,
@@ -142,13 +144,10 @@ def tx_top_ngram_frac(spark, sf):
     totals = toked.select(
         "doc_id",
         F.length(F.concat_ws(" ", "toks")).alias("chars"))
-    bi = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at("toks", i + 1), F.element_at("toks", i + 2)))
     grams = (
         toked.filter(F.size("toks") >= 2)
-        .select("doc_id", F.explode(bi).alias("gram"))
+        .select("doc_id",
+                F.explode(_shingle_col("toks", 2)).alias("gram"))
         .groupBy("doc_id", "gram").agg(F.count("*").alias("n"))
     )
     w = Window.partitionBy("doc_id").orderBy(F.desc("n"), F.asc("gram"))
@@ -476,18 +475,10 @@ def tx_segment_scrub(spark, sf):
     toks = ws_tokens()
     toked = d.select("doc_id", toks.alias("toks"),
                      F.size(toks).alias("n"))
-    seg_structs = F.when(
-        F.col("n") >= SEGMENT_N,
-        F.transform(
-            F.sequence(F.lit(0),
-                       (F.floor(F.col("n") / SEGMENT_N) - 1).cast("int")),
-            lambda g: F.struct(
-                g.alias("g"),
-                F.array_join(F.slice("toks", g * SEGMENT_N + 1,
-                                     SEGMENT_N), " ").alias("seg")),
-        ),
-    ).otherwise(F.array().cast(
-        "array<struct<g:int,seg:string>>"))
+    # g: the segment's start token, which orders the rebuild
+    seg_structs = token_windows(
+        "toks", SEGMENT_N, SEGMENT_N,
+        lambda seg, g: F.struct(g.alias("g"), seg.alias("seg")))
     segs = toked.select(
         "doc_id", F.explode(seg_structs).alias("s")
     ).select("doc_id", "s.g", "s.seg", F.md5("s.seg").alias("seg_hash"))
@@ -1465,11 +1456,8 @@ def dd_substr_dup(spark, sf):
     d = spread(T(spark, sf, "documents"), "doc_id")
     toked = (d.select("doc_id", ws_tokens().alias("toks"))
              .filter(F.size("toks") >= SUBSTR_W))
-    wins = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - SUBSTR_W),
-        lambda i: F.md5(F.concat_ws(
-            " ", F.slice("toks", i + 1, SUBSTR_W))))
-    wh = (toked.select("doc_id", F.explode(wins).alias("h"))
+    wh = (toked.select("doc_id",
+                       F.explode(token_windows("toks", SUBSTR_W)).alias("h"))
           .persist(StorageLevel.MEMORY_AND_DISK))
     dup = (wh.groupBy("h")
            .agg(F.count_distinct("doc_id").alias("n_docs"))
@@ -1541,12 +1529,9 @@ def tx_substr_scrub(spark, sf):
     d = spread(T(spark, sf, "documents"), "doc_id")
     toked = (d.select("doc_id", ws_tokens().alias("toks"))
              .filter(F.size("toks") >= SUBSTR_W))
-    wins = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - SUBSTR_W),
-        lambda i: F.md5(F.concat_ws(
-            " ", F.slice("toks", i + 1, SUBSTR_W))))
     wh = toked.select(
-        "doc_id", F.posexplode(wins).alias("pos", "h"))
+        "doc_id",
+        F.posexplode(token_windows("toks", SUBSTR_W)).alias("pos", "h"))
     dup = (wh.groupBy("h")
            .agg(F.count_distinct("doc_id").alias("n_docs"),
                 F.min("doc_id").alias("first_doc"))
@@ -1679,11 +1664,8 @@ def dd_verdict(spark, sf):
     # the same token run
     toked = (d.select("doc_id", ws_tokens().alias("toks"))
              .filter(F.size("toks") >= SUBSTR_W))
-    wins = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - SUBSTR_W),
-        lambda i: F.md5(F.concat_ws(
-            " ", F.slice("toks", i + 1, SUBSTR_W))))
-    wh = toked.select("doc_id", F.explode(wins).alias("h"))
+    wh = toked.select(
+        "doc_id", F.explode(token_windows("toks", SUBSTR_W)).alias("h"))
     firsts = wh.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     n_dup = (wh.join(firsts, "h")
              .filter(F.col("doc_id") > F.col("first_doc"))

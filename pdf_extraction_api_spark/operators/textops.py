@@ -26,6 +26,14 @@ no Python in the hot path) with DuckDB oracles:
 - incremental dedup: new batch vs history
   (broadcast-new EXISTS probes, no pair blowup)   → dd_incremental
 
+Shared building blocks, used by this module and curation.py: one
+whitespace tokenizer (ws_tokens, with its DuckDB mirror WS_TOKS_SQL),
+one n-gram builder (_ngram: the n tokens from a start position joined
+by one space; _shingle_col maps it over every start) and one token-
+window builder (token_windows: every n-token window starting each
+`step` tokens — sliding at step 1, disjoint segments at step n — as an
+array that is total on docs shorter than n).
+
 Portability notes: the hash primitive is md5 (identical in Spark and
 DuckDB — Spark's xxhash64/hash are JVM-specific so they never appear in
 an oracle-checked result); min-over-md5-hex is a valid uniform minhash
@@ -62,28 +70,14 @@ LSH_BUCKET_CAP = 64
 def ws_tokens(col: str = "text"):
     """THE whitespace tokenizer — the cross-engine parity contract
     every text operator's oracle depends on (Java \\s+ split, empties
-    dropped). New operators must use this helper (and WS_TOKS_SQL on
-    the oracle side) instead of inlining the expression. The shared
-    shingle helpers call it; the older registry query functions that
-    predate it keep the expression inline deliberately — editing their
-    sources would churn the committed QUERY_FPRINTS of oracle-verified
-    queries for zero semantic change."""
+    dropped). Every text operator tokenizes with it and every oracle
+    with its DuckDB mirror WS_TOKS_SQL, but for four older oracle
+    constants that spell it out; test_tokenizer_lives_in_one_place
+    names them and rejects any other inline copy. Two builders take
+    the token array: _ngram (the n-gram at one start position;
+    _shingle_col maps it over every start) and token_windows (every
+    n-token window of a doc, total on docs shorter than n)."""
     return F.filter(F.split(col, r"\s+"), lambda x: x != "")
-
-
-def _shingle_col(toks):
-    """The SHINGLE-token windows of the `toks` array column, each
-    joined by one space (docs shorter than SHINGLE must be filtered
-    out first: sequence(0, size - SHINGLE) would run backwards)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.size(toks) - SHINGLE),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(toks, i + 1),
-            F.element_at(toks, i + 2),
-            F.element_at(toks, i + 3),
-        ),
-    )
 
 
 # the DuckDB mirror of ws_tokens (RE2 \s+ split + empty filter)
@@ -91,8 +85,52 @@ WS_TOKS_SQL = r"""list_filter(regexp_split_to_array(text, '\s+'),
                      x -> x <> '')"""
 
 
+def _ngram(toks, i, n: int):
+    """The n tokens of the `toks` array column from 0-based position
+    `i`, joined by one space."""
+    return F.concat_ws(
+        " ", *[F.element_at(toks, i + k) for k in range(1, n + 1)])
+
+
+def _shingle_col(toks, n: int = SHINGLE):
+    """The n-token shingles of the `toks` array column, one per start
+    position (docs shorter than n must be filtered out first:
+    sequence(0, size - n) would run backwards)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.size(toks) - n),
+        lambda i: _ngram(toks, i, n))
+
+
+def token_windows(toks, n: int, step: int = 1,
+                  fn=lambda win, start: F.md5(win)):
+    """fn(window, start) for each n-token window of the `toks` array
+    column, one starting every `step` tokens (1: sliding windows, n:
+    disjoint segments); `win` is the window's tokens joined by one
+    space, `start` its 0-based start. A doc shorter than n gets an
+    empty array.
+
+    The array is TOTAL on purpose, even where the caller has already
+    filtered on size(toks) >= n: InferFiltersFromGenerate derives
+    `size(ws) > 0 AND isnotnull(ws)` from an explode whose input is an
+    attribute and pushes it below that filter, into the scan, where it
+    evaluates this expression on rows the filter would have dropped.
+    Unguarded, sequence(0, size - n) then descends and slice raises
+    INVALID_PARAMETER_VALUE.START. The lazy CASE on the start sequence
+    makes a short doc's windows empty instead. Callers still build the
+    array inline at the explode site (the cost note in [_shingles])."""
+    size = F.size(toks)
+    starts = F.when(
+        size >= n, F.sequence(F.lit(0), size - n, F.lit(step)),
+    ).otherwise(F.array().cast("array<int>"))
+    return F.transform(
+        starts,
+        lambda s: fn(F.concat_ws(" ", F.slice(toks, s + 1, n)), s))
+
+
 # positional tokenization, oracle-side only (the engine paths build
 # token arrays map-side and never need a positional explode)
+# tokenizer spelled out, not {WS_TOKS_SQL}: _ORACLE_TOKENIZER_COPIES
+# in tests/test_operators_smoke.py says why
 _TOKENS_SQL = r"""
 SELECT doc_id, pos, toks[pos + 1] AS token
 FROM (SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'),
@@ -100,6 +138,26 @@ FROM (SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'),
       FROM documents),
      LATERAL (SELECT unnest(range(len(toks))) AS pos) t
 """
+
+
+def _doc_shingles(docs: DataFrame, *, exploded: bool) -> DataFrame:
+    """Each doc's distinct SHINGLE-token shingles: (doc_id, shs
+    array<string>), or (doc_id, shingle) rows when `exploded`, with
+    the explode's generator inline. Docs shorter than SHINGLE have
+    none.
+
+    The token array is a COLUMN of the select before the shingles are
+    built: inlining the filter(split(...)) expression into the
+    transform lambda makes Catalyst re-evaluate it per element (no CSE
+    across lambda captures): measured 5x slowdown. CollapseProject
+    keeps the tiers separate because the aliases are non-cheap and
+    multiply referenced."""
+    toked = docs.select("doc_id", ws_tokens().alias("toks")).filter(
+        F.size("toks") >= SHINGLE)
+    shs = F.array_distinct(_shingle_col("toks"))
+    return toked.select(
+        "doc_id",
+        F.explode(shs).alias("shingle") if exploded else shs.alias("shs"))
 
 
 def _shingle_arrays(spark, sf) -> DataFrame:
@@ -114,17 +172,8 @@ def _shingle_arrays(spark, sf) -> DataFrame:
 
     The documents scan is `spread` (guide §2.5): single-row-group
     input otherwise serializes the tokenize+md5 work onto one task."""
-    d = spread(T(spark, sf, "documents"), "doc_id")
-    # materialize the token array as a COLUMN before the next select —
-    # inlining the filter(split(...)) expression into the transform
-    # lambda makes Catalyst re-evaluate it per element (no CSE across
-    # lambda captures): measured 5x slowdown. CollapseProject keeps
-    # the tiers separate because the aliases are non-cheap and
-    # multiply referenced.
-    toked = d.select("doc_id", ws_tokens().alias("toks")).filter(
-        F.size("toks") >= SHINGLE)
-    return toked.select(
-        "doc_id", F.array_distinct(_shingle_col("toks")).alias("shs"))
+    return _doc_shingles(
+        spread(T(spark, sf, "documents"), "doc_id"), exploded=False)
 
 
 def _shingles(spark, sf) -> DataFrame:
@@ -144,13 +193,8 @@ def _shingles(spark, sf) -> DataFrame:
     exists. Consumers that explode a PERSISTED array relation
     (dd_ngram_jaccard) are safe — the inferred filter then runs over
     cached arrays."""
-    d = spread(T(spark, sf, "documents"), "doc_id")
-    toked = d.select("doc_id", ws_tokens().alias("toks")).filter(
-        F.size("toks") >= SHINGLE)
-    return toked.select(
-        "doc_id",
-        F.explode(F.array_distinct(_shingle_col("toks")))
-        .alias("shingle"))
+    return _doc_shingles(
+        spread(T(spark, sf, "documents"), "doc_id"), exploded=True)
 
 
 _SHINGLES_SQL = f"""
@@ -657,10 +701,7 @@ def dd_simhash(spark, sf):
     d = spread(T(spark, sf, "documents"), "doc_id")
     toks = d.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split("text", r"\s+"), lambda x: x != ""))
-        ).alias("token"),
+        F.explode(F.array_distinct(ws_tokens())).alias("token"),
     ).select("doc_id", F.md5("token").alias("h"))
     # per-bit votes in ONE map-side-combinable agg: 16 sum columns over
     # the hashed token (md5 computed once, not once per bit), signature
@@ -754,7 +795,7 @@ def tx_quality(spark, sf):
     the tokenize-heavy projection otherwise runs on one task over the
     single-row-group input."""
     d = spread(T(spark, sf, "documents"), "doc_id")
-    toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
+    toks = ws_tokens()
     n_tok = F.size(toks)
     mean_len = F.length(F.regexp_replace("text", r"\s+", "")) / n_tok
     stop_ratio = F.size(
@@ -768,7 +809,7 @@ def tx_quality(spark, sf):
         n_tok.alias("n_tokens"), score.alias("quality"))
 
 
-TX_QUALITY_SQL = r"""
+TX_QUALITY_SQL = rf"""
 SELECT doc_id, n_chars, n_tokens,
        CAST(round(0.5 * least(mean_len / 8.0, 1.0)
                 + 0.5 * (1.0 - stop_ratio), 6) AS DOUBLE) AS quality
@@ -779,9 +820,7 @@ FROM (
            / CAST(len(toks) AS DOUBLE) AS mean_len,
          len(list_filter(toks, x -> x IN ('a', 'the', 'value', 'key')))
            / CAST(len(toks) AS DOUBLE) AS stop_ratio
-  FROM (SELECT doc_id, n_chars, text,
-               list_filter(regexp_split_to_array(text, '\s+'),
-                           x -> x <> '') AS toks
+  FROM (SELECT doc_id, n_chars, text, {WS_TOKS_SQL} AS toks
         FROM documents))
 """
 
@@ -789,7 +828,7 @@ FROM (
 def tx_tokens(spark, sf):
     """Token counting: total + distinct per doc."""
     d = spread(T(spark, sf, "documents"), "doc_id")
-    toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
+    toks = ws_tokens()
     return d.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
@@ -797,10 +836,9 @@ def tx_tokens(spark, sf):
     )
 
 
-TX_TOKENS_SQL = r"""
+TX_TOKENS_SQL = rf"""
 SELECT doc_id, len(toks) AS n_tokens, len(list_distinct(toks)) AS n_unique
-FROM (SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'),
-                                 x -> x <> '') AS toks
+FROM (SELECT doc_id, {WS_TOKS_SQL} AS toks
       FROM documents)
 """
 
@@ -929,10 +967,7 @@ def tx_vocab_topk(spark, sf):
         T(spark, sf, "documents")
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.filter(F.split("text", r"\s+"), lambda x: x != ""))
-            ).alias("token"),
+            F.explode(F.array_distinct(ws_tokens())).alias("token"),
         )
     )
     return (
@@ -943,10 +978,9 @@ def tx_vocab_topk(spark, sf):
     )
 
 
-TX_VOCAB_SQL = r"""
+TX_VOCAB_SQL = rf"""
 SELECT token, count(*) AS doc_freq FROM (
-  SELECT DISTINCT doc_id, unnest(list_filter(
-    regexp_split_to_array(text, '\s+'), x -> x <> '')) AS token
+  SELECT DISTINCT doc_id, unnest({WS_TOKS_SQL}) AS token
   FROM documents)
 GROUP BY token ORDER BY doc_freq DESC, token ASC LIMIT 20
 """
@@ -987,18 +1021,10 @@ def tx_gopher_quality(spark, sf):
     100 TB (the standard pre-training corpus gate next to tx_quality's
     weighted score)."""
     d = spread(T(spark, sf, "documents"), "doc_id")
-    toked = d.select(
-        "doc_id",
-        F.filter(F.split("text", r"\s+"), lambda x: x != "").alias("toks"),
-    )
+    toked = d.select("doc_id", ws_tokens().alias("toks"))
     toks = F.col("toks")
     n = F.size(toks)
-    tri = F.transform(
-        F.sequence(F.lit(0), n - 3),
-        lambda i: F.concat_ws(
-            " ", F.element_at(toks, i + 1), F.element_at(toks, i + 2),
-            F.element_at(toks, i + 3)),
-    )
+    tri = _shingle_col(toks, 3)
     dup_tri = F.when(
         n >= 3,
         F.round(1.0 - F.size(F.array_distinct(tri))
@@ -1021,7 +1047,7 @@ def tx_gopher_quality(spark, sf):
     )
 
 
-TX_GOPHER_SQL = r"""
+TX_GOPHER_SQL = rf"""
 SELECT doc_id,
        CAST(round(CASE WHEN n >= 3
          THEN 1.0 - len(list_distinct(tri)) / CAST(len(tri) AS DOUBLE)
@@ -1045,8 +1071,7 @@ FROM (
          list_sum(list_transform(toks, x -> length(x))) AS charsum,
          len(list_filter(toks,
              x -> NOT regexp_matches(x, '^[a-z0-9]+$'))) AS nsym
-  FROM (SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'),
-                                   x -> x <> '') AS toks
+  FROM (SELECT doc_id, {WS_TOKS_SQL} AS toks
         FROM documents))
 WHERE n > 0
 """
@@ -1066,21 +1091,13 @@ def tx_trigram_ppl(spark, sf):
     # (_shingles is not reusable here: it is DISTINCT per doc, and LM
     # training/scoring needs occurrence counts)
     d = spread(T(spark, sf, "documents"), "doc_id")
-    toked = d.select(
-        "doc_id",
-        F.filter(F.split("text", r"\s+"), lambda x: x != "").alias("toks"),
-    ).filter(F.size("toks") >= 3)
+    toked = d.select("doc_id", ws_tokens().alias("toks")).filter(
+        F.size("toks") >= 3)
     toks = F.col("toks")
     tri_struct = F.transform(
         F.sequence(F.lit(0), F.size(toks) - 3),
-        lambda i: F.struct(
-            F.concat_ws(" ", F.element_at(toks, i + 1),
-                        F.element_at(toks, i + 2),
-                        F.element_at(toks, i + 3)).alias("tri"),
-            F.concat_ws(" ", F.element_at(toks, i + 1),
-                        F.element_at(toks, i + 2)).alias("pre"),
-        ),
-    )
+        lambda i: F.struct(_ngram(toks, i, 3).alias("tri"),
+                           _ngram(toks, i, 2).alias("pre")))
     occ = toked.select(
         "doc_id", F.explode(tri_struct).alias("t")
     ).select("doc_id", "t.tri", "t.pre")
@@ -1098,6 +1115,8 @@ def tx_trigram_ppl(spark, sf):
     )
 
 
+# tokenizer spelled out, not {WS_TOKS_SQL}: _ORACLE_TOKENIZER_COPIES
+# in tests/test_operators_smoke.py says why
 TX_TRIGRAM_PPL_SQL = r"""
 WITH toked AS (
   SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'),
@@ -1239,45 +1258,19 @@ def tx_decontam(spark, sf):
     leaves the scan stage. Hashes (md5) stand in for the 64-bit
     fingerprints a production run would broadcast instead of strings."""
     d = spread(T(spark, sf, "documents"), "doc_id")
-    toked = d.select(
-        "doc_id",
-        F.filter(F.split("text", r"\s+"), lambda x: x != "").alias("toks"),
-    ).filter(F.size("toks") >= DECONTAM_N)
-
-    # The CASE guard looks redundant next to the filter above, but it
-    # is load-bearing: InferFiltersFromGenerate derives a
-    # size(gs) > 0 predicate from an explode over `gs` and pushes it
-    # into the scan's data filters, where it evaluates on rows the
-    # size filter would have dropped — and sequence(0, size-N) on a
-    # short doc descends to -1, making slice throw on start=0. CASE
-    # WHEN is lazy, so the guarded expression is total.
-    #
-    # r8: the generator is built INLINE at each explode site (not
-    # `select(gs).select(explode("gs"))`) — with a bare-attribute
-    # generator that same inferred size() predicate gets the WHOLE
-    # gram expression substituted into it with `toks` expanded, so
-    # filter(split(text)) re-ran once per gram slice inside the
-    # pushed-down filter: 7.1s -> 0.6s at sf0.1 (the [_shingles]
-    # trap, one operator over). With the expensive generator inline
-    # the infer rule declines.
-    def gs_expr():
-        return F.when(
-            F.size("toks") >= DECONTAM_N,
-            F.transform(
-                F.sequence(F.lit(0), F.size("toks") - DECONTAM_N),
-                lambda i: F.md5(F.array_join(
-                    F.slice("toks", i + 1, DECONTAM_N), " ")),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
+    toked = d.select("doc_id", ws_tokens().alias("toks")).filter(
+        F.size("toks") >= DECONTAM_N)
+    # the window array is built inline at each explode site (r8: the
+    # [_shingles] cost trap, 7.1s -> 0.6s here at sf0.1)
     bench = (
         toked.filter(F.col("doc_id") % DECONTAM_MOD == 0)
-        .select(F.explode(gs_expr()).alias("g")).distinct()
+        .select(F.explode(token_windows("toks", DECONTAM_N)).alias("g"))
+        .distinct()
     )
     hits = (
         toked.filter(F.col("doc_id") % DECONTAM_MOD != 0)
         .select("doc_id", F.size("toks").alias("n_toks"),
-                F.explode(gs_expr()).alias("g"))
+                F.explode(token_windows("toks", DECONTAM_N)).alias("g"))
         .join(F.broadcast(bench), "g")
     )
     n_ngrams = (F.max("n_toks") - DECONTAM_N + 1).cast("long")
@@ -1294,8 +1287,7 @@ def tx_decontam(spark, sf):
 
 TX_DECONTAM_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'),
-                             x -> x <> '') AS t
+  SELECT doc_id, {WS_TOKS_SQL} AS t
   FROM documents),
 ng AS (
   SELECT doc_id, len(t) AS n_toks,
@@ -1335,26 +1327,12 @@ def dd_common_segments(spark, sf):
     hash, and the ≥2-docs filter runs post-aggregate (HAVING) so only
     true repeats survive. No join, no window sort, no squaring."""
     d = T(spark, sf, "documents")
-    toked = d.select(
-        "doc_id",
-        F.filter(F.split("text", r"\s+"), lambda x: x != "").alias("toks"),
-    ).filter(F.size("toks") >= SEGMENT_N)
-    # same total-expression guard as tx_decontam: the explode-inferred
-    # filter evaluates this on pre-filter rows, where the descending
-    # sequence would slice from a negative start
+    toked = d.select("doc_id", ws_tokens().alias("toks")).filter(
+        F.size("toks") >= SEGMENT_N)
     segs = toked.select(
         "doc_id",
-        F.explode(F.when(
-            F.size("toks") >= SEGMENT_N,
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    (F.floor(F.size("toks") / SEGMENT_N) - 1).cast("int")),
-                lambda g: F.md5(F.array_join(
-                    F.slice("toks", g * SEGMENT_N + 1, SEGMENT_N), " ")),
-            ),
-        ).otherwise(F.array().cast("array<string>"))).alias("seg_hash"),
-    )
+        F.explode(token_windows("toks", SEGMENT_N, SEGMENT_N))
+        .alias("seg_hash"))
     return (
         segs.groupBy("seg_hash")
         .agg(F.countDistinct("doc_id").alias("n_docs"),
@@ -1365,8 +1343,7 @@ def dd_common_segments(spark, sf):
 
 DD_SEGMENTS_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'),
-                             x -> x <> '') AS t
+  SELECT doc_id, {WS_TOKS_SQL} AS t
   FROM documents),
 segs AS (
   SELECT doc_id, md5(array_to_string(
@@ -1487,13 +1464,7 @@ def incremental_verdicts(new_docs: DataFrame,
         .select("doc_id").distinct()
         .withColumn("exact", F.lit("true"))
     )
-    toked = new_docs.select("doc_id", ws_tokens().alias("toks")).filter(
-        F.size("toks") >= SHINGLE)
-    new_sh = toked.select(
-        "doc_id",
-        F.explode(F.array_distinct(_shingle_col("toks")))
-        .alias("shingle"))
-    new_s = _band_keys(new_sh)
+    new_s = _band_keys(_doc_shingles(new_docs, exploded=True))
     near = (
         hist_sigs.select("key").join(F.broadcast(new_s), "key")
         .select("doc_id").distinct()
@@ -1678,7 +1649,7 @@ def _pack_offsets(spark, sf, *, with_toks: bool):
     payload materializer; the offsets query drops it before the
     shuffle so only 16 bytes/doc move."""
     d = T(spark, sf, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
+    toks = ws_tokens()
     cols = [F.col("doc_id"), F.size(toks).alias("n_tokens"),
             (F.col("doc_id") / PACK_BUCKET).cast("long").alias("bucket")]
     if with_toks:
@@ -1756,6 +1727,8 @@ def tx_pack_payloads(spark, sf):
     )
 
 
+# tokenizer spelled out, not {WS_TOKS_SQL}: _ORACLE_TOKENIZER_COPIES
+# in tests/test_operators_smoke.py says why
 TX_PACK_PAYLOADS_SQL = rf"""
 WITH t AS (
   SELECT doc_id,
@@ -1784,6 +1757,8 @@ GROUP BY seq
 """
 
 
+# tokenizer spelled out, not {WS_TOKS_SQL}: _ORACLE_TOKENIZER_COPIES
+# in tests/test_operators_smoke.py says why
 TX_PACK_SQL = rf"""
 WITH t AS (
   SELECT doc_id,
@@ -1814,13 +1789,11 @@ def tx_chunk_windows(spark, sf):
     CHUNK_STRIDE — zero-shuffle map side: split → guarded sequence →
     posexplode → slice/concat_ws, all JVM HOFs.
 
-    The chunk-count sequence is wrapped in a lazy CASE (PLANS.md
-    round-3 pitfall: InferFiltersFromGenerate can push a
-    generate-source expression into scan DataFilters where it runs on
-    PRE-filter rows, so any sequence() bound must be total)."""
+    Its last chunk is ragged, so it is not a [token_windows] shape,
+    but its chunk-count sequence is wrapped in a lazy CASE for the
+    same reason: the sequence must be total (see there)."""
     d = T(spark, sf, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda x: x != "")
-    toked = d.select("doc_id", toks.alias("toks"))
+    toked = d.select("doc_id", ws_tokens().alias("toks"))
     chunk_ids = F.expr(
         f"CASE WHEN size(toks) >= 1 THEN "
         f"sequence(0, CAST((size(toks) - 1) / {CHUNK_STRIDE} AS INT)) "
@@ -1843,9 +1816,7 @@ def tx_chunk_windows(spark, sf):
 
 TX_CHUNK_SQL = rf"""
 WITH toked AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(text, '\s+'),
-                     x -> x <> '') AS toks
+  SELECT doc_id, {WS_TOKS_SQL} AS toks
   FROM documents)
 SELECT doc_id, i.i AS chunk_id,
        CAST(i.i * {CHUNK_STRIDE} AS INT) AS chunk_start,

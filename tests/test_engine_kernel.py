@@ -112,6 +112,7 @@ def test_never_on_lower_patterns_are_dead():
         r"\d+[KMB]": "5K",
         r"[A-Z]{2}\d{10}": "US1234567890",
         r"[A-Z]{12}": "ABCDEFGHIJKL",
+        lexicon.PATTERNS["scientific_data"][0]: "Ã‚Â±",
         lexicon.PATTERNS["scientific_data"][2]: "1.2 Ã‚Â± 3.4",
     }
     assert set(probes) == set(_NEVER_ON_LOWER)

@@ -572,3 +572,125 @@ def test_spread_fails_open_on_unreadable_footers(spark, tmp_path,
     (rec,) = [r for r in caplog.records if r.name == logger]
     assert rec.levelno == logging.WARNING
     assert bad_file in rec.getMessage()
+
+
+# Oracle constants that still spell the DuckDB tokenizer out. Each is
+# byte for byte the SQL its queries were last verified with. Swapping
+# in WS_TOKS_SQL changes only whitespace, but it moves the
+# QUERY_FPRINTS.json entry of every query whose oracle embeds the
+# constant (13 for _TOKENS_SQL). Those queries would then sort into the
+# unverified prefix that test_rotation_prioritizes_changed_queries
+# bounds at 60 names, and that prefix holds 60 already.
+_ORACLE_TOKENIZER_COPIES = {
+    "_TOKENS_SQL", "TX_TRIGRAM_PPL_SQL", "TX_PACK_PAYLOADS_SQL",
+    "TX_PACK_SQL",
+}
+
+
+def test_tokenizer_lives_in_one_place():
+    """Every text operator tokenizes with textops.ws_tokens and every
+    oracle with textops.WS_TOKS_SQL: no module under operators/ spells
+    the whitespace split inline (a `split(` on \\s+, or DuckDB's
+    regexp_split_to_array over text) outside those two definitions
+    and the _ORACLE_TOKENIZER_COPIES of textops."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import pdf_extraction_api_spark.operators as ops
+
+    inline = re.compile(
+        r"split\([^()]*\\{1,2}s\+|regexp_split_to_array\(\s*text")
+    allowed = {"WS_TOKS_SQL"} | _ORACLE_TOKENIZER_COPIES
+    offenders = []
+    for path in sorted(Path(ops.__file__).parent.glob("*.py")):
+        src = path.read_text()
+        lines = src.splitlines()
+        for node in ast.parse(src).body if path.name == "textops.py" else ():
+            if (isinstance(node, ast.FunctionDef)
+                    and node.name == "ws_tokens"
+                    or isinstance(node, ast.Assign)
+                    and any(getattr(t, "id", None) in allowed
+                            for t in node.targets)):
+                lines[node.lineno - 1:node.end_lineno] = [""] * (
+                    node.end_lineno - node.lineno + 1)
+        for i, line in enumerate(lines):
+            if inline.search(line):
+                offenders.append(f"{path.name}:{i + 1}: {line.strip()}")
+    assert offenders == [], offenders
+
+
+def test_token_windows_match_python_reference(spark):
+    """textops.token_windows against a Python reference: each n-token
+    window starting every `step` tokens, at step 1 (sliding) and step
+    n (disjoint), on docs of 0, n-1, n, n+1 and 3n+2 tokens; a doc
+    shorter than n has none. The default maps a window to the md5 of
+    its space-joined tokens."""
+    import hashlib
+
+    from pdf_extraction_api_spark.operators.textops import (
+        token_windows,
+        ws_tokens,
+    )
+
+    n = 4
+    lens = (0, n - 1, n, n + 1, 3 * n + 2)
+    docs = spark.createDataFrame(
+        [(k, "  ".join(f"t{j}" for j in range(k)) + " ") for k in lens],
+        "k INT, text STRING",
+    ).select("k", ws_tokens().alias("toks"))
+    for step in (1, n):
+        got = {
+            r.k: (r.starts, r.wins, r.hashes)
+            for r in docs.select(
+                "k",
+                token_windows("toks", n, step, lambda w, s: s)
+                .alias("starts"),
+                token_windows("toks", n, step, lambda w, s: w)
+                .alias("wins"),
+                token_windows("toks", n, step).alias("hashes"),
+            ).collect()
+        }
+        for k in lens:
+            toks = [f"t{j}" for j in range(k)]
+            starts = list(range(0, k - n + 1, step))
+            wins = [" ".join(toks[s:s + n]) for s in starts]
+            hashes = [hashlib.md5(w.encode()).hexdigest() for w in wins]
+            assert got[k] == (starts, wins, hashes), (k, step, got[k])
+
+
+def test_token_windows_survive_alias_then_explode(spark, tmp_path):
+    """Exploding an aliased window array lets InferFiltersFromGenerate
+    push `size(ws) > 0` below the caller's size filter, into the scan,
+    where it evaluates the array on a doc shorter than n.
+    token_windows is total there: the short doc gives no rows. The
+    unguarded sliding-window expression fails in slice."""
+    from pyspark.sql import functions as F
+
+    from pdf_extraction_api_spark.operators.curation import SUBSTR_W
+    from pdf_extraction_api_spark.operators.textops import (
+        token_windows,
+        ws_tokens,
+    )
+
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(0, "a b c"), (1, " ".join("abcdefghijkl"))],
+        "doc_id LONG, text STRING",
+    ).write.parquet(path)
+    toked = (spark.read.parquet(path)
+             .select("doc_id", ws_tokens().alias("toks"))
+             .filter(F.size("toks") >= SUBSTR_W))
+
+    def alias_then_explode(wins):
+        return (toked.select("doc_id", wins.alias("ws"))
+                .select("doc_id", F.explode("ws").alias("h")))
+
+    rows = alias_then_explode(token_windows("toks", SUBSTR_W)).collect()
+    assert sorted(r.doc_id for r in rows) == [1] * (12 - SUBSTR_W + 1)
+    unguarded = F.transform(
+        F.sequence(F.lit(0), F.size("toks") - SUBSTR_W),
+        lambda i: F.md5(F.concat_ws(
+            " ", F.slice("toks", i + 1, SUBSTR_W))))
+    with pytest.raises(Exception, match="INVALID_PARAMETER_VALUE"):
+        alias_then_explode(unguarded).collect()
